@@ -14,13 +14,12 @@ construction, so no skew; candidates are a tiny fraction of pairs.
 
 from __future__ import annotations
 
-import functools as _functools
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Mersenne prime modulus for the universal-hash permutation family
-_P = (1 << 31) - 1
+#: Mersenne prime modulus of the MinHash universal-hash permutation
+#: family (public: the DuckDB oracles mirror the signatures with it)
+MINHASH_P = (1 << 31) - 1
 
 #: DuckDB mirror of ``shingle_df``'s word-3gram distinct shingles —
 #: the ONE template every oracle formats (``{x}`` = text expression;
@@ -35,44 +34,48 @@ SHINGLES_SQL = (
 )
 
 
+def _shingles_sql(tokens: str, n: int = 3) -> str:
+    """The distinct word n-gram shingles of the token-array column
+    ``tokens`` as ONE Spark SQL expression — the single Spark spelling
+    of the shingle semantics (``SHINGLES_SQL`` is its DuckDB mirror).
+
+    Docs below ``n`` tokens produce NO shingles (empty set — same as
+    the DuckDB mirror's empty range() comprehension). Without the
+    guard, sequence(0, negative) DESCENDS and element_at hits index
+    0/out-of-bounds — under Spark 4 ANSI that throws, and one short
+    text killed the whole ingest epoch through
+    LshDedupIndex.dedup_batch (round-5 review finding)."""
+    gram = ", ".join(f"element_at({tokens}, i + {k + 1})" for k in range(n))
+    return (
+        f"CASE WHEN size({tokens}) >= {n} THEN array_distinct(transform("
+        f"sequence(0, size({tokens}) - {n}), i -> concat_ws(' ', {gram}))) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+
+
+def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, _tk): the token array materialized as its own column —
+    referencing ``split(text)`` directly inside the shingle lambda
+    re-splits the whole string PER ELEMENT (O(words²) per doc; fixing
+    it measured 3.7× on 100k docs)."""
+    return docs.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_tk"))
+
+
 def shingle_df(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
     """id → exploded distinct word n-gram shingles.
 
-    Two evaluation traps shape this:
-
-    * the token array materializes as its own column FIRST —
-      referencing ``split(text)`` directly inside the ``transform``
-      lambda re-splits the whole string PER ELEMENT (O(words²) per
-      doc; fixing it measured 3.7× on 100k docs);
-    * deliberately does NOT carry a per-doc shingle count: selecting
-      ``size(grams)`` next to ``explode(grams)`` makes Catalyst's
-      projection collapse re-evaluate the whole transform/
-      array_distinct tree once per EXPLODED row (observed 15×+
-      slowdown in ``.explain("formatted")``). Use
-      ``shingle_counts`` on the exploded frame instead.
+    Deliberately does NOT carry a per-doc shingle count: selecting
+    ``size(grams)`` next to ``explode(grams)`` makes Catalyst's
+    projection collapse re-evaluate the whole transform/array_distinct
+    tree once per EXPLODED row (observed 15×+ slowdown in
+    ``.explain("formatted")``). Use ``shingle_counts`` on the exploded
+    frame instead.
     """
-    staged = docs.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_tk"))
-    toks = F.col("_tk")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - F.lit(n)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + F.lit(k + 1)) for k in range(n)]
-            ),
-        )
+    return _tokens(docs, id_col, text_col).select(
+        F.col(id_col), F.explode(F.expr(_shingles_sql("_tk", n))).alias("shingle")
     )
-    # docs below n tokens produce NO shingles (empty set — same as
-    # the DuckDB mirror's empty range() comprehension). Without the
-    # guard, sequence(0, negative) DESCENDS and element_at hits index
-    # 0/out-of-bounds — under Spark 4 ANSI that throws, and one short
-    # text killed the whole ingest epoch through
-    # LshDedupIndex.dedup_batch (round-5 review finding).
-    grams = F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-    return staged.select(F.col(id_col), F.explode(grams).alias("shingle"))
 
 
 def shingle_counts(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -188,7 +191,50 @@ def minhash_coeffs(n_hashes: int = 64, seed: int = 42) -> list[tuple[int, int]]:
     import random
 
     rnd = random.Random(seed)
-    return [(rnd.randrange(1, _P), rnd.randrange(0, _P)) for _ in range(n_hashes)]
+    return [
+        (rnd.randrange(1, MINHASH_P), rnd.randrange(0, MINHASH_P))
+        for _ in range(n_hashes)
+    ]
+
+
+def _minhash_sql(
+    shingles: str, n_hashes: int = 64, seed: int = 42, portable: bool = False
+) -> str:
+    """The MinHash signature (``array<bigint>``, ``n_hashes`` slots) of
+    the shingle-array column ``shingles`` as ONE Spark SQL expression:
+    slot i = min over shingles x of h_i(x) = (a_i·h(x) + b_i) mod p.
+    Each shingle is hashed once, then folded into the running minima
+    — no explode, no shuffle (one SQL string: Column-operator chains
+    cost ~0.3 s of py4j round-trips per query construction).
+
+    ``portable=False`` (production) hashes shingles with xxhash64 —
+    the fast JVM path. ``portable=True`` uses the 60-bit md5 hash
+    (``h60_md5_expr``) that DuckDB reproduces bit-for-bit, so an
+    oracle can mirror the SIGNATURES themselves (needed when the
+    verdict is signature-estimated Jaccard, not exact-Jaccard — see
+    sinks/dedup_index.py). An empty array gives p in every slot."""
+    h = (
+        "CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"
+        if portable
+        else "xxhash64(s)"
+    )
+    coeffs = ", ".join(
+        f"named_struct('a', {a}, 'b', {b})" for a, b in minhash_coeffs(n_hashes, seed)
+    )
+    return (
+        f"aggregate(transform({shingles}, s -> pmod({h}, {MINHASH_P})), "
+        f"array_repeat(CAST({MINHASH_P} AS BIGINT), {n_hashes}), "
+        f"(m, h) -> zip_with(m, array({coeffs}), "
+        f"(x, c) -> least(x, pmod(c.a * h + c.b, {MINHASH_P}))))"
+    )
+
+
+def _lsh_bands_sql(sig: str, n_bands: int, rows: int) -> str:
+    """The ``n_bands`` LSH band hashes of the signature column ``sig``
+    as ONE Spark SQL expression: band b (its array position) is
+    xxhash64 over signature slots [b·rows, (b+1)·rows)."""
+    slots = ", ".join(f"element_at({sig}, b * {rows} + {i + 1})" for i in range(rows))
+    return f"transform(sequence(0, {n_bands - 1}), b -> xxhash64({slots}))"
 
 
 def minhash_signatures(
@@ -198,52 +244,43 @@ def minhash_signatures(
     seed: int = 42,
     portable: bool = False,
 ) -> DataFrame:
-    """MinHash signature per doc: h_i(x) = (a_i·x + b_i) mod p over
-    hashed shingles, min-aggregated — one shuffle, map-side
-    combinable (min is algebraic).
-
-    ``portable=False`` (production) hashes shingles with xxhash64 —
-    the fast JVM path. ``portable=True`` uses the 60-bit md5 hash
-    (``h60_md5_expr``) that DuckDB reproduces bit-for-bit, so an
-    oracle can mirror the SIGNATURES themselves (needed when the
-    verdict is signature-estimated Jaccard, not exact-Jaccard —
-    see sinks/dedup_index.py)."""
-    coeffs = minhash_coeffs(n_hashes, seed)
-    # round 7: one SQL string per aggregate (64 Column-operator chains
-    # cost ~0.3 s of py4j round-trips per query construction). The
-    # shared inner hash is spelled once per aggregate; at runtime the
-    # subexpression-elimination pass hashes each shingle once.
-    base_sql = (
-        "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)"
-        if portable
-        else "xxhash64(shingle)"
-    )
-    h_sql = f"pmod({base_sql}, {_P})"
-    aggs = [
-        F.expr(f"min(pmod({a} * {h_sql} + {b}, {_P}))").alias(f"mh_{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
+    """Wide MinHash signature (``mh_0`` … ``mh_{n-1}``) per doc of an
+    exploded shingle frame: one aggregation regathers each doc's
+    shingles, then ``_minhash_sql`` signs them (min is order- and
+    duplicate-insensitive, so the values equal a per-slot ``min``
+    aggregate's). Docs given text, not shingles, should use
+    ``minhash_bands`` — it signs each row in place, with no shuffle."""
+    sig = shingles.groupBy(id_col).agg(F.collect_list("shingle").alias("_sh"))
+    return sig.select(
+        F.col(id_col), F.expr(_minhash_sql("_sh", n_hashes, seed, portable)).alias("_sig")
+    ).selectExpr(id_col, *[f"_sig[{i}] AS mh_{i}" for i in range(n_hashes)])
 
 
-@_functools.lru_cache(maxsize=8)
-def _band_explode_col(n_bands: int, rows: int) -> Column:
-    """The banding explode Column over the fixed ``mh_i`` signature
-    names — input-independent, built once per (n_bands, rows) per
-    process (round 7: ~100 py4j calls per query construction
-    otherwise; see the expr-string note in with_simhash60_md5)."""
-    return F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    F.xxhash64(
-                        *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                    ).alias("band_sig"),
-                )
-                for b in range(n_bands)
-            ]
+def minhash_bands(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    n_hashes: int = 64,
+    n_bands: int = 16,
+    seed: int = 42,
+    portable: bool = False,
+) -> DataFrame:
+    """(id, sig array<bigint>, bands array<bigint>): one row per doc
+    with at least one shingle — two projections, no explode, no
+    shuffle. Docs below ``n`` tokens cannot near-dup via shingles and
+    get no row. ``bands[b]`` hashes signature slots
+    [b·rows, (b+1)·rows) with rows = n_hashes / n_bands."""
+    return (
+        _tokens(docs, id_col, text_col)
+        .filter(F.size("_tk") >= n)
+        .select(
+            F.col(id_col),
+            F.expr(_minhash_sql(_shingles_sql("_tk", n), n_hashes, seed, portable)).alias(
+                "sig"
+            ),
         )
+        .withColumn("bands", F.expr(_lsh_bands_sql("sig", n_bands, n_hashes // n_bands)))
     )
 
 
@@ -263,13 +300,9 @@ def minhash_lsh_pairs(
     Returns distinct (doc_a < doc_b) candidates — callers verify
     with exact Jaccard (see queries.q_minhash_lsh_neardup).
     """
-    rows = n_hashes // n_bands
-    sig = minhash_signatures(
-        shingle_df(docs, id_col, text_col, n), id_col, n_hashes, seed
+    bands = minhash_bands(docs, id_col, text_col, n, n_hashes, n_bands, seed).select(
+        F.col(id_col), F.posexplode("bands").alias("band_idx", "band_sig")
     )
-    bands = sig.select(
-        F.col(id_col), _band_explode_col(n_bands, rows).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_sig")
     a = bands.alias("a")
     b = bands.alias("b")
     return (

@@ -91,15 +91,15 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_incremental_dedup() -> str:
-    from kahi_spark.operators.dedup import _P, SHINGLES_SQL, minhash_coeffs
+    from kahi_spark.operators.dedup import MINHASH_P, SHINGLES_SQL, minhash_coeffs
 
     coeffs = minhash_coeffs(N_HASHES, SEED)
     # word-3gram distinct shingles (shared template beside shingle_df)
     shingles = SHINGLES_SQL.format(x="text")
     # portable 60-bit md5 shingle hashes, mod p
-    hs = f"list_transform({shingles}, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % {_P})"
+    hs = f"list_transform({shingles}, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % {MINHASH_P})"
     slots = ",\n           ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_P})) AS m{i}"
+        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MINHASH_P})) AS m{i}"
         for i, (a, b) in enumerate(coeffs)
     )
     sig_list = "[" + ", ".join(f"m{i}" for i in range(N_HASHES)) + "]"

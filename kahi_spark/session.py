@@ -39,6 +39,21 @@ def _default_local_dir() -> str | None:
     return None
 
 
+#: ``spark.sql.codegen.cache.maxEntries``: how many compiled
+#: generated classes Spark keeps per JVM. The default of 100 is below
+#: this engine's working set, so the cache evicted classes the next
+#: epoch needed and recompiled them forever: an indexed-ingest round
+#: (3 epochs of 4k events) compiled 519 classes every time, the third
+#: identical replay included. Working sets, measured as the distinct
+#: classes compiled with a 4000-entry cache on local[4]: keyed ingest
+#: 59; indexed ingest 221 (165 in the warm-up epoch, 56 more in the
+#: first full round, 0 after); the 58-query registry 651, the largest
+#: set a workload repeats; the whole test suite 2625 in one pass. 4000
+#: gives the registry 6x headroom and holds the whole suite, so a
+#: long-lived driver compiles each class once.
+CODEGEN_CACHE_ENTRIES = 4000
+
+
 def get_spark(
     app_name: str = "kahi_spark",
     master: str | None = None,
@@ -74,6 +89,8 @@ def get_spark(
         .config("spark.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", mem)
+        # static conf: must be set before the JVM's first session
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # long replays accumulate RDD/broadcast/checkpoint refs whose
         # cleanup rides ContextCleaner WEAK references — the default
         # periodic System.gc() every 30 min is longer than an entire

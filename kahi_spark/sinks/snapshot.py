@@ -245,7 +245,9 @@ class SnapshotTable:
         saturated rewriting a ~200M-row base every ~8 epochs (walls
         45-182 s, 75% of the run); minors keep the delta set small
         for a fraction of the cost so majors can be spaced by
-        ``compact_ratio`` honestly."""
+        ``compact_ratio`` honestly. With ``compact_ratio`` set and no
+        base yet, the fold this tier would trigger runs as the
+        bootstrap major instead."""
         assert mode in ("cow", "mor")
         self.spark = spark
         self.path = path
@@ -823,7 +825,11 @@ class SnapshotTable:
                 and self.compact_minor_every
                 and n_deltas >= self.compact_minor_every
             ):
-                due, minor = True, True
+                # with no base yet the due fold IS the bootstrap major:
+                # a minor would keep the delta count below
+                # compact_every, so no base (and no ratio trigger)
+                # would ever form
+                due, minor = True, base_rows > 0
         else:
             due = n_deltas >= self.compact_every
             # the minor tier is live in fixed-interval mode too — it

@@ -122,10 +122,35 @@ def stream_event_log(
 
     ``maxFilesPerTrigger=1`` makes each binlog batch one micro-batch
     (one epoch), which is what the exactly-once ledger keys on.
+
+    Epoch order is the file source's: oldest modification time first
+    (millisecond resolution). Files with EQUAL times — a copied or
+    restored binlog, whose copy stamps every file within the same
+    millisecond — used to follow the directory listing order, which
+    is filesystem hash order: a copied 3-file log replayed as epochs
+    0, 2, 1, and the keyless resolver and the dedup index (both
+    order-dependent by design: earlier epochs are the state later
+    ones match against) ended one surrogate apart. Streaming from a
+    glob over the directory's entries breaks those ties by file NAME
+    (the binlog's own sequence: Hadoop's globber returns matches
+    sorted), so one log always replays the same way. The glob skips
+    ``_``/``.``-prefixed names, as the directory listing did: a
+    writer's ``_temporary`` output must never become an epoch. Times
+    out of name order still win: copy binlogs with timestamps
+    preserved (``cp -p``).
+
+    Spark checks that a plain path exists when the stream is built,
+    but not a glob: a missing binlog directory is checked here through
+    the Hadoop FileSystem (remote URIs included) and raises Spark's
+    own ``PATH_NOT_FOUND`` — otherwise ``run_until_idle`` drains zero
+    epochs and ``run_continuous`` waits on it forever.
     """
-    return (
+    reader = (
         spark.readStream.schema(schema or EVENT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .option("latestFirst", "false")
-        .parquet(path)
     )
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return reader.parquet(path)  # raises PATH_NOT_FOUND
+    return reader.parquet(path.rstrip("/") + "/[!_.]*")

@@ -35,6 +35,13 @@ from kahi_spark.sinks.snapshot import SnapshotTable
 from kahi_spark.sources.events import stream_event_log
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Spark has compiled so far in this JVM (each
+    one a miss in its ``spark.sql.codegen.cache``)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 class CdcPipeline:
     def __init__(
         self,
@@ -201,6 +208,7 @@ class CdcPipeline:
 
     def _apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
+        compiles0 = codegen_compiles(self.spark)
         # one pass for both batch metrics (count + watermark); column
         # pruning makes this a ts-only scan, not a full read. (An
         # observe()-based zero-extra-scan variant was tried: the
@@ -260,17 +268,7 @@ class CdcPipeline:
                 watermark=wm,
                 pre_reduced=True,
             )
-            wall = time.time() - t0
-            self.metrics.append(
-                {
-                    "epoch_id": epoch_id,
-                    "events": n,
-                    "applied": applied,
-                    "n_deduped": 0,
-                    "wall_s": round(wall, 3),
-                    "events_per_sec": round(n / wall, 1) if wall > 0 else None,
-                }
-            )
+            self._record(epoch_id, n, applied, 0, t0, compiles0)
             return
         normalized = normalize_events(batch, use_pandas_cleaner=self.use_pandas_cleaner)
         if self.resolve_keyless:
@@ -345,9 +343,19 @@ class CdcPipeline:
             self.keyless_index.update(
                 src, epoch_id, watermark=wm if wm is not None else (lambda: None)
             )
+        self._record(epoch_id, n, applied, n_deduped, t0, compiles0)
+
+    def _record(
+        self, epoch_id: int, n: int, applied: bool, n_deduped: int, t0: float, compiles0: int
+    ) -> None:
+        """Append the epoch's entry to ``metrics`` — the in-memory
+        mirror of the durable per-commit metrics the sink manifest
+        records (events, watermark, wall; SURVEY.md §4.5).
+        ``codegen_compiles`` is the number of generated classes
+        compiled during the epoch. The counter is JVM-global, so a
+        background fold (``compact_async``) running at the same time
+        adds its compiles too; in steady state it reads 0."""
         wall = time.time() - t0
-        # in-memory mirror of the durable per-commit metrics the sink
-        # manifest records (events, watermark, wall) — SURVEY.md §4.5
         self.metrics.append(
             {
                 "epoch_id": epoch_id,
@@ -356,6 +364,7 @@ class CdcPipeline:
                 "n_deduped": n_deduped,
                 "wall_s": round(wall, 3),
                 "events_per_sec": round(n / wall, 1) if wall > 0 else None,
+                "codegen_compiles": codegen_compiles(self.spark) - compiles0,
             }
         )
 

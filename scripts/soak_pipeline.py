@@ -84,7 +84,15 @@ def main() -> None:
         "steady_events_per_sec": round(n_events / steady, 1) if steady > 0 else None,
         "final_rows": table.read().count(),
         "per_epoch": [
-            {"epoch": m["epoch_id"], "wall_s": m["wall_s"], "ev_s": m["events_per_sec"]}
+            {
+                "epoch": m["epoch_id"],
+                "wall_s": m["wall_s"],
+                "ev_s": m["events_per_sec"],
+                # generated classes compiled in the epoch: 0 in steady
+                # state (a steady nonzero count means the codegen
+                # cache thrashes — see get_spark)
+                "codegen_compiles": m["codegen_compiles"],
+            }
             for m in pipe.metrics
         ],
         "compactions": [

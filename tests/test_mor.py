@@ -577,3 +577,30 @@ def test_minor_tier_live_in_fixed_interval_mode(spark, tmp_path):
     ops = [c["op"] for c in tiered.history()]
     assert "compact-minor" in ops and "compact" not in ops
     assert sorted_state(plain) == sorted_state(tiered)
+
+
+def test_ratio_mode_minor_due_without_base_runs_bootstrap_major(spark, tmp_path):
+    """With ``compact_ratio`` set and no base yet, the minor tier
+    (``compact_minor_every`` < ``compact_every``) used to fire first
+    and keep the delta count below ``compact_every`` forever, so no
+    base ever formed (16 epochs: 5 minors, 0 majors). The first due
+    fold now runs as the bootstrap major; minors resume once a base
+    exists, and state matches a compaction-free twin."""
+    pdf = make_events(4000, n_convs=200, seed=46, delete_rate=0.1)
+    df = spark.createDataFrame(pdf)
+    plain = SnapshotTable(
+        spark, str(tmp_path / "pl"), n_buckets=4, mode="mor", compact_every=100
+    )
+    tiered = SnapshotTable(
+        spark, str(tmp_path / "ti"), n_buckets=4, mode="mor",
+        compact_ratio=0.1, compact_minor_every=4,  # compact_every stays 8
+    )
+    per = 250
+    for e in range(16):
+        batch = df.filter((F.col("seq") >= e * per) & (F.col("seq") < (e + 1) * per))
+        plain.merge(batch, epoch_id=e)
+        tiered.merge(batch, epoch_id=e)
+    folds = [c["op"] for c in tiered.history() if c["op"].startswith("compact")]
+    assert folds and folds[0] == "compact", folds
+    assert tiered._read_manifest()["snapshot"] is not None
+    assert sorted_state(plain) == sorted_state(tiered)

@@ -161,3 +161,48 @@ def test_pipeline_agg_reduce_strategy_parity(spark, tmp_path):
             ).collect()
         ]
     assert states["agg"] == states["window"] and len(states["agg"]) > 0
+
+
+def test_equal_mtime_files_replay_in_name_order(spark, tmp_path):
+    """A copied binlog has every file stamped within one millisecond;
+    the file source must then consume it in NAME order (the log's
+    sequence), not in directory-listing order — and still skip
+    ``_``-prefixed entries such as a writer's ``_temporary`` dir."""
+    import os
+
+    event_dir = str(tmp_path / "binlog")
+    os.makedirs(event_dir)
+    src = str(tmp_path / "src")
+    sizes = [40, 10, 30, 20, 50]
+    paths = write_event_batches(src, n_events=sum(sizes), n_batches=1, seed=5)
+    import pandas as pd
+
+    ev = pd.read_parquet(paths[0])
+    bounds = [sum(sizes[:i]) for i in range(len(sizes) + 1)]
+    for i in (3, 0, 4, 1, 2):  # written out of name order
+        p = os.path.join(event_dir, f"batch-{i:05d}.parquet")
+        ev.iloc[bounds[i] : bounds[i + 1]].to_parquet(p, index=False)
+    # a writer's in-flight output and markers are never epochs
+    os.makedirs(os.path.join(event_dir, "_temporary", "0", "task_0"))
+    ev.iloc[:7].to_parquet(
+        os.path.join(event_dir, "_temporary", "0", "task_0", "part-0.parquet"), index=False
+    )
+    open(os.path.join(event_dir, "_SUCCESS"), "w").close()
+    for name in os.listdir(event_dir):
+        os.utime(os.path.join(event_dir, name), (1_700_000_000, 1_700_000_000))
+    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=2)
+    metrics = CdcPipeline(spark, event_dir, table, str(tmp_path / "ck")).run_until_idle()
+    assert [m["events"] for m in metrics] == sizes
+
+
+def test_missing_binlog_dir_raises(spark, tmp_path):
+    """A mistyped or missing binlog directory fails when the stream is
+    built, as a plain path did — the name-ordered glob must not turn
+    it into a source that drains zero epochs (or waits forever)."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=2)
+    pipe = CdcPipeline(spark, str(tmp_path / "no_such_binlog"), table, str(tmp_path / "ck"))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        pipe.run_until_idle()
