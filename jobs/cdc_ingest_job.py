@@ -3,7 +3,7 @@
     spark-submit --py-files kahi_spark.zip jobs/cdc_ingest_job.py \
         --events /data/binlog --table /warehouse/transcripts \
         --checkpoint /chk/transcripts --mode mor \
-        [--n-buckets 256] [--salt-buckets 8] [--compact-every 8] \
+        [--n-buckets 256] [--reduce-strategy agg] [--compact-every 8] \
         [--max-files-per-trigger 64] [--continuous]
 
 The session comes from ``SparkSession.builder.getOrCreate()`` so
@@ -34,7 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--checkpoint", required=True, help="streaming checkpoint dir")
     p.add_argument("--mode", choices=["cow", "mor"], default="mor")
     p.add_argument("--n-buckets", type=int, default=256)
-    p.add_argument("--salt-buckets", type=int, default=0, help="hot-key salting fanout")
     p.add_argument(
         "--reduce-strategy", choices=["window", "agg", "auto"], default="window",
         help="LWW reduction: 'agg' = map-side-combining max_by — "
@@ -92,7 +91,6 @@ def main(argv: list[str] | None = None) -> int:
         table,
         args.checkpoint,
         max_files_per_trigger=args.max_files_per_trigger,
-        salt_buckets=args.salt_buckets,
         reduce_strategy=args.reduce_strategy,
     )
     if args.continuous:

@@ -2,16 +2,15 @@
 ``KahiDb.py:18-21``: unidecode + TeX-command strip + ``[$_^]``
 removal — SURVEY.md F7).
 
-Two implementations with identical semantics:
-
 * ``clean_text_expr`` — pure Catalyst column expression (JVM-side,
-  whole-stage-codegen'd). This is the hot path: at 10^10 events the
-  cleaner must not leave the JVM.
-* ``clean_text_pandas`` — Arrow-batched pandas UDF, used where the
-  caller needs Python-only extensions (``fold_text_pandas`` adds
-  NFKD accent folding, which Catalyst has no builtin for).
+  whole-stage-codegen'd). At 10^10 events the cleaner must not leave
+  the JVM, so this is the only engine cleaner.
+* ``fold_text_pandas`` — the same cleaning plus NFKD accent folding,
+  as an Arrow-batched pandas UDF: Catalyst has no builtin for the
+  folding, so it stays in Python.
+* ``clean_text_py`` — driver-side reference for the unit tests.
 
-Both strip TeX-ish commands (``\\word``), markup chars ``$ _ ^ { }``,
+All strip TeX-ish commands (``\\word``), markup chars ``$ _ ^ { }``,
 collapse whitespace runs, and trim.
 """
 
@@ -39,9 +38,9 @@ _MARKUP_RE = r"[\$_\^{}]"
 #: char terminates a TeX letter run in both formulations).
 _TEX_MARKUP_RE = _TEX_RE + "|" + _MARKUP_RE
 _WS_RE = r"\s+"
-#: the pandas mirror of _WS_RE: Java's \s is ASCII-only while
+#: the Python mirror of _WS_RE: Java's \s is ASCII-only while
 #: Python's is Unicode-aware — on NBSP/U+2000-family whitespace the
-#: two cleaners would diverge (different fingerprints/dedup keys for
+#: cleaners would diverge (different fingerprints/dedup keys for
 #: the same text, round-5 review finding), so the Python paths spell
 #: Java's class explicitly and strip only the plain space F.trim does
 _WS_RE_PY = r"[ \t\n\x0B\f\r]+"
@@ -57,14 +56,6 @@ def clean_text_expr(col: Column | str) -> Column:
     c = F.regexp_replace(c, _TEX_MARKUP_RE, "")
     c = F.regexp_replace(c, _WS_RE, " ")
     return F.trim(c)
-
-
-@pandas_udf(T.StringType())
-def clean_text_pandas(s: pd.Series) -> pd.Series:
-    """Arrow-batched cleaner; same semantics as ``clean_text_expr``."""
-    out = s.str.replace(_TEX_MARKUP_RE, "", regex=True)
-    out = out.str.replace(_WS_RE_PY, " ", regex=True)
-    return out.str.strip(" ")
 
 
 @pandas_udf(T.StringType())
@@ -118,7 +109,7 @@ def fingerprint_expr(col: Column | str) -> Column:
 # Python-side mirrors for unit tests / oracle generation ------------------
 _tex_c = re.compile(_TEX_RE)
 _markup_c = re.compile(_MARKUP_RE)
-_ws_c = re.compile(_WS_RE_PY)  # Java-\s parity, same as the pandas paths
+_ws_c = re.compile(_WS_RE_PY)  # Java-\s parity, same as fold_text_pandas
 
 
 def clean_text_py(v: str | None) -> str | None:

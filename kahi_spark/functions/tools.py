@@ -5,18 +5,13 @@ raw turn payload when the ``tool`` column is missing).
 
 Raw feeds embed tool calls in text as ``<tool:NAME>`` or
 ``[tool=NAME]``; the canonical record wants the bare name in the
-``tool`` column. Native ``regexp_extract`` (JVM) is the hot path;
-a pandas-UDF variant exists for callers already inside a Python
-stage.
+``tool`` column, with one native ``regexp_extract`` (JVM-side).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql import types as T
 
 # <tool:search>  |  [tool=search]
 _TOOL_PAT = r"(?:<tool:([A-Za-z0-9_\-]+)>|\[tool=([A-Za-z0-9_\-]+)\])"
@@ -46,10 +41,3 @@ def strip_tool_marker_expr(text_col: Column | str) -> Column:
     the canonical record carries the name in ``tool``, not inline."""
     t = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.regexp_replace(t, _TOOL_PAT, "")
-
-
-@pandas_udf(T.StringType())
-def extract_tool_pandas(text: pd.Series) -> pd.Series:
-    """Arrow-batched variant of the embedded-marker extraction."""
-    ex = text.str.extract(_TOOL_PAT, expand=True)
-    return ex[0].fillna(ex[1])

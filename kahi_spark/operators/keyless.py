@@ -25,11 +25,12 @@ each probe would meet ~4% of the table):
 
 * ``turn_idx`` (exact);
 * a GEOMETRIC feature-count bucket: integer boundaries each ≥
-  1/``mid`` × the previous (``size_bucket_expr``), probe exploded to
-  {b-1, b, b+1}. Score ≥ mid forces a feature-set size ratio ≥ mid,
-  and consecutive boundary ratios ≥ 1/mid make any such pair land
-  within one bucket — the exact version of the recall bound a fixed
-  -width length bucket only approximates (round-2 ADVICE);
+  1/``mid`` × the previous (``_lb`` in ``_with_features``), probe
+  exploded to {b-1, b, b+1}. Score ≥ mid forces a feature-set size
+  ratio ≥ mid, and consecutive boundary ratios ≥ 1/mid make any
+  such pair land within one bucket — the exact version of the recall
+  bound a fixed-width length bucket only approximates (round-2
+  ADVICE);
 * a MinHash slot over ``_ft``: one portable 60-bit md5 hash per
   feature, then ``N_SLOTS`` universal-hash permutations
   ``(a·h + b) mod p`` min-folded per slot; candidate pairs collide
@@ -85,8 +86,6 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kahi_spark.operators.dedup import h60_md5_expr
-
 #: cascade thresholds (defaults; see resolve_keyless_events)
 HIGH, MID = 0.85, 0.65
 
@@ -110,65 +109,6 @@ while SIZE_BUCKETS[-1] < 200_000:
     SIZE_BUCKETS.append(math.ceil(SIZE_BUCKETS[-1] / MID))
 
 
-def word_shingles_expr(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a PRE-MATERIALIZED token
-    array column (passing ``split(...)`` directly would re-split per
-    element inside the lambda — O(len²) per doc, measured 3.7× the
-    extraction cost at 100k docs). Empty below n tokens (guarded:
-    Spark's ``sequence(0, negative)`` DESCENDS)."""
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - F.lit(n)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + F.lit(k + 1)) for k in range(n)]
-            ),
-        )
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
-def char_bigrams_from_lower_expr(lc: Column) -> Column:
-    """Distinct char bigrams from a PRE-MATERIALIZED lowercased
-    column (same O(len²) trap as above: ``lower()`` inside the lambda
-    re-lowercases the whole string per bigram).
-
-    Strings shorter than a bigram (incl. '' and NULL) yield the
-    EMPTY set — the old ``greatest(len-1, 1)`` floor gave '' the
-    feature [''] and NULL the feature [NULL], so two contentless
-    rows scored jaccard 1.0 and a noise-cleaned keyless event
-    adopted an arbitrary conversation instead of minting a
-    surrogate (round-5 review, verified)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(lc) - 1, F.lit(1)))
-    grams = F.array_distinct(F.transform(idx, lambda i: lc.substr(i, F.lit(2))))
-    return F.when(F.length(lc) >= 2, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def size_bucket_expr(size: Column) -> Column:
-    """Geometric bucket of a feature-set size: the number of
-    ``SIZE_BUCKETS`` boundaries ≤ size. Integer comparisons only —
-    bit-exact across engines (a log() bucket would hit libm
-    differences at boundaries)."""
-    b = F.lit(0)
-    for t in SIZE_BUCKETS:
-        b = b + F.when(size >= t, 1).otherwise(0)
-    return b
-
-
-def minhash_slot_expr(hs: Column, slot: int) -> Column:
-    """Slot ``i`` of the feature-set MinHash: min over the feature
-    hash array of the universal permutation ``(a·(h mod p) + b) mod
-    p``. One md5 per feature TOTAL (the ``hs`` column), N_SLOTS cheap
-    integer permutations — not N_SLOTS md5 passes. NULL for empty
-    sets — NULL join keys never match, so featureless probes mint
-    surrogates."""
-    a, b = SLOT_PERMS[slot]
-    return F.array_min(
-        F.transform(hs, lambda h: F.pmod(F.lit(a) * F.pmod(h, F.lit(_P)) + F.lit(b), F.lit(_P)))
-    )
-
-
 def jaccard_expr(a: Column, b: Column) -> Column:
     """Set Jaccard of two arrays, rounded to 6 (engine-portable:
     integer set sizes, one double division). Two EMPTY sets score
@@ -188,14 +128,20 @@ def _with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``_m0..`` MinHash slots, ``_lb`` geometric size bucket. Each
     stage is its own projection so CollapseProject cannot re-evaluate
     the expensive array/md5 expressions per downstream reference;
-    ``lower``/``split`` materialize first (see the per-element
-    re-evaluation notes on the extraction helpers). Bigrams are
-    inside the CASE, so long-text rows never pay for them."""
+    ``lower``/``split`` materialize first: inside the per-element
+    lambdas they would re-run per shingle/bigram, O(len²) per doc
+    (measured 3.7× the extraction cost at 100k docs). Bigrams are
+    inside the CASE, so long-text rows never pay for them; texts
+    shorter than a bigram (incl. '' and NULL) get the EMPTY set, so
+    two contentless rows never score 1.0. An empty set has NULL
+    MinHash slots (NULL join keys never match, so featureless probes
+    mint surrogates); ``_lb`` folds integer comparisons only, so it
+    is bit-exact across engines (a log() bucket would hit libm
+    differences at boundaries)."""
     # round 7: the feature expressions are spelled as SQL strings (one
-    # parser call each) — the generic Column-builder helpers below this
-    # module cost ~0.6 s of py4j round-trips per query construction
-    # (measured); semantics are identical and the helpers remain the
-    # readable/unit-tested reference formulation.
+    # parser call each) — Column-builder spellings cost ~0.6 s of py4j
+    # round-trips per query construction (measured). The DuckDB oracle
+    # (queries_ext) is the independent formulation.
     shingles_sql = (
         "CASE WHEN size(_tk) >= 3 THEN array_distinct(transform("
         "sequence(0, size(_tk) - 3), "

@@ -7,8 +7,12 @@ merge machinery:
   (reference per-source parsers, ``KahiParser.py:136-206``).
 * ``latest_change_per_key`` — last-writer-wins reduction per
   ``(conv_id, turn_idx)`` ordered by ``(ts, seq)``; the window-W4
-  "stable turn ordering" rule from BASELINE.json. Optionally salted
-  for hot conv_ids (north_rule skew handling).
+  "stable turn ordering" rule from BASELINE.json. ``strategy="agg"``
+  bounds per-task work for hot conv_ids (north_rule skew handling).
+  Applied to ``normalize_events`` output it reduces the raw events
+  first and normalizes only the winners — the engine's one
+  reduce-first path (the pipeline, the sink MERGE and the queries
+  all reach it by writing ``reduce(normalize(ev))``).
 * ``priority_merge``     — Kahi's per-field source-priority
   coalesce (``join_document``, ``KahiParser.py:334-666``): multiple
   raw feeds describing the same turn converge to ONE canonical
@@ -33,7 +37,7 @@ from pyspark.sql import functions as F
 
 from kahi_spark.functions.roles import canonical_role_expr
 from kahi_spark.functions.text import clean_text_expr
-from kahi_spark.functions.tools import extract_tool_expr
+from kahi_spark.functions.tools import extract_tool_expr, strip_tool_marker_expr
 from kahi_spark.schema import KEY_COLS
 
 #: default source priority, highest first. The reference's
@@ -47,20 +51,26 @@ from kahi_spark.schema import KEY_COLS
 DEFAULT_SOURCE_PRIORITY = ("lens", "wos", "scopus", "scielo", "scholar", "oadoi")
 
 
-#: columns (re)written by ``normalize_events`` — the reduce-fusion
-#: check below must know the normalize NEVER touches the reduction
-#: keys or the (ts, seq) replay ordering
-_NORMALIZED_COLS = frozenset({"role", "tool", "text"})
+#: the column rewrites of ``normalize_events``, name → Column builder
+#: (builders, not Columns: a Column needs a live SparkContext). The
+#: reduce-fusion guard reads the names from here, so a column that
+#: normalize starts rewriting can never slip past it — the fusion
+#: needs normalize to NEVER touch the reduction keys or the (ts, seq)
+#: replay ordering.
+_NORMALIZE = {
+    "role": lambda: canonical_role_expr("role"),
+    # tool first (extracted from raw text), then text loses the marker
+    "tool": lambda: extract_tool_expr("text", "tool"),
+    "text": lambda: clean_text_expr(strip_tool_marker_expr("text")),
+}
+_NORMALIZED_COLS = frozenset(_NORMALIZE)
 
 
-def normalize_events(events: DataFrame, use_pandas_cleaner: bool = False) -> DataFrame:
+def normalize_events(events: DataFrame) -> DataFrame:
     """Raw change events → canonical event columns.
 
     Role canonicalization (F11), text cleaning (F7), tool-field
-    extraction (J4 analogue) — all JVM-side by default; set
-    ``use_pandas_cleaner`` to route text through the Arrow-batched
-    pandas UDF instead (same semantics, used to benchmark the two
-    paths against each other).
+    extraction (J4 analogue) — all JVM-side.
 
     The returned frame carries a fusion tag: when it flows DIRECTLY
     into ``latest_change_per_key`` (the replay composition
@@ -69,26 +79,14 @@ def normalize_events(events: DataFrame, use_pandas_cleaner: bool = False) -> Dat
     Any intermediate transformation drops the tag and the composition
     runs exactly as written.
     """
-    from kahi_spark.functions.text import clean_text_pandas
-    from kahi_spark.functions.tools import strip_tool_marker_expr
-
-    stripped = strip_tool_marker_expr("text")
-    cleaner: Column = (
-        clean_text_pandas(stripped) if use_pandas_cleaner else clean_text_expr(stripped)
-    )
-    out = events.withColumns(
-        {
-            "role": canonical_role_expr("role"),
-            # tool first (extracted from raw text), then text loses the marker
-            "tool": extract_tool_expr("text", "tool"),
-            "text": cleaner,
-        }
-    )
-    # fusion tag: the raw parent + the cleaner flavor, consumed (and
-    # validated) by latest_change_per_key. A plain instance attribute:
-    # every DataFrame transformation returns a NEW object, so the tag
-    # cannot leak past `out` itself.
-    out._kahi_deferred_normalize = (events, use_pandas_cleaner)
+    out = events.withColumns({c: build() for c, build in _NORMALIZE.items()})
+    # fusion tag: the raw parent, consumed (and validated) by
+    # latest_change_per_key. A plain instance attribute: every
+    # DataFrame transformation returns a NEW object, so only `out`
+    # carries it — but cache()/persist() return `out` itself, so the
+    # reduce also checks is_cached and reads a persisted frame as
+    # written.
+    out._kahi_deferred_normalize = events
     return out
 
 
@@ -146,7 +144,6 @@ def pick_reduce_strategy(
 def latest_change_per_key(
     events: DataFrame,
     key_cols: list[str] | None = None,
-    salt_buckets: int = 0,
     strategy: str = "window",
 ) -> DataFrame:
     """Reduce a change batch to its final change per key (LWW).
@@ -180,17 +177,6 @@ def latest_change_per_key(
       (sampled key histogram: hot share ≥ 0.25 → agg, else window);
       matches the best manual choice at uniform / 10% / 50% hot in
       scripts/skew_probe.py.
-
-    ``salt_buckets > 0`` (window strategy only) splits hot keys into
-    N sub-partitions first (pre-reduce per salt, then re-reduce
-    unsalted) — the classic two-phase salted reduction. MEASURED
-    HONESTLY (scripts/skew_probe.py, 24M events, local[32]): the
-    extra full shuffle costs MORE than the skewed sort saves at this
-    scale — 0.5× at a 10%-hot key, 0.7× at a 50%-hot key — so it
-    stays opt-in; prefer ``strategy="agg"`` for bounded-task skew
-    handling (same boundedness, no second shuffle). The salted path
-    remains correct (parity-tested) for regimes where a single
-    partition cannot even hold the hot key's rows.
     """
     keys = key_cols or KEY_COLS
     # reduce↔normalize fusion (round 7, guide §2.2 "shuffle fewer
@@ -203,14 +189,21 @@ def latest_change_per_key(
     # Catalyst has no rule to defer expensive projections past a
     # Window/aggregate, so at 24M events the regex cleaner ran on
     # every raw event (measured: normalize was >50% of the n32 replay
-    # wall) instead of on the ~half that survive LWW.
-    defer = getattr(events, "_kahi_deferred_normalize", None)
-    if defer is not None and not ({*keys, "ts", "seq"} & _NORMALIZED_COLS):
-        raw, use_pandas = defer
-        reduced = latest_change_per_key(
-            raw, key_cols=keys, salt_buckets=salt_buckets, strategy=strategy
-        )
-        return normalize_events(reduced, use_pandas_cleaner=use_pandas)
+    # wall) instead of on the ~half that survive LWW. A persisted
+    # frame is reduced as written: its cache already holds the
+    # normalized rows.
+    raw = getattr(events, "_kahi_deferred_normalize", None)
+    if (
+        raw is not None
+        and not events.is_cached
+        and not ({*keys, "ts", "seq"} & _NORMALIZED_COLS)
+    ):
+        return normalize_events(_reduce(raw, keys, strategy))
+    return _reduce(events, keys, strategy)
+
+
+def _reduce(events: DataFrame, keys: list[str], strategy: str) -> DataFrame:
+    """The LWW reduction of ``latest_change_per_key``, as written."""
     if strategy == "auto":
         strategy = pick_reduce_strategy(events, keys)
     if strategy == "agg":
@@ -224,26 +217,14 @@ def latest_change_per_key(
         )
         # restore the original column order (callers and checksums
         # are column-order sensitive)
-        out = won.select(
+        return won.select(
             *[
                 F.col(f"_w.{c}").alias(c) if c in vals else F.col(c)
                 for c in events.columns
             ]
         )
-        return out
     if strategy != "window":
         raise ValueError(f"unknown reduce strategy {strategy!r}")
-    if salt_buckets > 0:
-        salted = events.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("seq")), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy(*keys, "_salt").orderBy(*_ordering(desc=True))
-        survivors = (
-            salted.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_salt")
-        )
-        events = survivors
     w = Window.partitionBy(*keys).orderBy(*_ordering(desc=True))
     return (
         events.withColumn("_rn", F.row_number().over(w))
@@ -257,7 +238,6 @@ def priority_merge(
     value_cols: list[str],
     priority: tuple[str, ...] = DEFAULT_SOURCE_PRIORITY,
     key_cols: list[str] | None = None,
-    pre_reduced: bool = False,
     reduce_strategy: str = "window",
 ) -> DataFrame:
     """Multi-source convergence: one canonical record per key, each
@@ -270,23 +250,13 @@ def priority_merge(
     — one shuffle, map-side partial aggregation, fully
     Catalyst-optimized. Sources not in ``priority`` rank last (by
     name, deterministic); within one source the latest ``(ts, seq)``
-    wins first (A1 + W4 composed).
-
-    ``pre_reduced``: the caller already reduced ``events`` to ≤1 row
-    per (key, source) — skip the internal per-source LWW pass. Lets
-    callers reduce RAW events first and normalize only the winners
-    (the reduce-before-normalize transform: the per-source winner
-    depends only on (ts, seq), so reducing first is result-identical
-    while per-row value work shrinks to key-cardinality).
+    wins first (A1 + W4 composed); on ``normalize_events`` output
+    that per-source reduce fuses, so only the winners are normalized.
     """
     keys = key_cols or KEY_COLS
     # Within each (key, source), keep the latest version first.
-    per_source = (
-        events
-        if pre_reduced
-        else latest_change_per_key(
-            events, key_cols=keys + ["source"], strategy=reduce_strategy
-        )
+    per_source = latest_change_per_key(
+        events, key_cols=keys + ["source"], strategy=reduce_strategy
     )
     aggs = list(_priority_pick_aggs(tuple(value_cols), tuple(priority)))
     return per_source.groupBy(*keys).agg(*aggs)
@@ -463,7 +433,6 @@ def reduce_events_to_state(
     events: DataFrame,
     key_cols: list[str] | None = None,
     value_cols: list[str] | None = None,
-    salt_buckets: int = 0,
     strategy: str = "window",
 ) -> DataFrame:
     """Full replay: change log → final table state in one pass.
@@ -473,9 +442,7 @@ def reduce_events_to_state(
     fast path for initial table bootstrap (one shuffle total).
     """
     keys = key_cols or KEY_COLS
-    last = latest_change_per_key(
-        events, key_cols=keys, salt_buckets=salt_buckets, strategy=strategy
-    )
+    last = latest_change_per_key(events, key_cols=keys, strategy=strategy)
     live = last.filter(F.col("op") != "delete")
     vals = value_cols or [
         c for c in live.columns if c not in keys and c not in ("op", "seq", "source")

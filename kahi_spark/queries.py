@@ -47,7 +47,7 @@ def q_cdc_apply_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive → LWW reduce (A1/W4) → normalize the winners (S1/P4/F7/
     F11) → live rows. One shuffle (the keyed window).
 
-    Round 7: REDUCE BEFORE NORMALIZE — the pipeline fast path's
+    Round 7: REDUCE BEFORE NORMALIZE — the reduce↔normalize fusion's
     result-identical transform (the LWW winner depends only on
     (ts, seq), never on normalized content), applied to the gate
     query: the regex normalize runs on the ≤1-row-per-key winners
@@ -153,19 +153,16 @@ def q_cdc_multisource_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the highest-priority source that has it (Kahi ``join_document``
     re-expression, reference KahiParser.py:334-666).
 
-    Round 7: the per-(key, source) LWW pre-pass runs on RAW events
-    and only the winners are normalized (reduce-before-normalize —
-    the winner depends only on (ts, seq); result-identical, regex
-    work shrinks from every event to key×source cardinality)."""
+    The per-(key, source) LWW pre-pass fuses with the normalize
+    (``latest_change_per_key``'s reduce↔normalize fusion): it runs on
+    RAW events and only the winners are normalized — the winner
+    depends only on (ts, seq), so this is result-identical while the
+    regex work shrinks from every event to key×source cardinality."""
     ev = derive_transcript_events(spark, sf_dir)
-    per_source = latest_change_per_key(
-        ev, key_cols=["conv_id", "turn_idx", "source"]
-    )
     merged = priority_merge(
-        normalize_events(per_source),
+        normalize_events(ev),
         value_cols=["role", "text", "tool"],
         priority=("src0", "src1", "src2"),
-        pre_reduced=True,
     )
     return merged.select("conv_id", "turn_idx", "role", "text", "tool")
 

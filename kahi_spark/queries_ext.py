@@ -769,7 +769,7 @@ def q_keyless_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 7: the STATE side reduces RAW events first and normalizes
     # only the LWW winners (key-cardinality rows) — the winner depends
     # only on (ts, seq), so this is result-identical to normalizing
-    # every event before the reduce (the pipeline fast path's
+    # every event before the reduce (the reduce↔normalize fusion's
     # transform); the null-marking depends only on seq and commutes
     # with normalize. Probes still normalize pre-featurization (the
     # resolver featurizes cleaned text) — but only the keyless slice
@@ -801,9 +801,10 @@ _H60_LIST_SQL = "list_transform({ft}, t -> ('0x' || substr(md5(t), 1, 15))::BIGI
 
 
 def _slot_sql(hs: str, i: int) -> str:
-    """DuckDB mirror of ``keyless.minhash_slot_expr``: min over the
-    universal permutation (a·(h mod p) + b) mod p of the shared
-    feature-hash list (one md5 per feature, cheap per-slot ints)."""
+    """DuckDB mirror of the ``_m<i>`` slots in
+    ``keyless._with_features``: min over the universal permutation
+    (a·(h mod p) + b) mod p of the shared feature-hash list (one md5
+    per feature, cheap per-slot ints)."""
     from kahi_spark.operators.keyless import _P, SLOT_PERMS
 
     a, b = SLOT_PERMS[i]
@@ -811,7 +812,7 @@ def _slot_sql(hs: str, i: int) -> str:
 
 
 def _size_bucket_sql(size: str) -> str:
-    """DuckDB mirror of ``keyless.size_bucket_expr`` (integer
+    """DuckDB mirror of ``_lb`` in ``keyless._with_features`` (integer
     geometric-boundary fold — no libm)."""
     from kahi_spark.operators.keyless import SIZE_BUCKETS
 

@@ -659,7 +659,6 @@ class SnapshotTable:
         epoch_id: int,
         value_cols: list[str] | None = None,
         policies: dict[str, str] | None = None,
-        salt_buckets: int = 0,
         reduce_strategy: str = "window",
         extra_metrics: dict | None = None,
         watermark=None,
@@ -689,18 +688,15 @@ class SnapshotTable:
                 return False  # exactly-once: epoch already committed
 
             # ``pre_reduced``: the caller already ran latest_change_per_key
-            # (e.g. the pipeline reduces BEFORE normalizing so the window
-            # shuffle sets the parallelism for the expensive per-row work —
-            # see CdcPipeline._apply_batch); a second window here would be
-            # a redundant shuffle
+            # (KeylessFeatureIndex reduces before featurizing); a second
+            # reduce here would be a redundant shuffle. Otherwise a
+            # ``normalize_events`` output fuses here to
+            # normalize(reduce(raw)) — the keyed pipeline epoch
             reduced = (
                 changes
                 if pre_reduced
                 else latest_change_per_key(
-                    changes,
-                    key_cols=self.key_cols,
-                    salt_buckets=salt_buckets,
-                    strategy=reduce_strategy,
+                    changes, key_cols=self.key_cols, strategy=reduce_strategy
                 )
             )
             extra = extra_metrics or {}

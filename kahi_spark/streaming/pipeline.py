@@ -1,8 +1,11 @@
 """The end-to-end CDC pipeline: binlog tail → normalize → MERGE.
 
 ``readStream`` over the Parquet binlog → ``foreachBatch``:
-normalize (vectorized, JVM-side) → LWW-reduce per key → MERGE into
-the snapshot table, exactly-once via the epoch ledger.
+normalize (JVM-side) → optional keyless resolve / near-dup drop /
+multi-source convergence → MERGE into the snapshot table,
+exactly-once via the epoch ledger. The MERGE's LWW reduce per key
+fuses with the normalize when nothing sits between them, so a plain
+keyed epoch reduces its raw events and normalizes only the winners.
 
 Reference analogue: EP1 ``parallel_all_from_collection``
 (``Kahi.py:172-175`` → extract/transform/link/load per record) —
@@ -50,9 +53,7 @@ class CdcPipeline:
         table: SnapshotTable,
         checkpoint_dir: str,
         schema=None,
-        use_pandas_cleaner: bool = False,
         max_files_per_trigger: int = 1,
-        salt_buckets: int = 0,
         reduce_strategy: str = "window",
         converge_sources: tuple[str, ...] | None = None,
         policies: dict[str, str] | None = None,
@@ -61,17 +62,14 @@ class CdcPipeline:
         keyless_index=None,
         keyless_blocking: str = "conjunctive",
     ) -> None:
-        """``salt_buckets``: >0 enables the two-phase salted LWW
-        reduction for hot conv_ids (north_rule skew handling — a
-        conversation holding ~10% of 10^10 events would otherwise pin
-        one reducer task). Measured (scripts/skew_probe.py): prefer
-        ``reduce_strategy="agg"`` — the map-side-combining ``max_by``
-        reduction bounds per-task work at any skew WITHOUT the salted
-        path's second shuffle; salting stays available for regimes
-        where one partition cannot even hold a hot key's raw rows.
-        ``reduce_strategy="auto"`` samples each batch's key histogram
-        and picks window vs agg per batch (pick_reduce_strategy) —
-        for unattended pipelines that can't know their skew upfront.
+        """``reduce_strategy``: the MERGE's LWW reduce. ``"agg"`` —
+        the map-side-combining ``max_by`` reduction — bounds per-task
+        work at any skew (north_rule skew handling: a conversation
+        holding ~10% of 10^10 events would otherwise pin one reducer
+        task; scripts/skew_probe.py). ``"auto"`` samples each batch's
+        key histogram and picks window vs agg per batch
+        (pick_reduce_strategy) — for unattended pipelines that can't
+        know their skew upfront.
 
         ``resolve_keyless``: events arriving with NULL conv_id are
         fuzzy-matched against the current table state (blocked
@@ -117,9 +115,7 @@ class CdcPipeline:
         self.table = table
         self.checkpoint_dir = checkpoint_dir
         self.schema = schema
-        self.use_pandas_cleaner = use_pandas_cleaner
         self.max_files_per_trigger = max_files_per_trigger
-        self.salt_buckets = salt_buckets
         self.reduce_strategy = reduce_strategy
         self.converge_sources = converge_sources
         self.policies = policies
@@ -230,47 +226,14 @@ class CdcPipeline:
             if self.keyless_index is not None:
                 self.keyless_index.table.record_empty_epoch(epoch_id)
             return
-        fancy = self.resolve_keyless or self.dedup_index is not None or self.converge_sources
-        if not fancy:
-            # FAST PATH — reduce BEFORE normalize. A binlog epoch is
-            # often one file / one row group, so the scan stage runs on
-            # ONE task; everything map-side of the first shuffle
-            # (including the regex normalize — ~7 µs/row) inherits that
-            # parallelism. The LWW winner depends only on (ts, seq),
-            # never on normalized content, so reducing raw events first
-            # is result-identical while the normalize runs AFTER the
-            # key shuffle: full-cluster parallelism, and only on the
-            # ≤1-row-per-key survivors (measured 2.3× pipeline
-            # throughput at 4×1M events). The keyless/dedup/converge
-            # paths need pre-reduction semantics of their own (NULL-key
-            # groups, per-source rows), so they keep normalize-first.
-            from kahi_spark.operators.merge import latest_change_per_key
-
-            # reduce on the TABLE's key, not the module default — a
-            # table constructed with non-default key_cols would
-            # otherwise get a wrong-key pre-reduction and hand merge
-            # (pre_reduced=True skips its own reduce) multiple rows
-            # per real key
-            reduced = latest_change_per_key(
-                batch,
-                key_cols=self.table.key_cols,
-                salt_buckets=self.salt_buckets,
-                strategy=self.reduce_strategy,
-            )
-            normalized = normalize_events(
-                reduced, use_pandas_cleaner=self.use_pandas_cleaner
-            )
-            applied = self.table.merge(
-                normalized,
-                epoch_id=epoch_id,
-                policies=self.policies,
-                extra_metrics={"events": n},
-                watermark=wm,
-                pre_reduced=True,
-            )
-            self._record(epoch_id, n, applied, 0, t0, compiles0)
-            return
-        normalized = normalize_events(batch, use_pandas_cleaner=self.use_pandas_cleaner)
+        # one path for every epoch. With no resolve/dedup/converge
+        # step the tagged normalize output reaches the MERGE directly,
+        # whose reduce then fuses to normalize(reduce(raw)): the regex
+        # work runs after the key shuffle (full parallelism even for a
+        # one-task binlog scan) and only on the winners; those steps
+        # transform the frame, which drops the tag, so they keep
+        # normalize-first semantics.
+        normalized = normalize_events(batch)
         if self.resolve_keyless:
             from kahi_spark.operators.keyless import resolve_keyless_events
 
@@ -321,7 +284,6 @@ class CdcPipeline:
         applied = self.table.merge(
             normalized,
             epoch_id=epoch_id,
-            salt_buckets=self.salt_buckets,
             reduce_strategy=self.reduce_strategy,
             policies=self.policies,
             extra_metrics={"events": n},

@@ -6,10 +6,12 @@ the window key ``(conv_id, turn_idx)`` is barely skewed. This probe
 generates a GENUINELY skewed 24M-event log (``hot_turns=1``: ~10% of
 all events on the single key ``(c0, 0)``) and measures the LWW
 reduction (``operators/merge.py::latest_change_per_key``) with
-``salt_buckets=0`` vs ``salt_buckets=16`` at local[32] — fresh-JVM
+``strategy`` window vs agg vs auto at local[32] — fresh-JVM
 subprocesses, interleaved min-of-N, the bench's noise protocol.
-Checksum parity between the two configs is asserted (the value-level
-parity also lives in tests/test_merge.py).
+Checksum parity between the strategies is asserted (the value-level
+parity also lives in tests/test_merge.py). A two-phase salted window
+reduce was measured here too and deleted after losing at every skew
+(0.5× at a 10%-hot key, 0.7× at 50%; BASELINE.md skew table).
 
 It also times the MOR READ path (VERDICT r4 #8) on a table built
 from the skewed stream: the read-side ``_resolve`` window sees at
@@ -33,7 +35,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HOT_TURNS = 1
-KINDS = ("salt0", "salt16", "agg", "auto")
+KINDS = ("window", "agg", "auto")
 
 
 def _measure_reduce(kind: str, event_path: str, cpus: int) -> dict:
@@ -46,13 +48,8 @@ def _measure_reduce(kind: str, event_path: str, cpus: int) -> dict:
 
     ev = spark.read.parquet(event_path)
 
-    def reduced():
-        if kind in ("agg", "auto"):
-            return latest_change_per_key(ev, strategy=kind)
-        return latest_change_per_key(ev, salt_buckets=int(kind[4:]))
-
     def job():
-        red = reduced()
+        red = latest_change_per_key(ev, strategy=kind)
         return red.agg(
             F.count(F.lit(1)).alias("rows"),
             F.bit_xor(F.xxhash64(*[F.col(c) for c in red.columns])).alias("chk"),
@@ -126,7 +123,7 @@ def main() -> None:
     if os.environ.get("KAHI_SKEW_ONLY_MOR") != "1":
         walls: dict[str, list[float]] = {k: [] for k in KINDS}
         meta: dict[str, dict] = {}
-        # interleaved rounds (salt0, salt16, agg, salt0, …): VM
+        # interleaved rounds (window, agg, auto, window, …): VM
         # CPU-steal comes in windows — all configs must see the same
         for _rep in range(int(os.environ.get("KAHI_SKEW_REPS", "2"))):
             for kind in KINDS:
@@ -138,20 +135,16 @@ def main() -> None:
                 rec = json.loads(res.stdout.strip().splitlines()[-1])
                 walls[kind].append(rec["wall_s"])
                 meta[kind] = rec
-        # salted reduce must be value-identical (same column order →
-        # same checksum); the agg strategy reorders nothing either
-        assert meta["salt0"]["rows"] == meta["salt16"]["rows"] == meta["agg"]["rows"]
-        assert meta["salt0"]["chk"] == meta["salt16"]["chk"], "salting changed values"
-        assert meta["salt0"]["chk"] == meta["agg"]["chk"], "agg strategy changed values"
-        assert meta["salt0"]["chk"] == meta["auto"]["chk"], "auto strategy changed values"
+        # every strategy must be value-identical (same column order →
+        # same checksum)
+        assert meta["window"]["rows"] == meta["agg"]["rows"] == meta["auto"]["rows"]
+        assert meta["window"]["chk"] == meta["agg"]["chk"], "agg strategy changed values"
+        assert meta["window"]["chk"] == meta["auto"]["chk"], "auto strategy changed values"
         for kind in KINDS:
             out[f"reduce_{kind}"] = {
                 "wall_s": min(walls[kind]), "all_wall_s": walls[kind]
             }
-        out["salting_speedup"] = round(
-            min(walls["salt0"]) / min(walls["salt16"]), 3
-        )
-        out["agg_speedup"] = round(min(walls["salt0"]) / min(walls["agg"]), 3)
+        out["agg_speedup"] = round(min(walls["window"]) / min(walls["agg"]), 3)
         out["parity"] = True
     if os.environ.get("KAHI_SKEW_SKIP_DECISIONS") != "1":
         # the auto decision itself, across the three measured skew

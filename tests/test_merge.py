@@ -1,5 +1,6 @@
-"""Merge operators (SURVEY.md §2.4-2.5): LWW reduction, salting
-equivalence, priority merge, MERGE-into-state semantics."""
+"""Merge operators (SURVEY.md §2.4-2.5): LWW reduction, strategy
+equivalence, the reduce↔normalize fusion, priority merge,
+MERGE-into-state semantics."""
 
 from __future__ import annotations
 
@@ -59,28 +60,13 @@ def test_lww_tie_broken_by_seq(spark):
     assert len(got) == 1 and got[0].text == "b"
 
 
-def test_salted_reduction_equivalent(spark):
-    from kahi_spark.gen import make_events
-
-    pdf = make_events(2000, n_convs=10, seed=11, hot_fraction=0.5)
-    df = spark.createDataFrame(pdf)
-    plain = {
-        (r.conv_id, r.turn_idx): (r.op, r.text, r.seq)
-        for r in latest_change_per_key(df).collect()
-    }
-    salted = {
-        (r.conv_id, r.turn_idx): (r.op, r.text, r.seq)
-        for r in latest_change_per_key(df, salt_buckets=8).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_reduction_equivalent_under_genuine_hot_key(spark):
+def test_agg_reduction_equivalent_under_genuine_hot_key(spark):
     """VERDICT r4 #1: the dispersed-turn hot conversation barely
     skews the actual window key — this fixture concentrates ~30% of
     all events on TWO (conv_id, turn_idx) keys (hot_turns=2) and
-    asserts the two-phase salted reduce is value-identical to the
-    plain one there (the wall-clock claim is measured by
+    asserts the map-side-combining max_by strategy (the bounded-per-
+    task skew shape) is value-identical to the window reduce there,
+    including column order (the wall-clock claim is measured by
     scripts/skew_probe.py at 24M events)."""
     from kahi_spark.gen import make_events
 
@@ -93,13 +79,6 @@ def test_salted_reduction_equivalent_under_genuine_hot_key(spark):
         (r.conv_id, r.turn_idx): (r.op, r.text, r.seq)
         for r in latest_change_per_key(df).collect()
     }
-    salted = {
-        (r.conv_id, r.turn_idx): (r.op, r.text, r.seq)
-        for r in latest_change_per_key(df, salt_buckets=16).collect()
-    }
-    assert plain == salted
-    # the map-side-combining max_by strategy (the bounded-per-task
-    # skew shape) must agree too, including column order
     agg = latest_change_per_key(df, strategy="agg")
     assert agg.columns == df.columns
     assert plain == {
@@ -270,7 +249,7 @@ def _fusion_fixture(spark):
 def test_reduce_normalize_fusion_parity(spark):
     """reduce(normalize(ev)) with the fusion tag must equal the
     literal eager composition (tag stripped via select('*')) for
-    every strategy/salt shape, on rows designed to differ if the
+    every strategy and key shape, on rows designed to differ if the
     rewrite ever normalized losers into winners."""
     from kahi_spark.operators.merge import normalize_events
 
@@ -278,7 +257,7 @@ def test_reduce_normalize_fusion_parity(spark):
     for kwargs in (
         {},
         {"strategy": "agg"},
-        {"salt_buckets": 4},
+        {"strategy": "auto"},
         {"key_cols": ["conv_id", "turn_idx", "source"]},
     ):
         fused = latest_change_per_key(normalize_events(raw), **kwargs)
@@ -293,6 +272,13 @@ def test_reduce_normalize_fusion_parity(spark):
     assert sorted(map(tuple, f.collect())) == sorted(map(tuple, e.collect()))
 
 
+def _regex_above_key_exchange(df) -> None:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    above, below = plan.split("Exchange hashpartitioning", 1)
+    assert "regexp_replace" in above, plan
+    assert "regexp_replace" not in below, plan
+
+
 def test_reduce_normalize_fusion_plan_and_guard(spark):
     """The fused plan runs the regex cleaner ABOVE the key exchange
     (winners only); a key set that overlaps the normalized columns
@@ -300,11 +286,18 @@ def test_reduce_normalize_fusion_plan_and_guard(spark):
     from kahi_spark.operators.merge import normalize_events
 
     raw = _fusion_fixture(spark)
-    fused = latest_change_per_key(normalize_events(raw))
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    above, below = plan.split("Exchange hashpartitioning", 1)
-    assert "regexp_replace" in above, plan
-    assert "regexp_replace" not in below, plan
+    _regex_above_key_exchange(latest_change_per_key(normalize_events(raw)))
+    # the composition SnapshotTable.merge builds for a keyed pipeline
+    # epoch: explicit table key, every reduce strategy — the pipeline
+    # still normalizes only the winners
+    for strategy in ("window", "agg", "auto"):
+        _regex_above_key_exchange(
+            latest_change_per_key(
+                normalize_events(raw),
+                key_cols=["conv_id", "turn_idx"],
+                strategy=strategy,
+            )
+        )
     # guard: text in the key → no fusion (regex stays below the
     # exchange), results equal the eager composition
     fused_no = latest_change_per_key(
@@ -319,3 +312,24 @@ def test_reduce_normalize_fusion_plan_and_guard(spark):
     assert sorted(map(tuple, fused_no.collect())) == sorted(
         map(tuple, eager_no.collect())
     )
+
+
+def test_reduce_normalize_fusion_declines_on_persisted_frame(spark):
+    """cache() returns the tagged frame itself; the reduce must read
+    the cached normalized rows as written instead of re-reducing the
+    raw parent past the cache."""
+    from kahi_spark.operators.merge import normalize_events
+
+    raw = _fusion_fixture(spark)
+    cached = normalize_events(raw).cache()
+    try:
+        cached.count()
+        reduced = latest_change_per_key(cached)
+        plan = reduced._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        eager = latest_change_per_key(normalize_events(raw).select("*"))
+        assert sorted(map(tuple, reduced.collect())) == sorted(
+            map(tuple, eager.collect())
+        )
+    finally:
+        cached.unpersist()

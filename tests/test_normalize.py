@@ -1,5 +1,6 @@
 """Normalization functions (SURVEY.md §2.7): role canonicalization,
-text cleaning (expr + pandas parity), tool extraction, token count."""
+text cleaning (expr vs the Python reference), tool extraction, token
+count."""
 
 from __future__ import annotations
 
@@ -8,13 +9,12 @@ from pyspark.sql import functions as F
 from kahi_spark.functions.roles import ROLE_MAP, canonical_role_expr
 from kahi_spark.functions.text import (
     clean_text_expr,
-    clean_text_pandas,
     clean_text_py,
     fingerprint_expr,
     fold_text_pandas,
     token_count_expr,
 )
-from kahi_spark.functions.tools import extract_tool_expr, extract_tool_pandas
+from kahi_spark.functions.tools import extract_tool_expr
 
 
 def test_role_canonicalization(spark):
@@ -39,14 +39,12 @@ DIRTY = [
 ]
 
 
-def test_clean_text_expr_and_pandas_agree(spark):
+def test_clean_text_expr_and_reference_agree(spark):
     df = spark.createDataFrame([(d,) for d, _ in DIRTY], ["text"])
     expr_out = [r[0] for r in df.select(clean_text_expr("text")).collect()]
-    pandas_out = [r[0] for r in df.select(clean_text_pandas(F.col("text"))).collect()]
     py_out = [clean_text_py(d) for d, _ in DIRTY]
     want = [w for _, w in DIRTY]
     assert expr_out == want
-    assert pandas_out == want
     assert py_out == want
 
 
@@ -67,8 +65,6 @@ def test_tool_extraction(spark):
     df = spark.createDataFrame([(t, c) for t, c, _ in rows], ["text", "tool"])
     got = [r[0] for r in df.select(extract_tool_expr("text", "tool")).collect()]
     assert got == [w for _, _, w in rows]
-    got_p = [r[0] for r in df.select(extract_tool_pandas(F.col("text"))).collect()]
-    assert got_p == [None, "search", "python", "embedded", None]
 
 
 def test_token_count_and_fingerprint(spark):
@@ -84,16 +80,15 @@ def test_token_count_and_fingerprint(spark):
 
 
 def test_clean_text_unicode_ws_parity(spark):
-    """Java's \\s is ASCII-only; the pandas/python mirrors must not
-    collapse NBSP/U+2003 where the JVM expr keeps them (round-5 fix —
-    divergent cleaners would give the same text different dedup
-    fingerprints depending on which path cleaned it)."""
+    """Java's \\s is ASCII-only; the Python mirror must not collapse
+    NBSP/U+2003 where the JVM expr keeps them (round-5 fix — divergent
+    cleaners would give the same text different dedup fingerprints
+    depending on which path cleaned it)."""
     s = "a b   c\td  e "
     df = spark.createDataFrame([(s,)], "text string")
     expr_out = df.select(clean_text_expr("text")).first()[0]
-    pandas_out = df.select(clean_text_pandas(F.col("text"))).first()[0]
     py_out = clean_text_py(s)
-    assert expr_out == pandas_out == py_out
+    assert expr_out == py_out
     assert " " in expr_out  # NBSP survives (NOT Java whitespace)
     assert " " in expr_out  # em-space survives too
     assert "\t" not in expr_out  # ASCII ws still collapses everywhere
