@@ -21,13 +21,6 @@ def safe_int_expr(col: Column | str) -> Column:
     return F.coalesce(direct, retry)
 
 
-def epoch_seconds_expr(col: Column | str) -> Column:
-    """F9: timestamp → int epoch seconds (``int(time())`` storage,
-    reference ``KahiParser.py:55``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_timestamp(c)
-
-
 def parse_iso_ts_expr(col: Column | str) -> Column:
     """F9: ISO-8601 string → timestamp (``Lens.py:97``). try_-variant:
     under Spark 4 ANSI a malformed (or offset-less) string must yield

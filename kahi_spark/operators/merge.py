@@ -90,10 +90,21 @@ def normalize_events(events: DataFrame) -> DataFrame:
     return out
 
 
-def _ordering(desc: bool = True) -> list[Column]:
-    """Stable replay order: event time, then log position (W4)."""
-    cols = [F.col("ts"), F.col("seq")]
-    return [c.desc() for c in cols] if desc else [c.asc() for c in cols]
+#: the event-time floor a NULL ``ts`` reads as in LWW comparisons
+_TS_FLOOR = "1970-01-01 00:00:00"
+
+
+def lww_order(ts: Column | str = "ts", seq: Column | str = "seq") -> list[Column]:
+    """The one last-writer-wins order, as ascending sort keys: event
+    time, then log position (W4), with a NULL ``ts`` read as the 1970
+    floor. Every Spark-side LWW site orders or compares through this —
+    the window and agg reduces, ``_newer_than``, the MOR read resolve
+    and the dedup index's text picker — so they pick the same winner
+    even for a NULL ts next to a pre-1970 one (a bare ``ts desc``
+    sorts NULL below every real time instead)."""
+    t = F.col(ts) if isinstance(ts, str) else ts
+    s = F.col(seq) if isinstance(seq, str) else seq
+    return [F.coalesce(t, F.to_timestamp(F.lit(_TS_FLOOR))), s]
 
 
 #: hot-key share above which the bounded-at-any-skew ``agg`` shape
@@ -148,15 +159,16 @@ def latest_change_per_key(
 ) -> DataFrame:
     """Reduce a change batch to its final change per key (LWW).
 
-    Within one batch only the LAST change (by ``ts, seq``) per
-    ``(conv_id, turn_idx)`` matters for the final state — a delete
-    followed by a re-insert survives as the insert, an insert
-    followed by updates survives as the last update.
+    Within one batch only the LAST change (by ``lww_order``: ts, then
+    seq, NULL ts as the 1970 floor) per ``(conv_id, turn_idx)``
+    matters for the final state — a delete followed by a re-insert
+    survives as the insert, an insert followed by updates survives as
+    the last update.
 
     ``strategy``:
 
     * ``"window"`` (default) — ``row_number() over (partition by key
-      order by ts desc, seq desc) = 1``: one shuffle on the key, one
+      order by lww_order desc) = 1``: one shuffle on the key, one
       per-partition sort. Fastest at moderate skew (measured: a
       single key holding 10% — even 50% — of a 24M-event log costs
       the window path nothing visible at local[32]; the tail task's
@@ -208,12 +220,8 @@ def _reduce(events: DataFrame, keys: list[str], strategy: str) -> DataFrame:
         strategy = pick_reduce_strategy(events, keys)
     if strategy == "agg":
         vals = [c for c in events.columns if c not in keys]
-        ordk = F.struct(
-            F.coalesce(F.col("ts"), F.to_timestamp(F.lit(_TS_FLOOR))).alias("t"),
-            F.col("seq").alias("s"),
-        )
         won = events.groupBy(*keys).agg(
-            F.max_by(F.struct(*[F.col(c) for c in vals]), ordk).alias("_w")
+            F.max_by(F.struct(*[F.col(c) for c in vals]), F.struct(*lww_order())).alias("_w")
         )
         # restore the original column order (callers and checksums
         # are column-order sensitive)
@@ -225,7 +233,7 @@ def _reduce(events: DataFrame, keys: list[str], strategy: str) -> DataFrame:
         )
     if strategy != "window":
         raise ValueError(f"unknown reduce strategy {strategy!r}")
-    w = Window.partitionBy(*keys).orderBy(*_ordering(desc=True))
+    w = Window.partitionBy(*keys).orderBy(*[c.desc() for c in lww_order()])
     return (
         events.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -303,14 +311,14 @@ def _priority_pick_aggs(value_cols: tuple[str, ...], priority: tuple[str, ...]) 
 #: SURVEY.md §2.8; we tolerate it by versioned conditional MERGE).
 SYS_SEQ = "_seq"
 SYS_DELETED = "_deleted"
-_TS_FLOOR = "1970-01-01 00:00:00"
 
 
 def _newer_than(new_ts: Column, new_seq: Column, old_ts: Column, old_seq: Column) -> Column:
-    """LWW ordering: (ts, seq) lexicographic, NULL ts = epoch floor."""
-    nts = F.coalesce(new_ts, F.to_timestamp(F.lit(_TS_FLOOR)))
-    ots = F.coalesce(old_ts, F.to_timestamp(F.lit(_TS_FLOOR)))
-    return (nts > ots) | ((nts == ots) & (new_seq > old_seq))
+    """True where (new_ts, new_seq) is later than (old_ts, old_seq)
+    in ``lww_order``."""
+    nts, nseq = lww_order(new_ts, new_seq)
+    ots, oseq = lww_order(old_ts, old_seq)
+    return (nts > ots) | ((nts == ots) & (nseq > oseq))
 
 
 #: Field-level merge policies (A9 — the reference's "mod" patch

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kahi_spark.operators.dedup import minhash_bands
+from kahi_spark.operators.merge import lww_order
 
 
 class LshDedupIndex:
@@ -164,13 +165,10 @@ class LshDedupIndex:
         # compaction story as the snapshot sink's deltas.
         out = None
         for d in dirs:
-            if (
-                any(f.is_file() and f.name.endswith(".parquet") for f in os.scandir(d))
-                or self._epoch_modulus(d) != self.n_buckets
-            ):
-                # legacy pre-bucketing epoch (flat files), or an epoch
-                # whose bucket=k/ directories were written under a
-                # DIFFERENT n_buckets than this handle's (round-6
+            if self._epoch_modulus(d) != self.n_buckets:
+                # an epoch whose bucket=k/ directories were written
+                # under a DIFFERENT n_buckets than this handle's, or
+                # that carries no modulus marker at all (round-6
                 # ADVICE: trusting those partition values would
                 # silently prune away true band_sig matches): derive
                 # the bucket column on the fly — a bucket filter still
@@ -365,18 +363,14 @@ class LshDedupIndex:
         epochs a redundant count job per epoch is real overhead."""
         key = F.concat_ws(":", *[F.col(c).cast("string") for c in key_cols])
         inserts = batch.filter(F.col("op") == "insert").withColumn("_k", key)
-        # one text per key, DETERMINISTICALLY the (ts, seq)-latest —
+        # one text per key, DETERMINISTICALLY the lww_order-latest —
         # the same row the LWW merge will keep. (dropDuplicates picked
         # an arbitrary partition-order row: the index could sign the
         # LOSING write's text and then mis-dedup against a text that
         # never entered the corpus — round-5 review finding.)
-        ordk = F.struct(
-            F.coalesce(F.col("ts"), F.to_timestamp(F.lit("1970-01-01"))).alias("t"),
-            F.col("seq").alias("s"),
-        )
         picked = (
             inserts.groupBy(F.col("_k").alias("k"))
-            .agg(F.max_by(F.col(text_col), ordk).alias(text_col))
+            .agg(F.max_by(F.col(text_col), F.struct(*lww_order())).alias(text_col))
         )
         # checkpoint (key, sig, bands) once: consumed by the bucket
         # set, the candidate join (both sides), the verification join,

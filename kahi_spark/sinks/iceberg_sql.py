@@ -59,11 +59,6 @@ def _policy_expr(col: str, policy: str) -> str:
     raise ValueError(f"unknown merge policy {policy!r} for column {col!r}")
 
 
-def _policy_set(col: str, policy: str) -> str:
-    """One SET clause under a field-level merge policy (A9)."""
-    return f"t.{col} = {_policy_expr(col, policy)}"
-
-
 def _insert_val(col: str, policy: str) -> str:
     """INSERT-side value for a first-seen key under a policy —
     ``union`` normalizes exactly like the DataFrame path does when

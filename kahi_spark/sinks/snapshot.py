@@ -10,6 +10,16 @@ snapshot-versioned Parquet table:
   ``v%08d`` (copy-on-write, like Iceberg COW MERGE), then atomically
   swaps a JSON manifest pointer — readers always see a consistent
   snapshot (snapshot isolation);
+* **one commit protocol**: every writer (COW merge/init, MOR delta,
+  minor fold, major fold) writes into a private temp dir outside the
+  manifest lock, then hands it to ``_publish``. Only ``_publish``
+  creates versioned dirs (``v…`` base, ``d…`` delta, ``dm…`` minor
+  merge), and only under ``_mlock``: it assigns the version, renames
+  the temp dir to its versioned name, updates base/deltas with their
+  row counts, the epoch ledger and ``snapshot_log``, rotates
+  ``trash``, appends the commit record and swaps the manifest. So a
+  versioned dir the manifest does not reference is always a crash
+  leftover, swept by set membership alone;
 * the manifest carries an **epoch ledger**: ``epoch_id → snapshot``
   recorded in the same atomic pointer swap as the data commit, so a
   replayed ``foreachBatch`` epoch is detected and skipped —
@@ -44,6 +54,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import threading
 import time
@@ -57,12 +68,18 @@ from kahi_spark.operators.merge import (
     SYS_DELETED,
     SYS_SEQ,
     latest_change_per_key,
+    lww_order,
     merge_changes_into_state,
     state_from_reduced,
 )
 from kahi_spark.schema import KEY_COLS, evolve_schema
 
 _MANIFEST = "_manifest.json"
+#: temp-dir prefixes: merges write under the first, folds under the rest
+_MERGE_TEMP = "_merge_out_"
+_FOLD_TEMPS = ("_compact_out_", "_compact_winners_", "_minor_out_")
+#: the names only ``_publish`` creates: base, epoch delta, minor merge
+_VERSIONED = re.compile(r"(v|d|dm)\d{8}")
 
 
 def _to_uri(path: str) -> str:
@@ -144,32 +161,11 @@ def _file_stats(directory: str, ts_col: str = "ts") -> list[dict]:
 
 def _manifest_row_counts(m: dict) -> tuple[int, int]:
     """(base_rows, live_delta_rows) from manifest lineage alone — no
-    file I/O. Preferred source: the explicit ``base_rows`` field and
-    ``delta_rows_by_dir`` map that every base/delta-writing commit
-    maintains — O(1) and immune to the COMMITS_HOT archive window
-    (at design-point epoch counts, thousands of epochs can pass
-    between majors and the base commit falls out of the hot list).
-    Fallback for pre-round-6 manifests: scan the hot commits."""
-    live = set(m.get("deltas", []))
-    by_dir = m.get("delta_rows_by_dir")
-    if by_dir is not None:
-        return (
-            m.get("base_rows") or 0,
-            sum(r for d, r in by_dir.items() if d in live),
-        )
-    base_rows = 0
-    for c in reversed(m.get("commits", [])):
-        if c.get("op") not in ("merge-delta", "compact-minor") and c.get("files"):
-            base_rows = sum(f.get("rows") or 0 for f in c["files"])
-            break
-    delta_rows = 0
-    for c in m.get("commits", []):
-        d = c.get("dir") or (
-            f"d{c['version']:08d}" if c.get("op") == "merge-delta" else None
-        )
-        if d and d in live:
-            delta_rows += sum(f.get("rows") or 0 for f in c.get("files") or [])
-    return base_rows, delta_rows
+    file I/O: the ``base_rows`` field and ``delta_rows_by_dir`` map
+    ``_publish`` maintains (O(1), immune to the COMMITS_HOT archive
+    window)."""
+    by_dir = m["delta_rows_by_dir"]
+    return m["base_rows"], sum(by_dir[d] for d in m["deltas"])
 
 
 def _rows_of(files: list[dict]) -> int:
@@ -245,9 +241,9 @@ class SnapshotTable:
         saturated rewriting a ~200M-row base every ~8 epochs (walls
         45-182 s, 75% of the run); minors keep the delta set small
         for a fraction of the cost so majors can be spaced by
-        ``compact_ratio`` honestly. With ``compact_ratio`` set and no
-        base yet, the fold this tier would trigger runs as the
-        bootstrap major instead."""
+        ``compact_ratio`` honestly. With no base yet (in either
+        mode), the fold this tier would trigger runs as the bootstrap
+        major instead."""
         assert mode in ("cow", "mor")
         self.spark = spark
         self.path = path
@@ -264,16 +260,15 @@ class SnapshotTable:
         self._mlock = threading.RLock()
         #: serializes FOLDS themselves — a synchronous compact() from
         #: a maintenance thread and a merge-triggered background fold
-        #: must never run concurrently (each sweeps the other's
-        #: in-progress temp dirs)
+        #: must never run concurrently (each sweeps the fold temp
+        #: prefixes, so it would delete the other's in-progress dirs)
         self._fold_lock = threading.Lock()
-        #: serializes MERGES end-to-end (ledger check → delta/snapshot
-        #: write → commit). The exactly-once check alone runs before
-        #: the write, so two concurrent deliveries of one epoch would
-        #: both pass it, race their overwrites of the SAME
-        #: deterministic delta dir and double-commit the epoch
-        #: (round-5 review). Folds never take this lock — async
-        #: compaction still overlaps merges.
+        #: serializes MERGES end-to-end (ledger check → temp write →
+        #: publish). The exactly-once check alone runs before the
+        #: write, so two concurrent deliveries of one epoch would both
+        #: pass it and double-commit the epoch (round-5 review); a
+        #: merge also sweeps the merge temp prefix. Folds never take
+        #: this lock — async compaction still overlaps merges.
         self._merge_lock = threading.Lock()
         self._compact_thread: threading.Thread | None = None
         self._compact_exc: BaseException | None = None
@@ -304,20 +299,34 @@ class SnapshotTable:
                 "version": 0,
                 "snapshot": None,
                 "deltas": [],
+                "trash": [],
                 "epochs": {},
                 "epoch_floor": -1,
                 "commits": [],
                 "key_cols": None,
                 "base_n_buckets": None,
+                "base_rows": 0,
+                "delta_rows_by_dir": {},
                 "snapshot_log": [],
             }
         with open(p) as f:
             m = json.load(f)
-        m.setdefault("deltas", [])
-        m.setdefault("epoch_floor", -1)
-        m.setdefault("key_cols", None)
-        m.setdefault("base_n_buckets", None)
-        m.setdefault("snapshot_log", None)  # None = pre-r5 manifest
+        # every field _publish writes; a manifest missing one was not
+        # written by this protocol, and reading on would silently
+        # mis-prune lookups or mis-trigger folds
+        required = ["snapshot_log"]
+        if m.get("snapshot") is not None:
+            required += ["base_n_buckets", "base_rows"]
+        if m.get("deltas"):
+            required.append("delta_rows_by_dir")
+        missing = [k for k in required if m.get(k) is None]
+        if missing:
+            raise ValueError(
+                f"table at {self.path}: manifest lacks {', '.join(missing)}"
+            )
+        m.setdefault("trash", [])
+        m.setdefault("base_rows", 0)
+        m.setdefault("delta_rows_by_dir", {})
         return m
 
     #: hot-manifest commit-history cap: older commit records move to an
@@ -427,17 +436,8 @@ class SnapshotTable:
                 p = F.col(k) == lv
                 key_pred = p if key_pred is None else (key_pred & p)
             if "_bucket" in base.columns:
-                modulus = m["base_n_buckets"]
-                if modulus is not None:
-                    bucket = F.pmod(F.hash(*lits), F.lit(modulus))
-                    base = base.filter(F.col("_bucket") == bucket)
-                # modulus None (manifest predates recording): the
-                # dirs' modulus is unprovable — guessing this
-                # handle's n_buckets could prune the WRONG directory
-                # and silently drop a live key, so skip pruning and
-                # scan all buckets (correct, just unpruned) until the
-                # next fold records the modulus
-                base = base.drop("_bucket")
+                bucket = F.pmod(F.hash(*lits), F.lit(m["base_n_buckets"]))
+                base = base.filter(F.col("_bucket") == bucket).drop("_bucket")
             parts.append(base.filter(key_pred))
         else:
             key_pred = None
@@ -486,14 +486,11 @@ class SnapshotTable:
         return df
 
     def _resolve(self, df: DataFrame) -> DataFrame:
-        """Pick the winning version per key across base+deltas:
-        (ts, _seq) lexicographic, NULL ts lowest."""
+        """Pick the winning version per key across base+deltas: the
+        latest in ``lww_order`` over (ts, _seq)."""
         from pyspark.sql import Window
 
-        order = [
-            F.coalesce(F.col("ts"), F.to_timestamp(F.lit("1970-01-01"))).desc(),
-            F.col(SYS_SEQ).desc(),
-        ]
+        order = [c.desc() for c in lww_order(seq=SYS_SEQ)]
         w = Window.partitionBy(*self.key_cols).orderBy(*order)
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -516,23 +513,16 @@ class SnapshotTable:
     #: the O(total-epochs) commit archive per fold / time-travel read
     SNAPSHOT_LOG_HOT = 128
 
-    def _record_snapshot_version(self, m: dict, version: int) -> None:
-        log = m.get("snapshot_log") or []
-        log.append(version)
-        m["snapshot_log"] = log[-self.SNAPSHOT_LOG_HOT :]
+    #: base snapshots kept on disk as time-travel targets (Iceberg
+    #: expire_snapshots analogue): a COW table's older v-dirs are swept
+    #: at the next commit; a MOR fold's inputs leave via ``trash``
+    SNAPSHOTS_KEPT = 4
 
     def _snapshot_versions(self) -> set[int]:
         """Versions whose commit produced a BASE snapshot dir (init /
         COW merge / compact) — the only legitimate time-travel
-        targets and the only v-dirs that may live on disk. Served
-        from the manifest's bounded ``snapshot_log``; a pre-r5
-        manifest (no log yet) falls back to one commit-history scan."""
-        m = self._read_manifest()
-        if m["snapshot_log"] is not None:
-            return set(m["snapshot_log"])
-        return {
-            c["version"] for c in self.history() if c["op"] != "merge-delta"
-        }
+        targets. Served from the manifest's bounded ``snapshot_log``."""
+        return set(self._read_manifest()["snapshot_log"])
 
     def history(self) -> list[dict]:
         """Full commit log: lineage, watermarks, metrics per commit —
@@ -569,19 +559,14 @@ class SnapshotTable:
         20k winners → ONE file)."""
         return F.pmod(F.hash(*[F.col(k) for k in self.key_cols]), F.lit(self.n_buckets))
 
-    def _write_snapshot(
-        self, df: DataFrame, version: int | None = None, dirname: str | None = None
-    ) -> str:
-        snap = dirname if dirname is not None else f"v{version:08d}"
-        out = os.path.join(self.path, snap)
+    def _write_snapshot(self, df: DataFrame, dirname: str) -> None:
         (
             df.withColumn("_bucket", self._bucket_expr())
             .repartition(self.n_buckets, *[F.col(k) for k in self.key_cols])
-            .write.mode("overwrite")
+            .write
             .partitionBy("_bucket")
-            .parquet(out)
+            .parquet(os.path.join(self.path, dirname))
         )
-        return snap
 
     def init(self, df: DataFrame, epoch_id: int | None = None) -> None:
         """Create the table from an initial state (bootstrap load).
@@ -592,26 +577,90 @@ class SnapshotTable:
         state = df.withColumn(SYS_SEQ, F.lit(-1).cast("long")).withColumn(
             SYS_DELETED, F.lit(False)
         )
-        self._commit(state, epoch_id=epoch_id, op="init", rows_in=df.count())
+        with self._merge_lock:
+            self._commit(state, epoch_id=epoch_id, op="init", rows_in=df.count())
 
     def _commit(self, new_state: DataFrame, epoch_id: int | None, op: str, **metrics) -> None:
-        with self._mlock:  # COW path is single-threaded; lock is cheap
+        """COW commit: the full new base snapshot, published as ``v…``."""
+        t0 = time.time()
+        tmp = self._merge_temp()
+        self._write_snapshot(new_state, tmp)
+        # resolve lazy metrics AFTER the write (see _lazy)
+        resolved = {k: _lazy(v) for k, v in metrics.items()}
+        if resolved.get("watermark") is not None:
+            resolved["watermark"] = str(resolved["watermark"])
+        self._publish(tmp, "v", op, t0, epoch_id=epoch_id, record=resolved)
+
+    # --- the commit protocol ------------------------------------------------
+    def _fresh_tag(self, *prefixes: str) -> str:
+        """Sweep one writer kind's crash leftovers — the temp dirs under
+        ``prefixes`` — and return a fresh tag for this write's own temp
+        dir(s). The caller holds the lock that serializes that writer
+        kind (``_merge_lock`` for merges, ``_fold_lock`` for folds),
+        so no temp dir under those prefixes is in flight; the other
+        kind's temp dirs are never touched."""
+        for e in os.scandir(self.path):
+            if e.is_dir() and e.name.startswith(prefixes):
+                shutil.rmtree(e.path, ignore_errors=True)
+        return uuid.uuid4().hex[:8]
+
+    def _merge_temp(self) -> str:
+        return f"{_MERGE_TEMP}{self._fresh_tag(_MERGE_TEMP)}"
+
+    def _publish(
+        self,
+        tmp: str,
+        prefix: str,
+        op: str,
+        t0: float,
+        epoch_id: int | None = None,
+        folded: list[str] | None = None,
+        record: dict | None = None,
+    ) -> dict:
+        """The table's one commit point (see the module docstring).
+        Under ``_mlock``: assign the next version, rename the temp dir
+        ``tmp`` to ``<prefix><version>`` (``v`` = new base, ``d`` =
+        epoch delta, ``dm`` = minor merge, which replaces the deltas
+        in ``folded``), update the manifest and its row bookkeeping,
+        ledger ``epoch_id``, append the commit record and swap the
+        manifest. Then delete what the new manifest no longer needs:
+        the previous ``trash`` (a fold's inputs stay one fold cycle,
+        so a reader plan captured just before the swap keeps its
+        files) and every versioned dir it does not reference — an
+        expired snapshot (``SNAPSHOTS_KEPT``) or a crash leftover,
+        since no versioned name exists uncommitted outside this
+        method. Returns the committed manifest."""
+        files = _file_stats(os.path.join(self.path, tmp))
+        rows = _rows_of(files)
+        with self._mlock:
             m = self._read_manifest()
             version = m["version"] + 1
-            t0 = time.time()
-            snap = self._write_snapshot(new_state, version)
-            # resolve lazy metrics AFTER the write (see _lazy)
-            resolved = {k: _lazy(v) for k, v in metrics.items()}
-            if resolved.get("watermark") is not None:
-                resolved["watermark"] = str(resolved["watermark"])
-            # per-bucket lineage from the written footers (metadata-only)
-            resolved["files"] = _file_stats(os.path.join(self.path, snap))
-            m["base_rows"] = _rows_of(resolved["files"])
+            name = f"{prefix}{version:08d}"
+            final = os.path.join(self.path, name)
+            if os.path.isdir(final):  # crash leftover: renamed, never committed
+                shutil.rmtree(final)
+            os.rename(os.path.join(self.path, tmp), final)
             m["version"] = version
-            m["snapshot"] = snap
-            self._record_snapshot_version(m, version)
             m["key_cols"] = list(self.key_cols)
-            m["base_n_buckets"] = self.n_buckets  # modulus this base was written with
+            by_dir = m["delta_rows_by_dir"]
+            old_trash = m["trash"] if folded else []
+            if folded:
+                m["deltas"] = [d for d in m["deltas"] if d not in folded]
+                for d in folded:
+                    by_dir.pop(d, None)
+                m["trash"] = list(folded)
+            if prefix == "v":
+                if folded and m["snapshot"] is not None:  # a major retires the base
+                    m["trash"].append(m["snapshot"])
+                m["snapshot"] = name
+                m["base_rows"] = rows
+                m["base_n_buckets"] = self.n_buckets  # modulus this base was written with
+                m["snapshot_log"] = (m["snapshot_log"] + [version])[-self.SNAPSHOT_LOG_HOT :]
+            else:
+                # list order is cosmetic — the read resolve orders by
+                # (ts, seq), never by position
+                m["deltas"] = [name, *m["deltas"]] if folded else [*m["deltas"], name]
+                by_dir[name] = rows
             if epoch_id is not None:
                 m["epochs"][str(epoch_id)] = version
             m["commits"].append(
@@ -619,12 +668,21 @@ class SnapshotTable:
                     "version": version,
                     "epoch_id": epoch_id,
                     "op": op,
+                    **({} if prefix == "v" else {"dir": name}),
                     "wall_s": round(time.time() - t0, 3),
-                    **resolved,
+                    **(record or {}),
+                    "files": files,
                 }
             )
             self._commit_manifest(m)
-        self._gc(keep=4)
+            live = {m["snapshot"], *m["deltas"], *m["trash"]}
+            live.update(f"v{v:08d}" for v in m["snapshot_log"][-self.SNAPSHOTS_KEPT :])
+            for e in os.scandir(self.path):
+                if e.name in old_trash or (
+                    _VERSIONED.fullmatch(e.name) and e.name not in live
+                ):
+                    shutil.rmtree(e.path, ignore_errors=True)
+        return m
 
     def record_empty_epoch(self, epoch_id: int) -> bool:
         """Commit an epoch id that carried no rows (manifest-only, no
@@ -643,15 +701,6 @@ class SnapshotTable:
             m["epochs"][str(epoch_id)] = m["version"]
             self._commit_manifest(m)
         return True
-
-    def _gc(self, keep: int) -> None:
-        """Drop snapshot dirs older than the last ``keep`` versions
-        (Iceberg expire_snapshots analogue)."""
-        m = self._read_manifest()
-        live = {f"v{v:08d}" for v in range(max(1, m["version"] - keep + 1), m["version"] + 1)}
-        for d in os.listdir(self.path):
-            if d.startswith("v") and d not in live and os.path.isdir(os.path.join(self.path, d)):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def merge(
         self,
@@ -702,7 +751,7 @@ class SnapshotTable:
             extra = extra_metrics or {}
 
             if self.mode == "mor":
-                return self._merge_mor(m, changes, reduced, epoch_id, extra, watermark)
+                return self._merge_mor(changes, reduced, epoch_id, extra, watermark)
 
             if watermark is None:
                 # no caller-supplied watermark: scan lazily, after the write
@@ -745,106 +794,60 @@ class SnapshotTable:
     # --- merge-on-read path -------------------------------------------------
     def _merge_mor(
         self,
-        m: dict,
         changes: DataFrame,
         reduced: DataFrame,
         epoch_id: int,
-        extra: dict | None = None,
+        extra: dict,
         watermark=None,
     ) -> bool:
-        """Append the reduced batch as a delta file (cost O(batch));
-        fold deltas into a new base every ``compact_every`` epochs —
-        inline, or in the background thread when ``compact_async``
-        (the fold no longer blocks its triggering epoch)."""
+        """Append the reduced batch as a delta (cost O(batch)), then
+        run a fold if one is due — inline, or in the background thread
+        when ``compact_async`` (the fold no longer blocks its
+        triggering epoch)."""
         # a failed background fold must fail the PIPELINE, loudly,
         # not let deltas accumulate behind a dead compactor
         self._reraise_compact_failure()
         t0 = time.time()
-        delta_state = state_from_reduced(reduced, key_cols=self.key_cols)
-        # DETERMINISTIC label from the entry-time version — on a
-        # crashed-then-replayed epoch the retry computes the SAME name
-        # and mode("overwrite") self-heals the partial dir (a random
-        # suffix would leak one orphan per crash, forever). The name
-        # is a label, not the committed version: a background fold may
-        # bump the version mid-write, but versions are monotone and
-        # folds write v-dirs, so no later artifact can collide with a
-        # d-prefixed name.
-        delta_dir = f"d{m['version'] + 1:08d}"
+        tmp = self._merge_temp()
         # NO repartition: latest_change_per_key's window already left
         # the rows hash-partitioned on the key — an explicit
         # repartition here would be a redundant second shuffle (file
         # count follows shuffle partitions; compaction re-buckets to
         # n_buckets anyway)
-        delta_state.write.mode("overwrite").parquet(os.path.join(self.path, delta_dir))
+        state_from_reduced(reduced, key_cols=self.key_cols).write.parquet(
+            os.path.join(self.path, tmp)
+        )
         # metrics resolve after the write (see _lazy)
         wm = _lazy(watermark) if watermark is not None else changes.agg(F.max("ts")).collect()[0][0]
-        files = _file_stats(os.path.join(self.path, delta_dir))
-        with self._mlock:
-            # re-read: the background fold may have swapped the base
-            # since this method's entry snapshot of the manifest
-            m2 = self._read_manifest()
-            version = m2["version"] + 1
-            m2["version"] = version
-            m2["deltas"].append(delta_dir)
-            m2.setdefault("delta_rows_by_dir", {})[delta_dir] = _rows_of(files)
-            m2["key_cols"] = list(self.key_cols)
-            m2["epochs"][str(epoch_id)] = version
-            m2["commits"].append(
-                {
-                    "version": version,
-                    "epoch_id": epoch_id,
-                    "op": "merge-delta",
-                    "dir": delta_dir,
-                    "wall_s": round(time.time() - t0, 3),
-                    # JSON null when the batch had no ts (never the
-                    # literal string "None" — COW's _commit agrees)
-                    "watermark": str(wm) if wm is not None else None,
-                    "files": files,
-                    **{k: _lazy(v) for k, v in (extra or {}).items()},
-                }
-            )
-            self._commit_manifest(m2)
-            n_deltas = len(m2["deltas"])
-        minor = False
-        if self.compact_ratio is not None:
-            base_rows, delta_rows = _manifest_row_counts(m2)
-            # ratio trigger once a base exists (geometric fold
-            # schedule — see __init__); compact_every bootstraps the
-            # first base
-            due = (
-                delta_rows >= self.compact_ratio * base_rows
-                if base_rows > 0
-                else n_deltas >= self.compact_every
-            )
-            if (
-                not due
-                and self.compact_minor_every
-                and n_deltas >= self.compact_minor_every
-            ):
-                # with no base yet the due fold IS the bootstrap major:
-                # a minor would keep the delta count below
-                # compact_every, so no base (and no ratio trigger)
-                # would ever form
-                due, minor = True, base_rows > 0
+        record = {
+            # JSON null when the batch had no ts (never the literal
+            # string "None" — COW's _commit agrees)
+            "watermark": str(wm) if wm is not None else None,
+            **{k: _lazy(v) for k, v in extra.items()},
+        }
+        m = self._publish(tmp, "d", "merge-delta", t0, epoch_id=epoch_id, record=record)
+        # one fold rule: the ratio once a base exists (geometric
+        # schedule — see __init__), else compact_every; a due minor
+        # with no base yet runs as the bootstrap major, since minors
+        # alone would keep the delta count below compact_every and no
+        # base would ever form
+        base_rows, delta_rows = _manifest_row_counts(m)
+        n_deltas = len(m["deltas"])
+        if self.compact_ratio is not None and base_rows > 0:
+            due = delta_rows >= self.compact_ratio * base_rows
         else:
             due = n_deltas >= self.compact_every
-            # the minor tier is live in fixed-interval mode too — it
-            # was silently inert without compact_ratio (round-6
-            # ADVICE): a user passing only compact_minor_every got
-            # unbounded delta fan-in between the compact_every majors
-            if (
-                not due
-                and self.compact_minor_every
-                and n_deltas >= self.compact_minor_every
-            ):
-                due, minor = True, True
-        if due:
-            if self.compact_async:
-                self._spawn_compact(minor=minor)
-            elif minor:
-                self.compact_minor()
-            else:
-                self.compact(self.compact_strategy)
+        if not due and not (
+            self.compact_minor_every and n_deltas >= self.compact_minor_every
+        ):
+            return True
+        minor = not due and base_rows > 0
+        if self.compact_async:
+            self._spawn_compact(minor=minor)
+        elif minor:
+            self.compact_minor()
+        else:
+            self.compact(self.compact_strategy)
         return True
 
     def _compact_bucketed(self, base_snap: str | None, folding: list[str], tag: str) -> str:
@@ -881,7 +884,7 @@ class SnapshotTable:
         win_dir = os.path.join(self.path, f"_compact_winners_{tag}")
         (
             winners.withColumn("_bucket", self._bucket_expr())
-            .write.mode("overwrite")
+            .write
             .partitionBy("_bucket")
             .parquet(win_dir)
         )
@@ -944,8 +947,8 @@ class SnapshotTable:
                     )
                     if t.num_rows == 0:
                         continue
-                    # the same LWW order as _resolve: (coalesce(ts,
-                    # epoch-0) desc, _seq desc), first row per key
+                    # the same LWW order as _resolve (lww_order: a
+                    # NULL ts is the 1970 floor), first row per key
                     if ts_field is not None:
                         floor = pa.scalar(0, pa.int64()).cast(ts_field.type)
                         ts_key = pc.fill_null(t.column("ts"), floor)
@@ -979,7 +982,7 @@ class SnapshotTable:
         tasks = self.spark.range(0, self.n_buckets, 1, numPartitions=self.n_buckets)
         (
             tasks.mapInArrow(fold, schema=out_schema)
-            .write.mode("overwrite")
+            .write
             .partitionBy("_bucket")
             .parquet(out)
         )
@@ -1044,111 +1047,29 @@ class SnapshotTable:
 
     def _compact_minor_locked(self) -> None:
         with self._mlock:
-            m = self._read_manifest()
-            folding = list(m["deltas"])
+            folding = list(self._read_manifest()["deltas"])
         if len(folding) < 2:
             return
         t0 = time.time()
-        tag = uuid.uuid4().hex[:8]
-        out_name = f"_minor_out_{tag}"
+        tmp = f"_minor_out_{self._fresh_tag(*_FOLD_TEMPS)}"
         # deltas only (snapshot=None): the LWW resolve keeps the
         # winning row per key across the frozen set; tombstones ride
         # along untouched
-        merged = self._read_parts(None, folding)
-        merged.write.mode("overwrite").parquet(os.path.join(self.path, out_name))
-        with self._mlock:
-            m2 = self._read_manifest()
-            version = m2["version"] + 1
-            dm = f"dm{version:08d}"
-            final = os.path.join(self.path, dm)
-            if os.path.isdir(final):  # crash leftover, never committed
-                shutil.rmtree(final)
-            os.rename(os.path.join(self.path, out_name), final)
-            # same one-cycle-late deletion discipline as major folds
-            for d in m2.get("trash", []):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-            m2["version"] = version
-            # merged dir REPLACES the frozen set, ahead of any deltas
-            # appended mid-merge (list order is cosmetic — the read
-            # resolve orders by (ts, seq), never by position)
-            m2["deltas"] = [dm] + [d for d in m2["deltas"] if d not in folding]
-            m2["trash"] = list(folding)
-            stats = _file_stats(final)
-            by = m2.setdefault("delta_rows_by_dir", {})
-            for d in folding:
-                by.pop(d, None)
-            by[dm] = _rows_of(stats)
-            m2["commits"].append(
-                {
-                    "version": version,
-                    "epoch_id": None,
-                    "op": "compact-minor",
-                    "dir": dm,
-                    "wall_s": round(time.time() - t0, 3),
-                    "folded": len(folding),
-                    "files": stats,
-                }
-            )
-            self._commit_manifest(m2)
+        self._read_parts(None, folding).write.parquet(os.path.join(self.path, tmp))
+        self._publish(
+            tmp, "dm", "compact-minor", t0, folded=folding, record={"folded": len(folding)}
+        )
 
     def _compact_locked_body(self, strategy: str) -> None:
         # freeze the fold's inputs; appends landing mid-fold stay out
+        # (only folds change the base, and _fold_lock serializes them)
         with self._mlock:
             m = self._read_manifest()
-            folding = list(m["deltas"])
-            base_at_start = m["snapshot"]
+        folding, base = list(m["deltas"]), m["snapshot"]
         if not folding:
             return
         t0 = time.time()
-        # sweep dirs a crashed previous fold left behind (the manifest
-        # never references them, so they are pure leakage — at
-        # millions of compactions an unswept orphan per crash adds
-        # up); safe here: _fold_lock guarantees no other fold is in
-        # flight, so any temp dir found is a crash leftover. Also
-        # swept: v-dirs the commit log never recorded (a fold that
-        # crashed between its rename and its manifest commit) — they
-        # would otherwise leak forever and could shadow a future
-        # version number.
-        legit = self._snapshot_versions()
-        trash_now = set(m.get("trash", []))
-        referenced_deltas = set(folding) | trash_now
-        v_at_start = m["version"]
-        for e in os.scandir(self.path):
-            if not e.is_dir():
-                continue
-            if (
-                e.name.startswith("_compact_winners_")
-                or e.name.startswith("_compact_out_")
-                or e.name.startswith("_minor_out_")
-            ):
-                shutil.rmtree(e.path, ignore_errors=True)
-            elif (
-                e.name.startswith("v")
-                and e.name[1:].isdigit()
-                and int(e.name[1:]) not in legit
-                and e.name not in trash_now
-                and e.name != base_at_start
-            ):
-                shutil.rmtree(e.path, ignore_errors=True)
-            elif e.name.startswith("d") and e.name not in referenced_deltas:
-                # orphaned delta: a delta write that crashed before
-                # its manifest commit AND whose label was then skipped
-                # by the replay (a concurrent fold bumped the version
-                # in between), or a pre-upgrade random-suffixed label.
-                # Safe to sweep only when the label's version is
-                # STRICTLY below the fold-start manifest version: an
-                # in-flight merge's label is entry_version+1, and at
-                # most ONE fold commit can land between that entry and
-                # this fold's manifest read (folds serialize; merges
-                # are sequential), so the in-flight label is always
-                # ≥ v_at_start — a dir still being written is never
-                # touched, while a genuine orphan's label has been
-                # overtaken by at least one later commit.
-                # "d<version>" epoch deltas and "dm<version>" minor
-                # merges share the sweep rule
-                digits = e.name.lstrip("dm").split("-", 1)[0]
-                if digits.isdigit() and int(digits) < v_at_start:
-                    shutil.rmtree(e.path, ignore_errors=True)
+        tag = self._fresh_tag(*_FOLD_TEMPS)
         if strategy == "auto":
             def _dir_bytes(sub: str) -> int:
                 d = os.path.join(self.path, sub)
@@ -1157,87 +1078,27 @@ class SnapshotTable:
                     total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
                 return total
 
-            base_b = _dir_bytes(base_at_start) if base_at_start is not None else 0
+            base_b = _dir_bytes(base) if base is not None else 0
             delta_b = sum(_dir_bytes(d) for d in folding)
             strategy = "bucketed" if base_b > 4 * delta_b else "global"
-        if strategy == "bucketed" and base_at_start is not None:
-            # a legacy flat base (pre-bucket-dir layout) carries no
-            # trustworthy bucket identity — fold it globally once;
-            # the rewrite emits bucket dirs and later folds go
-            # incremental
-            if not any(
-                e.is_dir() and e.name.startswith("_bucket=")
-                for e in os.scandir(os.path.join(self.path, base_at_start))
-            ):
-                strategy = "global"
+        if strategy == "bucketed" and base is not None and m["base_n_buckets"] != self.n_buckets:
             # rebucketing guard (ADVICE r4): the base was written with
             # a DIFFERENT modulus than this handle's n_buckets — a
             # bucketed zip would pair mismatched key spaces (same key,
             # different bucket id under the two moduli) and the
-            # task-local LWW would keep zombie duplicates. Also taken
-            # when the manifest predates modulus recording (None):
-            # the dirs' modulus is then unprovable. One global fold
-            # rewrites the base under the new modulus and records it;
-            # later folds go incremental again.
-            elif m["base_n_buckets"] != self.n_buckets:
-                strategy = "global"
-        tag = uuid.uuid4().hex[:8]
+            # task-local LWW would keep zombie duplicates. One global
+            # fold rewrites the base under the new modulus and records
+            # it; later folds go incremental again.
+            strategy = "global"
         if strategy == "bucketed":
-            out_name = self._compact_bucketed(base_at_start, folding, tag)
+            tmp = self._compact_bucketed(base, folding, tag)
         else:
-            out_name = f"_compact_out_{tag}"
-            self._write_snapshot(
-                self._read_parts(base_at_start, folding), dirname=out_name
-            )
-        # the swap: re-read the manifest (epoch appends may have
-        # landed mid-fold), publish the new base, drop ONLY the
-        # folded deltas, defer file deletion one fold cycle
-        with self._mlock:
-            m2 = self._read_manifest()
-            version = m2["version"] + 1
-            snap = f"v{version:08d}"
-            final = os.path.join(self.path, snap)
-            if os.path.isdir(final):  # crash leftover from a fold that
-                shutil.rmtree(final)  # renamed but never committed
-            os.rename(os.path.join(self.path, out_name), final)
-            # delete the PREVIOUS fold's trash now: any reader plan
-            # captured before that fold's swap has long finished; a
-            # plan captured before THIS swap may still run, so this
-            # fold's inputs only enter the trash list
-            for d in m2.get("trash", []):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-            trash = folding + (
-                [base_at_start]
-                if base_at_start is not None and base_at_start != snap
-                else []
-            )
-            m2["version"] = version
-            m2["snapshot"] = snap
-            self._record_snapshot_version(m2, version)
-            m2["deltas"] = [d for d in m2["deltas"] if d not in folding]
-            m2["trash"] = trash
-            m2["key_cols"] = list(self.key_cols)
-            m2["base_n_buckets"] = self.n_buckets
-            # per-bucket lineage of the new base (metadata-only footer
-            # read, same as the COW commits) — also feeds the
-            # compact_ratio trigger's base row count
-            stats = _file_stats(os.path.join(self.path, snap))
-            m2["base_rows"] = _rows_of(stats)
-            by = m2.setdefault("delta_rows_by_dir", {})
-            for d in folding:
-                by.pop(d, None)
-            m2["commits"].append(
-                {
-                    "version": version,
-                    "epoch_id": None,
-                    "op": "compact",
-                    "strategy": strategy,
-                    "wall_s": round(time.time() - t0, 3),
-                    "folded": len(folding),
-                    "files": stats,
-                }
-            )
-            self._commit_manifest(m2)
+            tmp = f"_compact_out_{tag}"
+            self._write_snapshot(self._read_parts(base, folding), tmp)
+        self._publish(
+            tmp, "v", "compact", t0, folded=folding,
+            record={"strategy": strategy, "folded": len(folding)},
+        )
 
     # --- background compaction ---------------------------------------------
     def _spawn_compact(self, minor: bool = False) -> None:

@@ -303,34 +303,6 @@ def _from_struct(feed: DataFrame, src: str) -> DataFrame:
     )
 
 
-def normalize_lens(feed: DataFrame) -> DataFrame:
-    return _from_struct(feed, "lens")
-
-
-def normalize_wos(feed: DataFrame) -> DataFrame:
-    return _from_struct(feed, "wos")
-
-
-def normalize_scopus(feed: DataFrame) -> DataFrame:
-    return _from_struct(feed, "scopus")
-
-
-def normalize_scielo(feed: DataFrame) -> DataFrame:
-    return _from_struct(feed, "scielo")
-
-
-def normalize_scholar(feed: DataFrame) -> DataFrame:
-    return _from_struct(feed, "scholar")
-
-
-def normalize_oadoi(feed: DataFrame) -> DataFrame:
-    return _from_struct(feed, "oadoi")
-
-
-def normalize_doaj(feed: DataFrame) -> DataFrame:
-    return _from_struct(feed, "doaj")
-
-
 NORMALIZERS = {src: (lambda f, s=src: _from_struct(f, s)) for src in SCHEMAS}
 
 

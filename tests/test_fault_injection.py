@@ -1,11 +1,13 @@
-"""Fault injection: a crash between the snapshot/delta write and the
+"""Fault injection: a crash between a write's versioned dir and the
 atomic manifest swap must leave the table readable at the OLD version
-and the retried epoch must apply exactly once (SURVEY.md §7 "What's
+and the retried write must apply exactly once (SURVEY.md §7 "What's
 hard" #1)."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
+import re
 
 import pytest
 
@@ -21,12 +23,51 @@ def ev(seq, op, conv, turn, text, t):
     return (seq, op, conv, turn, "user", text, None, ts(t), "lens")
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_crash_before_manifest_swap_then_retry(spark, tmp_path, mode, monkeypatch):
-    t = SnapshotTable(spark, str(tmp_path / f"t-{mode}"), n_buckets=2, mode=mode)
-    t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "v1", 0)], EVENT_SCHEMA), epoch_id=0)
+def _leftovers(t: SnapshotTable) -> list[str]:
+    """Dirs no finished write may leave behind: temp dirs, and
+    versioned dirs the manifest does not reference."""
+    m = t._read_manifest()
+    live = {m["snapshot"], *m["deltas"], *m["trash"]}
+    live.update(f"v{v:08d}" for v in m["snapshot_log"])
+    return sorted(
+        e.name
+        for e in os.scandir(t.path)
+        if e.is_dir()
+        and (e.name.startswith("_") or (re.fullmatch(r"(v|d|dm)\d{8}", e.name) and e.name not in live))
+    )
 
-    # crash AFTER data files land but BEFORE the manifest pointer swap
+
+#: writer → (table mode, prefix of the versioned dir it publishes,
+#: prefix of its temp dir)
+WRITERS = {
+    "cow": ("cow", "v", "_merge_out_"),
+    "mor": ("mor", "d", "_merge_out_"),
+    "compact_minor": ("mor", "dm", "_minor_out_"),
+    "compact": ("mor", "v", "_compact_out_"),
+}
+
+
+@pytest.mark.parametrize("writer", list(WRITERS))
+def test_crash_before_manifest_swap_then_retry(spark, tmp_path, writer, monkeypatch):
+    """Every writer — COW merge, MOR delta merge, minor fold, major
+    fold — crashes after its versioned dir lands but before the
+    manifest swap: the old state reads back, the leftover is
+    invisible, the retry applies once, and the next write of that
+    kind leaves nothing behind."""
+    mode, prefix, temp = WRITERS[writer]
+    t = SnapshotTable(spark, str(tmp_path / f"t-{writer}"), n_buckets=2, mode=mode, compact_every=100)
+    t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "v1", 0)], EVENT_SCHEMA), epoch_id=0)
+    batch = spark.createDataFrame([ev(1, "update", "c1", 0, "v2", 10)], EVENT_SCHEMA)
+    if writer in ("cow", "mor"):
+        def write():
+            return t.merge(batch, epoch_id=1)
+    else:
+        t.merge(batch, epoch_id=1)  # two deltas to fold
+        write = getattr(t, writer)
+    before_manifest = t._read_manifest()
+    before = [r.text for r in t.read().collect()]
+
+    # crash AFTER the versioned dir lands but BEFORE the manifest swap
     real_commit = SnapshotTable._commit_manifest
     calls = {"n": 0}
 
@@ -35,22 +76,40 @@ def test_crash_before_manifest_swap_then_retry(spark, tmp_path, mode, monkeypatc
         raise OSError("simulated crash before manifest swap")
 
     monkeypatch.setattr(SnapshotTable, "_commit_manifest", crashing)
-    batch = spark.createDataFrame([ev(1, "update", "c1", 0, "v2", 10)], EVENT_SCHEMA)
     with pytest.raises(OSError):
-        t.merge(batch, epoch_id=1)
+        write()
     assert calls["n"] == 1
-
-    # table still reads the OLD committed state (snapshot isolation);
-    # the orphaned data directory is invisible
     monkeypatch.setattr(SnapshotTable, "_commit_manifest", real_commit)
-    assert [r.text for r in t.read().collect()] == ["v1"]
-    assert t.committed_epochs() == {0}
 
-    # the streaming layer retries the epoch: applies exactly once
-    assert t.merge(batch, epoch_id=1) is True
+    # the table still reads the OLD committed state (snapshot
+    # isolation); the renamed, never-committed dir is invisible
+    assert t._read_manifest() == before_manifest
+    assert [r.text for r in t.read().collect()] == before
+    assert _leftovers(t) == [f"{prefix}{before_manifest['version'] + 1:08d}"]
+
+    # the retry applies exactly once
+    if writer in ("cow", "mor"):
+        assert t.committed_epochs() == {0}
+        assert write() is True
+        assert write() is False  # a second retry is the ledger no-op
+    else:
+        write()
+        m = t._read_manifest()
+        op = {"compact_minor": "compact-minor", "compact": "compact"}[writer]
+        assert sum(c["op"] == op for c in t.history()) == 1
+        assert m["deltas"] == ([f"dm{m['version']:08d}"] if writer == "compact_minor" else [])
     assert [r.text for r in t.read().collect()] == ["v2"]
-    # a second retry is the ledger no-op
-    assert t.merge(batch, epoch_id=1) is False
+    assert t.committed_epochs() == {0, 1}
+
+    # the next write of that kind leaves no leftovers, including a
+    # temp dir an earlier write of that kind crashed in
+    os.makedirs(os.path.join(t.path, f"{temp}deadbeef"))
+    for e in (2, 3):
+        t.merge(spark.createDataFrame([ev(e, "insert", f"c{e}", 0, "x", e)], EVENT_SCHEMA), epoch_id=e)
+    if writer not in ("cow", "mor"):
+        write()
+    assert _leftovers(t) == []
+    assert sorted(r.conv_id for r in t.read().collect()) == ["c1", "c2", "c3"]
 
 
 def test_process_kill_mid_async_fold_then_restart(spark, tmp_path):

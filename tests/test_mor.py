@@ -259,31 +259,35 @@ def test_compact_overwrites_crash_leftover_version_dir(spark, tmp_path):
     assert t._read_manifest()["snapshot"] == f"v{v + 1:08d}"
 
 
-def test_lookup_skips_pruning_when_modulus_unrecorded(spark, tmp_path):
-    """Code-review r5: a legacy manifest (no base_n_buckets) with
-    bucket dirs must NOT prune with the handle's n_buckets guess —
-    skip pruning (correct, unpruned) until a fold records the
-    modulus."""
+def test_manifest_missing_protocol_field_raises(spark, tmp_path):
+    """A manifest missing a field the commit protocol always writes —
+    ``snapshot_log``; ``base_n_buckets``/``base_rows`` with a base;
+    ``delta_rows_by_dir`` with deltas — is refused with a ValueError
+    naming the table and the field. Reading on would be silently
+    wrong: with no recorded modulus ``lookup`` would prune with a
+    ``None`` modulus and return nothing."""
     import json
     import os
 
-    pdf = make_events(800, n_convs=8, seed=12)
-    t = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4, mode="mor", compact_every=100)
-    t.merge(spark.createDataFrame(pdf), epoch_id=0)
+    import pytest
+
+    path = str(tmp_path / "t")
+    t = SnapshotTable(spark, path, n_buckets=4, mode="mor", compact_every=100)
+    t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "a", 0)], EVENT_SCHEMA), epoch_id=0)
     t.compact(strategy="bucketed")
-    key_row = t.read().limit(1).collect()[0]
-    # simulate a pre-round-5 manifest: erase the recorded modulus
-    mp = os.path.join(str(tmp_path / "t"), "_manifest.json")
+    t.merge(spark.createDataFrame([ev(1, "insert", "c2", 0, "b", 1)], EVENT_SCHEMA), epoch_id=1)
+    mp = os.path.join(path, "_manifest.json")
     with open(mp) as f:
-        m = json.load(f)
-    m["base_n_buckets"] = None
+        good = json.load(f)
+    assert good["snapshot"] and good["deltas"]
+    for field in ("snapshot_log", "base_n_buckets", "base_rows", "delta_rows_by_dir"):
+        with open(mp, "w") as f:
+            json.dump({k: v for k, v in good.items() if k != field}, f)
+        with pytest.raises(ValueError, match=f"{path}.*{field}"):
+            SnapshotTable(spark, path, n_buckets=4, mode="mor")
     with open(mp, "w") as f:
-        json.dump(m, f)
-    # reopen with a DIFFERENT n_buckets: a modulus guess would prune
-    # the wrong _bucket dir and return empty
-    t2 = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=16, mode="mor", compact_every=100)
-    got = t2.lookup(key_row.conv_id, key_row.turn_idx).collect()
-    assert len(got) == 1 and got[0].text == key_row.text
+        json.dump(good, f)
+    assert SnapshotTable(spark, path, n_buckets=4, mode="mor").lookup("c1", 0).count() == 1
 
 
 def test_time_travel_rejects_uncommitted_version_dir(spark, tmp_path):
@@ -311,42 +315,57 @@ def test_time_travel_rejects_uncommitted_version_dir(spark, tmp_path):
 
 
 def test_crashed_delta_write_self_heals_on_replay(spark, tmp_path):
-    """Code-review r5: a delta write that crashed pre-commit leaves a
-    partial dir under a DETERMINISTIC label; the epoch's re-delivery
-    recomputes the same label and overwrites it (no orphan leak)."""
+    """A delta write that crashed pre-commit leaves a partial
+    ``_merge_out_*`` temp dir (crash mid-write) or a renamed,
+    never-committed ``d<next version>`` dir (crash before the manifest
+    swap). Reads never see either; the epoch's re-delivery sweeps the
+    temp dir and replaces the stale versioned dir (no orphan leak)."""
     import os
 
     t = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor", compact_every=100)
     v = t._read_manifest()["version"]
+    partial = str(tmp_path / "t" / "_merge_out_deadbeef")
     stale = str(tmp_path / "t" / f"d{v + 1:08d}")
-    os.makedirs(stale)
-    with open(os.path.join(stale, "part-junk.parquet"), "w") as f:
-        f.write("partial")
+    for d in (partial, stale):
+        os.makedirs(d)
+        with open(os.path.join(d, "part-junk.parquet"), "w") as f:
+            f.write("partial")
     t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "a", 0)], EVENT_SCHEMA), epoch_id=0)
     assert sorted_state(t) == [("c1", 0, "a")]
+    assert not os.path.exists(partial)
+    assert t._read_manifest()["deltas"] == [f"d{v + 1:08d}"]
     assert not os.path.exists(os.path.join(stale, "part-junk.parquet"))
 
 
 def test_fold_sweeps_orphaned_delta_dirs_but_not_live_ones(spark, tmp_path):
-    """Code-review r5 (2nd pass): a delta dir whose label was
-    overtaken by later commits and that the manifest never references
-    is a crash orphan — the fold sweeps it; manifest-referenced
-    deltas and labels at/above the fold-start version are never
-    touched."""
+    """Unreferenced versioned dirs are crash leftovers whatever their
+    number — only ``_publish`` creates versioned names, and only when
+    it commits them — so the next commit sweeps them by manifest
+    membership alone. Manifest-referenced deltas are never touched,
+    and a fold sweeps only its own temp prefixes: an in-flight merge's
+    ``_merge_out_*`` dir survives a concurrent fold."""
     import os
 
     t = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor", compact_every=100)
     t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "a", 0)], EVENT_SCHEMA), epoch_id=0)
     t.merge(spark.createDataFrame([ev(1, "insert", "c2", 0, "b", 1)], EVENT_SCHEMA), epoch_id=1)
-    # orphan with an overtaken label (version is now ≥ 2)
-    orphan = str(tmp_path / "t" / "d00000001-deadbe")
-    os.makedirs(orphan)
-    # same-or-higher label: could be an in-flight write — must survive
-    inflight = str(tmp_path / "t" / f"d{t._read_manifest()['version'] + 1:08d}")
+    live = t._read_manifest()["deltas"]
+    v = t._read_manifest()["version"]
+    # orphans below and above the current version
+    orphans = [str(tmp_path / "t" / n) for n in ("d00000000", f"d{v + 5:08d}", f"dm{v + 6:08d}")]
+    for d in orphans:
+        os.makedirs(d)
+    inflight = str(tmp_path / "t" / "_merge_out_cafebabe")
     os.makedirs(inflight)
+    with open(os.path.join(inflight, "part-0.parquet"), "w") as f:
+        f.write("being written")
+    assert sorted_state(t) == [("c1", 0, "a"), ("c2", 0, "b")]  # reads ignore them
     t.compact(strategy="global")
-    assert not os.path.exists(orphan)
-    assert os.path.exists(inflight)
+    assert not any(os.path.exists(d) for d in orphans)
+    assert os.path.exists(os.path.join(inflight, "part-0.parquet"))
+    # the folded deltas wait one fold cycle in trash
+    assert t._read_manifest()["trash"] == live
+    assert all(os.path.isdir(str(tmp_path / "t" / d)) for d in live)
     assert sorted_state(t) == [("c1", 0, "a"), ("c2", 0, "b")]
 
 
@@ -401,8 +420,7 @@ def test_concurrent_reads_and_sync_compacts_during_async_merges(spark, tmp_path)
 def test_concurrent_same_epoch_delivery_applies_once(spark, tmp_path):
     """Two threads delivering the SAME epoch concurrently: exactly
     one applies. Without merge-level serialization both pass the
-    ledger check, race overwrites of the same deterministic delta
-    dir and double-commit the epoch (round-5 review)."""
+    ledger check and double-commit the epoch (round-5 review)."""
     import threading
 
     for mode in ("mor", "cow"):
@@ -521,8 +539,8 @@ def test_minor_crash_leftovers_swept_and_harmless(spark, tmp_path):
     """A minor merge that crashes mid-flight leaves either a
     _minor_out_* temp dir or a renamed-but-never-committed dm* dir.
     Neither is referenced by the manifest, so reads ignore them; the
-    next major fold's sweep removes both (the dm orphan only once its
-    version label has been overtaken — same rule as epoch deltas)."""
+    next minor fold sweeps its own temp prefix and its commit sweeps
+    the unreferenced dm dir."""
     import os
 
     pdf = make_events(1200, n_convs=30, seed=7)
@@ -535,24 +553,28 @@ def test_minor_crash_leftovers_swept_and_harmless(spark, tmp_path):
     t.merge(df.filter("seq >= 600"), epoch_id=1)
     before = sorted_state(t)
 
-    # crash artifacts: temp output + an uncommitted dm dir whose
-    # version label is already stale (0 < current manifest version)
-    os.makedirs(str(tmp_path / "t" / "_minor_out_deadbeef"))
-    os.makedirs(str(tmp_path / "t" / "dm00000000"))
+    v = t._read_manifest()["version"]
+    temp = str(tmp_path / "t" / "_minor_out_deadbeef")
+    ghost = str(tmp_path / "t" / f"dm{v:08d}")
+    os.makedirs(temp)
+    os.makedirs(ghost)
     assert sorted_state(t) == before  # reads never see orphans
 
-    t.compact(strategy="global")
-    assert not os.path.exists(str(tmp_path / "t" / "_minor_out_deadbeef"))
-    assert not os.path.exists(str(tmp_path / "t" / "dm00000000"))
+    t.compact_minor()
+    assert not os.path.exists(temp)
+    assert not os.path.exists(ghost)
+    assert t._read_manifest()["deltas"] == [f"dm{v + 1:08d}"]
     assert sorted_state(t) == before
 
 
 def test_minor_tier_live_in_fixed_interval_mode(spark, tmp_path):
-    """Round-7 ADVICE fix: ``compact_minor_every`` fires in the
-    ratio-LESS (fixed-interval) configuration too — it used to be
-    silently inert without ``compact_ratio``, leaving unbounded delta
-    fan-in between the ``compact_every`` majors. Pins: minors fire,
-    fan-in stays bounded, and state matches a compaction-free twin."""
+    """``compact_minor_every`` fires in the ratio-LESS (fixed-interval)
+    configuration too, under the same fold rule as ratio mode: the
+    first due minor finds no base and runs as the bootstrap major
+    (otherwise minors would keep the delta count below
+    ``compact_every`` and no base would ever form); later due minors
+    merge deltas only. Fan-in stays bounded, and state matches a
+    compaction-free twin."""
     pdf = make_events(3000, n_convs=200, seed=45, delete_rate=0.1)
     df = spark.createDataFrame(pdf)
     plain = SnapshotTable(
@@ -567,15 +589,12 @@ def test_minor_tier_live_in_fixed_interval_mode(spark, tmp_path):
         batch = df.filter((F.col("seq") >= e * per) & (F.col("seq") < (e + 1) * per))
         plain.merge(batch, epoch_id=e)
         tiered.merge(batch, epoch_id=e)
-        import json as _json
-        import os as _os
-
-        man = _json.loads(
-            open(_os.path.join(str(tmp_path / "ti"), "_manifest.json")).read()
-        )
-        assert len(man["deltas"]) <= 2, (e, man["deltas"])
-    ops = [c["op"] for c in tiered.history()]
-    assert "compact-minor" in ops and "compact" not in ops
+        assert len(tiered._read_manifest()["deltas"]) <= 2, e
+    folds = [c["op"] for c in tiered.history() if c["op"].startswith("compact")]
+    # epoch 1: bootstrap major; epochs 3, 4, 5: minors (the merged dm
+    # dir counts as a live delta)
+    assert folds == ["compact"] + ["compact-minor"] * 3, folds
+    assert tiered._read_manifest()["snapshot"] is not None
     assert sorted_state(plain) == sorted_state(tiered)
 
 

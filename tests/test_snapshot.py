@@ -59,6 +59,23 @@ def test_snapshot_isolation_reader_sees_old_version(spark, tmp_table_dir):
     assert t.read().collect()[0].text == "v2"
 
 
+def test_cow_keeps_the_last_snapshots_for_time_travel(spark, tmp_table_dir):
+    """A COW table keeps the last ``SNAPSHOTS_KEPT`` base snapshots on
+    disk as time-travel targets; each commit sweeps older ones."""
+    import os
+
+    import pytest
+
+    t = SnapshotTable(spark, tmp_table_dir, n_buckets=2)
+    for e in range(6):
+        t.merge(events_df(spark, [ev(e, "update", "c1", 0, f"v{e}", e)]), epoch_id=e)
+    on_disk = sorted(d for d in os.listdir(tmp_table_dir) if d.startswith("v"))
+    assert on_disk == [f"v{v:08d}" for v in range(3, 7)]
+    assert t.read(version=3).collect()[0].text == "v2"
+    with pytest.raises(FileNotFoundError, match="expired"):
+        t.read(version=2)
+
+
 def test_schema_evolution_add_column(spark, tmp_table_dir):
     t = SnapshotTable(spark, tmp_table_dir, n_buckets=2)
     t.merge(events_df(spark, [ev(0, "insert", "c1", 0, "a", 0)]), epoch_id=0)
