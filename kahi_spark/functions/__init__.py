@@ -4,7 +4,6 @@ from kahi_spark.functions.text import (
     clean_text_expr,
     fingerprint_expr,
     fold_text_pandas,
-    token_count_expr,
 )
 from kahi_spark.functions.roles import ROLE_MAP, canonical_role_expr
 from kahi_spark.functions.tools import extract_tool_expr
@@ -13,7 +12,6 @@ __all__ = [
     "clean_text_expr",
     "fold_text_pandas",
     "fingerprint_expr",
-    "token_count_expr",
     "ROLE_MAP",
     "canonical_role_expr",
     "extract_tool_expr",

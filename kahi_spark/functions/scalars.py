@@ -21,15 +21,6 @@ def safe_int_expr(col: Column | str) -> Column:
     return F.coalesce(direct, retry)
 
 
-def parse_iso_ts_expr(col: Column | str) -> Column:
-    """F9: ISO-8601 string → timestamp (``Lens.py:97``). try_-variant:
-    under Spark 4 ANSI a malformed (or offset-less) string must yield
-    NULL — the F8 retry convention — not a SparkDateTimeException
-    that kills the job (round-5 review finding)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX"))
-
-
 #: F12: country-name → ISO alpha-2, including the reference's
 #: hardcoded aliases (``Scopus.check_country``, Scopus.py:159-213).
 COUNTRY_ALIASES: dict[str, str] = {
@@ -79,19 +70,6 @@ def issn_format_expr(col: Column | str) -> Column:
     return F.concat(F.substring(bare, 1, 4), F.lit("-"), F.substring(bare, 5, 4))
 
 
-def id_from_composite_expr(col: Column | str, sep: str = ":", index: int = 1) -> Column:
-    """F15: 'WOS:000123' → '000123' (``WebOfScience.py:163``).
-
-    try_element_at: an input WITHOUT the separator has fewer parts
-    than ``index+1``, and under Spark 4 ANSI a plain element_at throws
-    on out-of-bounds — one malformed id must yield NULL, not kill the
-    job (round-5 review finding). NOTE ``sep`` is a Java REGEX
-    (F.split semantics) — the default ':' is literal-safe; escape
-    metacharacters when passing others."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_element_at(F.split(c, sep), F.lit(index + 1))
-
-
 def name_parts_expr(col: Column | str) -> dict[str, Column]:
     """F16: full name → last / first / initials
     (``Scopus.py:396-404``: 'Last, First M.' convention; here the
@@ -105,10 +83,3 @@ def name_parts_expr(col: Column | str) -> dict[str, Column]:
         "", F.transform(toks, lambda t: F.upper(F.substring(t, 1, 1)))
     )
     return {"first_name": first, "last_name": last, "initials": initials}
-
-
-def capitalize_expr(col: Column | str) -> Column:
-    """F3: per-word capitalization (``WebOfScience.py:238-245``).
-    ``initcap`` is the Catalyst-native equivalent."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.initcap(F.lower(c))

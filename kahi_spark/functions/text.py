@@ -80,24 +80,6 @@ def fold_text_pandas(s: pd.Series) -> pd.Series:
     return out.str.strip(" ").str.lower()
 
 
-def token_count_expr(col: Column | str) -> Column:
-    """Whitespace token count (SURVEY.md A8 analogue:
-    ``len(split)`` counts, reference ``Scopus.py:138-140``).
-    NULL/empty → 0. JVM-side.
-
-    EXACT semantics (mirrored bit-for-bit by the DuckDB oracles,
-    which use the same trim+split): trim removes plain SPACES only,
-    so text whose first/last character is a tab/newline counts one
-    leading/trailing empty token more than Python's ``len(s.split())``
-    would — a documented convention, consistent across engine and
-    oracle, not Python-split parity."""
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.trim(c)
-    return F.when(
-        t.isNull() | (t == ""), F.lit(0)
-    ).otherwise(F.size(F.split(t, r"\s+"))).cast("int")
-
-
 def fingerprint_expr(col: Column | str) -> Column:
     """Document fingerprint: md5 of the lower-cased,
     whitespace-collapsed text. Deterministic across engines

@@ -5,7 +5,6 @@ from kahi_spark.operators.custom import conversation_stats
 from kahi_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_pairs,
-    minhash_signatures,
     shingle_df,
     simhash32_neardup_pairs,
     simhash_neardup_pairs,
@@ -34,14 +33,7 @@ from kahi_spark.operators.merge import (
     priority_merge,
     reduce_events_to_state,
 )
-from kahi_spark.operators.multimodal import (
-    decode_image_batch,
-    decode_image_pixels,
-    decode_video_frames,
-    frame_sample_plan,
-    resize_images,
-    sample_audio_frames,
-)
+from kahi_spark.operators.multimodal import decode_image_batch
 from kahi_spark.operators.similarity import (
     cosine_pairs,
     ivf_centroids,
@@ -57,7 +49,6 @@ __all__ = [
     "conversation_stats",
     "jaccard_pairs",
     "minhash_lsh_pairs",
-    "minhash_signatures",
     "shingle_df",
     "simhash32_neardup_pairs",
     "simhash_neardup_pairs",
@@ -81,11 +72,6 @@ __all__ = [
     "merge_changes_into_state",
     "normalize_events",
     "decode_image_batch",
-    "decode_image_pixels",
-    "decode_video_frames",
-    "frame_sample_plan",
-    "resize_images",
-    "sample_audio_frames",
     "priority_merge",
     "reduce_events_to_state",
     "cosine_pairs",

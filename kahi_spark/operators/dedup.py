@@ -237,25 +237,6 @@ def _lsh_bands_sql(sig: str, n_bands: int, rows: int) -> str:
     return f"transform(sequence(0, {n_bands - 1}), b -> xxhash64({slots}))"
 
 
-def minhash_signatures(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    seed: int = 42,
-    portable: bool = False,
-) -> DataFrame:
-    """Wide MinHash signature (``mh_0`` … ``mh_{n-1}``) per doc of an
-    exploded shingle frame: one aggregation regathers each doc's
-    shingles, then ``_minhash_sql`` signs them (min is order- and
-    duplicate-insensitive, so the values equal a per-slot ``min``
-    aggregate's). Docs given text, not shingles, should use
-    ``minhash_bands`` — it signs each row in place, with no shuffle."""
-    sig = shingles.groupBy(id_col).agg(F.collect_list("shingle").alias("_sh"))
-    return sig.select(
-        F.col(id_col), F.expr(_minhash_sql("_sh", n_hashes, seed, portable)).alias("_sig")
-    ).selectExpr(id_col, *[f"_sig[{i}] AS mh_{i}" for i in range(n_hashes)])
-
-
 def minhash_bands(
     docs: DataFrame,
     id_col: str = "doc_id",

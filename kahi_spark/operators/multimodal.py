@@ -1,24 +1,20 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` with
-typed metadata (training-data pipeline ops).
+typed metadata, decoded by a container-header parse.
 
-The Spark-side plumbing — schema, Arrow batch shape, ``mapInPandas``
-signatures, partition sizing — is real and tested. Two decode paths:
+``decode_image_batch`` reads each payload's container header in a
+pure-Python ``mapInPandas`` pass (no codec libraries):
 
-* ``real_codec=True`` — a pure-Python CONTAINER-HEADER parser
-  (PNG IHDR, BMP BITMAPINFOHEADER, GIF logical screen descriptor,
-  WAV fmt chunk): extracts real width/height (sample-rate/channels
-  for WAV) from real payload bytes with no external libraries.
-  PCM audio samples (``sample_audio_frames``), PNG rgb8 / BMP
-  24bpp / GIF image pixels (``decode_image_pixels``: zlib inflate
-  + the five spec unfilters, padded-BGR rows, a full pure-Python
-  GIF-LZW decoder + palette lookup) and uncompressed rgb24 video
-  pixels (``decode_video_frames`` via the full stsd/stsz/stsc/stco
-  sample walk) decode for real too; the ONE remaining stub is true
-  DSP codecs (JPEG/H.264/AAC …), which need codec libs
-  (PIL/libvips/torchaudio) this container lacks — swapping them in
-  only changes the per-payload branch of the decode operators.
-* default — a deterministic fake decoder kept for synthetic-payload
-  tests and throughput benchmarks of the Arrow path.
+* PNG  — IHDR width/height
+* BMP  — BITMAPINFOHEADER width/|height| (top-down BMPs store it negative)
+* GIF  — logical screen width/height
+* WAV  — (sample_rate, n_channels) from the ``fmt `` chunk
+* MP4  — track width/height from the ``moov/trak/tkhd`` box walk
+
+and emits (n_bytes, width, height, crc32 checksum) per asset; an
+unknown or truncated container keeps its byte count with NULL dims.
+``make_real_assets``/``expected_real_assets`` build deterministic
+payloads with genuine headers and their construction-time ground
+truth (the ``multimodal_decode`` query and its oracle).
 
 Scale notes: binary payloads make rows wide — ``mapInPandas`` with a
 bounded ``spark.sql.execution.arrow.maxRecordsPerBatch`` keeps Arrow
@@ -33,7 +29,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ASSET_SCHEMA = T.StructType(
@@ -58,27 +53,17 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(payload: bytes | None) -> tuple[int | None, int | None, int | None]:
-    """Deterministic stand-in for a real image decode: derives fake
-    (width, height) from the byte content. REAL codecs go here."""
-    if payload is None:
-        return None, None, None
-    n = len(payload)
-    h = 0
-    for b in payload[:64]:
-        h = (h * 131 + b) & 0x7FFFFFFF
-    return n, 16 + h % 1024, 16 + (h // 1024) % 1024
-
-
 def _parse_header(payload: bytes | None) -> tuple[int | None, int | None, int | None]:
     """Real container-header parse, pure Python (no external libs).
 
     Returns (n_bytes, width, height):
     * PNG  — IHDR width/height, big-endian at offsets 16/20
-    * BMP  — BITMAPINFOHEADER width/height, little-endian at 18/22
+    * BMP  — BITMAPINFOHEADER width/|height|, little-endian at 18/22
+      (a negative height marks a top-down row order, not a size)
     * GIF  — logical screen width/height, little-endian at 6/8
     * WAV  — (sample_rate, n_channels) as the dimensional analogue
-    * unknown container → (n_bytes, NULL, NULL)
+    * MP4  — tkhd track width/height (``_mp4_dims``)
+    * unknown or truncated container → (n_bytes, NULL, NULL)
     """
     if payload is None:
         return None, None, None
@@ -87,7 +72,7 @@ def _parse_header(payload: bytes | None) -> tuple[int | None, int | None, int | 
     if b[:8] == b"\x89PNG\r\n\x1a\n" and n >= 24:
         # require IHDR actually at offset 8 (spec-mandated first
         # chunk; non-standard layouts like Apple CgBI would otherwise
-        # read garbage dims — round-5 review finding)
+        # read garbage dims)
         if b[12:16] != b"IHDR":
             return n, None, None
         return n, int.from_bytes(b[16:20], "big"), int.from_bytes(b[20:24], "big")
@@ -95,15 +80,14 @@ def _parse_header(payload: bytes | None) -> tuple[int | None, int | None, int | 
         return (
             n,
             int.from_bytes(b[18:22], "little"),
-            int.from_bytes(b[22:26], "little", signed=True),
+            abs(int.from_bytes(b[22:26], "little", signed=True)),
         )
     if b[:4] == b"GIF8" and n >= 10:
         return n, int.from_bytes(b[6:8], "little"), int.from_bytes(b[8:10], "little")
     if b[:4] == b"RIFF" and b[8:12] == b"WAVE" and n >= 28:
         # walk RIFF chunks to the actual 'fmt ' chunk instead of
         # assuming it sits at offset 12 — real-world WAVs often lead
-        # with JUNK/LIST/bext padding chunks (round-5 review finding;
-        # same discipline as _wav_data_samples)
+        # with JUNK/LIST/bext padding chunks
         pos = 12
         while pos + 8 <= n:
             cid = b[pos : pos + 4]
@@ -123,12 +107,12 @@ def _parse_header(payload: bytes | None) -> tuple[int | None, int | None, int | 
 def _bmff_find(
     b: bytes, start: int, end: int, path: list[bytes]
 ) -> tuple[int, int] | None:
-    """Shared ISO-BMFF box walk. Handles the spec's size
-    conventions (round-5 review finding — aborting on these missed
-    ``moov`` in real files where ``mdat`` precedes it): size==1 →
-    64-bit largesize follows the type (standard for >4 GiB or
-    streaming-written files); size==0 → box runs to the end of the
-    enclosing span (legal for the last top-level box)."""
+    """ISO-BMFF box walk along ``path``. Handles the spec's size
+    conventions (aborting on these missed ``moov`` in real files where
+    ``mdat`` precedes it): size==1 → 64-bit largesize follows the type
+    (standard for >4 GiB or streaming-written files); size==0 → box
+    runs to the end of the enclosing span (legal for the last
+    top-level box)."""
     pos = start
     while pos + 8 <= end:
         size = int.from_bytes(b[pos : pos + 4], "big")
@@ -158,8 +142,7 @@ def _mp4_dims(b: bytes) -> tuple[int | None, int | None]:
     """Real ISO-BMFF box walk: ``moov`` → ``trak`` → ``tkhd``; track
     width/height are the last 8 bytes of the tkhd payload as 16.16
     fixed-point (same position for tkhd v0 and v1). Pure Python —
-    the container-level analogue of the RIFF chunk walk; pixel
-    decoding would need a codec library and stays out of scope."""
+    the container-level analogue of the RIFF chunk walk."""
     span = _bmff_find(b, 0, len(b), [b"moov", b"trak", b"tkhd"])
     if span is None or span[1] - span[0] < 84:
         return None, None
@@ -170,22 +153,18 @@ def _mp4_dims(b: bytes) -> tuple[int | None, int | None]:
     )
 
 
-def decode_image_batch(df: DataFrame, real_codec: bool = True) -> DataFrame:
+def decode_image_batch(df: DataFrame) -> DataFrame:
     """payload → (n_bytes, width, height, checksum) via mapInPandas.
 
-    Arrow-batched; one Python worker pass over each partition.
-    The DEFAULT parses real container headers (``_parse_header`` —
-    PNG/BMP/GIF/WAV/MP4); ``real_codec=False`` opts into the fake
-    decoder that derives deterministic dims from byte content, for
-    synthetic-payload plumbing tests ONLY (default flipped in round
-    4 so no caller silently gets plausible-looking fake dims)."""
-    parse = _parse_header if real_codec else _fake_decode
+    Arrow-batched; one Python worker pass over each partition, parsing
+    each payload's container header (``_parse_header`` —
+    PNG/BMP/GIF/WAV/MP4)."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             nb, ws, hs, cks = [], [], [], []
             for payload in pdf["payload"]:
-                n, w, h = parse(payload)
+                n, w, h = _parse_header(payload)
                 nb.append(n)
                 ws.append(w)
                 hs.append(h)
@@ -204,675 +183,6 @@ def decode_image_batch(df: DataFrame, real_codec: bool = True) -> DataFrame:
             )
 
     return df.mapInPandas(decode, schema=FEATURE_SCHEMA)
-
-
-def _mp4_frame_count(b: bytes) -> int | None:
-    """REAL frame count from the ``stts`` (time-to-sample) box:
-    moov → trak → mdia → minf → stbl → stts, sum of the entries'
-    sample counts — pure-Python box walk, same machinery as
-    ``_mp4_dims`` (shared ``_bmff_find``)."""
-    span = _bmff_find(
-        b, 0, len(b), [b"moov", b"trak", b"mdia", b"minf", b"stbl", b"stts"]
-    )
-    if span is None or span[1] - span[0] < 8:
-        return None
-    s, e = span
-    n_entries = int.from_bytes(b[s + 4 : s + 8], "big")
-    total, pos = 0, s + 8
-    for _ in range(n_entries):
-        if pos + 8 > e:
-            return None
-        total += int.from_bytes(b[pos : pos + 4], "big")
-        pos += 8  # (sample_count, sample_delta)
-    return total
-
-
-def frame_sample_plan(
-    df: DataFrame, every_n: int = 10, real_codec: bool = True
-) -> DataFrame:
-    """Video frame sampling: one row per sampled frame index.
-
-    The DEFAULT reads the REAL frame count from each MP4's ``stts``
-    box (``_mp4_frame_count``) via mapInPandas — genuine container
-    metadata, 1→N in the same Arrow-batch shape as
-    ``sample_audio_frames``; unparseable payloads emit nothing.
-    Frame PIXELS decode via ``decode_video_frames`` for
-    uncompressed tracks (compressed ones need codec libs this
-    container lacks). ``real_codec=False`` opts into the synthetic
-    size-derived count for fake-payload tests of the explode shape
-    (default flipped in round 4)."""
-    vids = df.filter(F.col("kind") == "video")
-    if not real_codec:
-        n_frames = (F.length(F.col("payload")) / 1000).cast("int") + 1
-        idx = F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        return vids.select("asset_id", F.explode(idx).alias("frame_idx"))
-
-    schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType(), False),
-            T.StructField("frame_idx", T.IntegerType(), False),
-        ]
-    )
-
-    def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs = [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                n = None if payload is None else _mp4_frame_count(bytes(payload))
-                for i in range(0, n or 0, every_n):
-                    ids.append(aid)
-                    idxs.append(i)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.array(ids, dtype="Int64"),
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                }
-            )
-
-    return vids.mapInPandas(plan, schema=schema)
-
-
-def _png_pixels(b: bytes):
-    """REAL PNG pixel decode for 8-bit truecolor, pure stdlib+numpy:
-    chunk walk → IHDR sanity → concatenated IDAT → ``zlib.inflate``
-    → per-row unfilter (all five spec filter types — None/Sub/Up/
-    Average/Paeth). Returns (h, w, 3) uint8 or None for anything but
-    non-interlaced rgb8 (palette/alpha/16-bit stay out of scope).
-    The Sub/Average/Paeth scan is sequential per pixel BY SPEC (each
-    byte's predictor uses the reconstructed left neighbor)."""
-    import numpy as np
-
-    if len(b) < 8 or b[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    pos, w = 8, None
-    h = None
-    idat = b""
-    while pos + 8 <= len(b):
-        ln = int.from_bytes(b[pos : pos + 4], "big")
-        typ = b[pos + 4 : pos + 8]
-        data = b[pos + 8 : pos + 8 + ln]
-        if len(data) < ln:
-            return None
-        if typ == b"IHDR":
-            if ln < 13:
-                return None
-            w = int.from_bytes(data[0:4], "big")
-            h = int.from_bytes(data[4:8], "big")
-            bitdepth, colortype, _comp, _filt, interlace = data[8:13]
-            if bitdepth != 8 or colortype != 2 or interlace != 0:
-                return None
-        elif typ == b"IDAT":
-            idat += data
-        elif typ == b"IEND":
-            break
-        pos += 12 + ln  # len + type + data + crc
-    if not (w and h and idat):
-        return None
-    try:
-        raw = zlib.decompress(idat)
-    except zlib.error:
-        return None
-    stride = w * 3
-    if len(raw) < h * (1 + stride):
-        return None
-    out = np.zeros((h, stride), dtype=np.int64)
-    pos = 0
-    for y in range(h):
-        f = raw[pos]
-        row = np.frombuffer(raw, np.uint8, stride, pos + 1).astype(np.int64)
-        pos += 1 + stride
-        above = out[y - 1] if y else np.zeros(stride, dtype=np.int64)
-        if f == 0:
-            cur = row
-        elif f == 2:
-            cur = (row + above) % 256
-        elif f in (1, 3, 4):
-            cur = np.empty(stride, dtype=np.int64)
-            for i in range(stride):
-                left = cur[i - 3] if i >= 3 else 0
-                up = int(above[i])
-                if f == 1:
-                    pred = left
-                elif f == 3:
-                    pred = (left + up) // 2
-                else:
-                    ul = int(out[y - 1][i - 3]) if (y and i >= 3) else 0
-                    p = left + up - ul
-                    pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                    pred = left if (pa <= pb and pa <= pc) else (up if pb <= pc else ul)
-                cur[i] = (row[i] + pred) % 256
-        else:
-            return None  # invalid filter type
-        out[y] = cur
-    return out.astype(np.uint8).reshape(h, w, 3)
-
-
-def _bmp_pixels(b: bytes):
-    """REAL BMP pixel decode: 24bpp uncompressed BITMAPINFOHEADER —
-    bottom-up (or top-down, negative height) BGR rows padded to 4
-    bytes. Returns (h, w, 3) uint8 RGB or None."""
-    import numpy as np
-
-    if len(b) < 54 or b[:2] != b"BM":
-        return None
-    data_off = int.from_bytes(b[10:14], "little")
-    w = int.from_bytes(b[18:22], "little")
-    h_raw = int.from_bytes(b[22:26], "little", signed=True)
-    bpp = int.from_bytes(b[28:30], "little")
-    compression = int.from_bytes(b[30:34], "little")
-    if bpp != 24 or compression != 0 or w <= 0 or h_raw == 0:
-        return None
-    h = abs(h_raw)
-    row_sz = (w * 3 + 3) // 4 * 4
-    if data_off + row_sz * h > len(b):
-        return None
-    rows = []
-    for y in range(h):
-        src = h - 1 - y if h_raw > 0 else y  # bottom-up unless negative
-        off = data_off + src * row_sz
-        bgr = np.frombuffer(b, np.uint8, w * 3, off).reshape(w, 3)
-        rows.append(bgr[:, ::-1])  # BGR → RGB
-    return np.stack(rows)
-
-
-def _gif_lzw_decode(min_code_size: int, data: bytes) -> list[int] | None:
-    """GIF-flavor LZW (variable code width, LSB-first bit order,
-    clear/end codes, 12-bit cap): data → palette index stream. Pure
-    Python — LZW is a dictionary coder, not a DSP codec, so no
-    external library is involved."""
-    clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-    base = [[i] for i in range(clear)] + [None, None]
-    table = list(base)
-    width = min_code_size + 1
-    out: list[int] = []
-    prev: list[int] | None = None
-    acc = nbits = pos = 0
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                return out  # truncated stream: emit what we have
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = list(base)
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            return out
-        if code < len(table) and table[code] is not None:
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + [prev[0]]  # the KwKwK case
-        else:
-            return None  # corrupt code
-        out.extend(entry)
-        if prev is not None and len(table) < 4096:
-            table.append(prev + [entry[0]])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-
-
-def _gif_lzw_encode(min_code_size: int, indices: list[int]) -> bytes:
-    """Real (dictionary-building) GIF LZW encoder for the fixture
-    builder — so the decoder's growth path is exercised, not just
-    literals. Emits clear, codes, end with growing code width."""
-    clear, end = 1 << min_code_size, (1 << min_code_size) + 1
-    table = {(i,): i for i in range(clear)}
-    next_code = end + 1
-    width = min_code_size + 1
-    acc = nbits = 0
-    out = bytearray()
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    run: tuple[int, ...] = ()
-    for idx in indices:
-        cand = run + (idx,)
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run])
-        if next_code < 4096:
-            table[cand] = next_code
-            # the decoder's dictionary lags one code behind the
-            # encoder's, so the encoder widens when the JUST-ASSIGNED
-            # code equals 1<<width — exactly when the decoder's table
-            # reaches 2^width entries between reads
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            next_code += 1
-        run = (idx,)
-    if run:
-        emit(table[run])
-    emit(end)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_pixels(b: bytes):
-    """REAL GIF pixel decode: logical screen descriptor → global/
-    local color table → first image descriptor → LZW-decompressed
-    index stream → palette lookup. Non-interlaced only. Returns
-    (h, w, 3) uint8 RGB or None."""
-    import numpy as np
-
-    if len(b) < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
-        return None
-    packed = b[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(b, np.uint8, 3 * n, pos).reshape(n, 3)
-        pos += 3 * n
-    while pos < len(b):
-        blk = b[pos]
-        if blk == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            pos += 1
-        elif blk == 0x2C:  # image descriptor
-            if pos + 10 > len(b):
-                return None
-            w = int.from_bytes(b[pos + 5 : pos + 7], "little")
-            h = int.from_bytes(b[pos + 7 : pos + 9], "little")
-            if w <= 0 or h <= 0:
-                return None  # zero-dim: undecodable (match PNG/BMP rejection)
-            ipacked = b[pos + 9]
-            pos += 10
-            pal = gct
-            if ipacked & 0x80:
-                n = 2 << (ipacked & 0x07)
-                pal = np.frombuffer(b, np.uint8, 3 * n, pos).reshape(n, 3)
-                pos += 3 * n
-            if ipacked & 0x40 or pal is None or pos >= len(b):
-                return None  # interlaced / no palette
-            min_code = b[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(b) and b[pos] != 0:
-                ln = b[pos]
-                data.extend(b[pos + 1 : pos + 1 + ln])
-                pos += 1 + ln
-            idx = _gif_lzw_decode(min_code, bytes(data))
-            if idx is None or len(idx) < w * h:
-                return None
-            arr = np.asarray(idx[: w * h], dtype=np.int64)
-            if (arr >= len(pal)).any():
-                return None
-            return pal[arr].reshape(h, w, 3)
-        elif blk == 0x3B:
-            return None  # trailer before any image
-        else:
-            return None
-    return None
-
-
-IMAGE_PIXEL_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("fmt", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("mean_r", T.DoubleType(), True),
-        T.StructField("mean_g", T.DoubleType(), True),
-        T.StructField("mean_b", T.DoubleType(), True),
-    ]
-)
-
-
-def decode_image_pixels(df: DataFrame) -> DataFrame:
-    """Image PIXEL decode (not just headers): PNG rgb8 (inflate +
-    unfilter), BMP 24bpp, and GIF (real LZW + palette) decode for
-    real; formats needing a true DSP codec (JPEG) — or undecodable
-    payloads (metadata-only / truncated / interlaced) — emit their
-    header dims with NULL pixel stats, same contract as
-    ``decode_video_frames`` for compressed video."""
-
-    imgs = df.filter(F.col("kind") == "image")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, fmt, px, w, h in _iter_image_payloads(pdf):
-                if px is None:
-                    rows.append((aid, fmt, w, h, None, None, None))
-                else:
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (aid, fmt, w, h, float(m[0]), float(m[1]), float(m[2]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "fmt", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            ).astype(
-                {
-                    "asset_id": "int64", "fmt": "object",
-                    "width": "Int32", "height": "Int32",
-                    "mean_r": "float64", "mean_g": "float64", "mean_b": "float64",
-                }
-            )
-
-    return imgs.mapInPandas(decode, schema=IMAGE_PIXEL_SCHEMA)
-
-
-def _decode_any_image(b: bytes):
-    """Shared per-format pixel dispatch: (fmt, (h, w, 3) array or
-    None)."""
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png", _png_pixels(b)
-    if b[:2] == b"BM":
-        return "bmp", _bmp_pixels(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif", _gif_pixels(b)
-    return None, None
-
-
-def _iter_image_payloads(pdf: pd.DataFrame):
-    """Shared per-batch decode loop for the image operators —
-    yields (asset_id, fmt, px-or-None, width, height). Dims come
-    from the DECODED array when pixels decode (a top-down BMP's
-    header height is negative; a GIF's first image descriptor may be
-    a sub-rectangle of the logical screen — the header dims would
-    contradict the pixel stats); header dims only when they're all
-    we have (round-5 review)."""
-    for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-        if payload is None:
-            continue
-        b = bytes(payload)
-        fmt, px = _decode_any_image(b)
-        if px is not None:
-            h, w = px.shape[:2]
-        else:
-            _n, w, h = _parse_header(b)
-        yield aid, fmt, px, w, h
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("fmt", T.StringType(), True),
-        T.StructField("src_width", T.IntegerType(), True),
-        T.StructField("src_height", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("pixels", T.BinaryType(), True),  # raw rgb24
-    ]
-)
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Image RESIZE (the decode/feature-extract/resize/frame-sample
-    op family): decode (PNG/BMP/GIF, the real pixel paths) →
-    nearest-neighbor resample to (out_w, out_h) with the floor
-    index map ``src_i = floor(i * src / out)`` → raw rgb24 bytes
-    out. Deterministic and engine-independent, so tests mirror the
-    arithmetic exactly. Undecodable payloads emit NULL pixels with
-    their header dims, same contract as ``decode_image_pixels``."""
-    import numpy as np
-
-    imgs = df.filter(F.col("kind") == "image")
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, fmt, px, w, h in _iter_image_payloads(pdf):
-                if px is None:
-                    rows.append((aid, fmt, w, h, out_w, out_h, None))
-                    continue
-                yi = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                xi = (np.arange(out_w, dtype=np.int64) * w) // out_w
-                res = px[yi][:, xi]
-                rows.append((aid, fmt, w, h, out_w, out_h, res.tobytes()))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "fmt", "src_width", "src_height",
-                    "width", "height", "pixels",
-                ],
-            ).astype(
-                {
-                    "asset_id": "int64", "fmt": "object",
-                    "src_width": "Int32", "src_height": "Int32",
-                    "width": "int32", "height": "int32", "pixels": "object",
-                }
-            )
-
-    return imgs.mapInPandas(resize, schema=RESIZED_SCHEMA)
-
-
-def _mp4_sample_table(
-    b: bytes,
-) -> tuple[str, int, int, int, list[tuple[int, int]]] | None:
-    """REAL ISO-BMFF sample location: (codec fourcc, width, height,
-    depth, [(absolute_offset, size) per sample]) from the ``stbl``
-    child boxes — ``stsd`` (codec + visual dims + depth), ``stsz``
-    (uniform or per-sample sizes), ``stsc`` (chunk → sample-count
-    runs) and ``stco`` (absolute chunk offsets). This is the spec's
-    sample-to-offset algorithm: expand the stsc runs over the stco
-    chunks, then accumulate sizes within each chunk."""
-    stbl_path = [b"moov", b"trak", b"mdia", b"minf", b"stbl"]
-    stbl = _bmff_find(b, 0, len(b), stbl_path)
-    if stbl is None:
-        return None
-
-    def child(typ: bytes) -> tuple[int, int] | None:
-        return _bmff_find(b, stbl[0], stbl[1], [typ])
-
-    stsd, stsz, stsc, stco = (child(t) for t in (b"stsd", b"stsz", b"stsc", b"stco"))
-    if not all((stsd, stsz, stsc, stco)):
-        return None
-    # stsd: ver/flags + entry_count, first entry = size + fourcc +
-    # SampleEntry(8) + VisualSampleEntry pre_defined/reserved(16) +
-    # width(2) + height(2) ... + depth(2) at entry_end-4
-    s, e = stsd
-    if e - s < 8 + 8 + 36:
-        return None
-    entry = s + 8
-    entry_size = int.from_bytes(b[entry : entry + 4], "big")
-    codec = b[entry + 4 : entry + 8].decode("latin-1")
-    w = int.from_bytes(b[entry + 32 : entry + 34], "big")
-    h = int.from_bytes(b[entry + 34 : entry + 36], "big")
-    depth = (
-        int.from_bytes(b[entry + entry_size - 4 : entry + entry_size - 2], "big")
-        if entry + entry_size <= e and entry_size >= 86
-        else 0
-    )
-    # stsz
-    s, e = stsz
-    if e - s < 12:
-        return None
-    uniform = int.from_bytes(b[s + 4 : s + 8], "big")
-    n_samples = int.from_bytes(b[s + 8 : s + 12], "big")
-    if uniform:
-        # samples can't total more bytes than the container holds — a
-        # hostile/corrupt declared count would otherwise materialize GBs
-        if n_samples > len(b) or uniform * n_samples > len(b):
-            return None
-        sizes = [uniform] * n_samples
-    else:
-        if e - s < 12 + 4 * n_samples:
-            return None
-        sizes = [
-            int.from_bytes(b[s + 12 + 4 * i : s + 16 + 4 * i], "big")
-            for i in range(n_samples)
-        ]
-    # stco
-    s, e = stco
-    n_chunks = int.from_bytes(b[s + 4 : s + 8], "big")
-    if e - s < 8 + 4 * n_chunks:
-        return None
-    chunk_offsets = [
-        int.from_bytes(b[s + 8 + 4 * i : s + 12 + 4 * i], "big")
-        for i in range(n_chunks)
-    ]
-    # stsc runs → samples per chunk
-    s, e = stsc
-    n_runs = int.from_bytes(b[s + 4 : s + 8], "big")
-    if e - s < 8 + 12 * n_runs:
-        return None
-    runs = [
-        (
-            int.from_bytes(b[s + 8 + 12 * i : s + 12 + 12 * i], "big"),
-            int.from_bytes(b[s + 12 + 12 * i : s + 16 + 12 * i], "big"),
-        )
-        for i in range(n_runs)
-    ]
-    per_chunk: list[int] = []
-    for i, (first, spc) in enumerate(runs):
-        last = runs[i + 1][0] - 1 if i + 1 < len(runs) else n_chunks
-        per_chunk.extend([spc] * max(0, last - first + 1))
-    locs: list[tuple[int, int]] = []
-    si = 0
-    for ci, off in enumerate(chunk_offsets):
-        pos = off
-        for _ in range(per_chunk[ci] if ci < len(per_chunk) else 0):
-            if si >= n_samples:
-                break
-            locs.append((pos, sizes[si]))
-            pos += sizes[si]
-            si += 1
-    return codec, w, h, depth, locs
-
-
-VIDEO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("codec", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("mean_r", T.DoubleType(), True),
-        T.StructField("mean_g", T.DoubleType(), True),
-        T.StructField("mean_b", T.DoubleType(), True),
-    ]
-)
-
-
-def decode_video_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame PIXEL decode for uncompressed tracks: locate each
-    sampled frame via the real stsd/stsz/stsc/stco walk and, for
-    QuickTime ``'raw '`` rgb24 sample entries, slice its bytes out of
-    ``mdat`` and emit per-channel pixel means (numpy over the Arrow
-    batch). Compressed codecs (avc1/hev1/…) emit their frame rows
-    with NULL pixel stats — locating those frames is real container
-    work, decoding them needs a codec library this image lacks (the
-    one remaining declared stub, now confined to compressed
-    bitstreams)."""
-    import numpy as np
-
-    vids = df.filter(F.col("kind") == "video")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                tab = _mp4_sample_table(b)
-                if tab is None:
-                    continue
-                codec, w, h, depth, locs = tab
-                raw_rgb = codec == "raw " and depth == 24
-                for idx in range(0, len(locs), every_n):
-                    off, size = locs[idx]
-                    means = (None, None, None)
-                    if raw_rgb and size == w * h * 3 and off + size <= len(b):
-                        px = np.frombuffer(b, dtype=np.uint8, count=size, offset=off)
-                        m = px.reshape(-1, 3).mean(axis=0)
-                        means = (float(m[0]), float(m[1]), float(m[2]))
-                    rows.append((aid, idx, codec, w, h, *means))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "frame_idx", "codec", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            ).astype(
-                {
-                    "asset_id": "int64", "frame_idx": "int32",
-                    "codec": "object", "width": "Int32", "height": "Int32",
-                    "mean_r": "float64", "mean_g": "float64", "mean_b": "float64",
-                }
-            )
-
-    return vids.mapInPandas(decode, schema=VIDEO_FRAME_SCHEMA)
-
-
-SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("sample", T.IntegerType(), True),  # signed 16-bit PCM
-    ]
-)
-
-
-def _wav_data_samples(b: bytes) -> list[int]:
-    """Locate the RIFF 'data' chunk and decode 16-bit little-endian
-    PCM samples — a real decode, no external libraries."""
-    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        return []
-    pos = 12
-    while pos + 8 <= len(b):
-        cid = b[pos : pos + 4]
-        size = int.from_bytes(b[pos + 4 : pos + 8], "little")
-        if cid == b"data":
-            raw = b[pos + 8 : pos + 8 + size]
-            return [
-                int.from_bytes(raw[i : i + 2], "little", signed=True)
-                for i in range(0, len(raw) - 1, 2)
-            ]
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    return []
-
-
-def sample_audio_frames(df: DataFrame, every_n: int = 4) -> DataFrame:
-    """REAL 1→N frame sampling: parse each WAV payload's data chunk
-    (pure-Python RIFF walk) and emit every ``every_n``-th PCM sample
-    as its own row — the audio analogue of video frame sampling, with
-    the same mapInPandas Arrow-batch shape the image decode uses."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, vals = [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                samples = _wav_data_samples(bytes(payload))
-                for i in range(0, len(samples), every_n):
-                    ids.append(aid)
-                    idxs.append(i)
-                    vals.append(samples[i])
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.array(ids, dtype="Int64"),
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                    "sample": pd.array(vals, dtype="Int32"),
-                }
-            )
-
-    return df.filter(F.col("kind") == "audio").mapInPandas(extract, schema=SAMPLE_SCHEMA)
 
 
 def _png_bytes(w: int, h: int) -> bytes:
@@ -955,231 +265,6 @@ def _mp4_bytes(w: int, h: int, duration: int = 1000, n_frames: int = 0) -> bytes
     return ftyp + moov
 
 
-def _mp4_raw_bytes(
-    w: int, h: int, frames: list[bytes], codec: bytes = b"raw "
-) -> bytes:
-    """ISO-BMFF with a REAL sample table and pixel payload: stsd
-    (VisualSampleEntry for ``codec``, depth 24), stts, uniform stsz,
-    one-chunk stsc/stco, and the frames packed into ``mdat``. The
-    stco offset is absolute, so the moov is built twice — once to
-    measure, once with the real mdat payload position."""
-    fsize = w * h * 3
-    if any(len(f) != fsize for f in frames):
-        raise ValueError("every frame must be w*h*3 rgb24 bytes")
-    n = len(frames)
-    entry = (86).to_bytes(4, "big") + codec + bytes(6) + (1).to_bytes(2, "big")
-    entry += bytes(16)  # pre_defined / reserved
-    entry += w.to_bytes(2, "big") + h.to_bytes(2, "big")
-    entry += (0x00480000).to_bytes(4, "big") * 2 + bytes(4)  # 72 dpi, reserved
-    entry += (1).to_bytes(2, "big") + bytes(32)  # frame_count, compressorname
-    entry += (24).to_bytes(2, "big") + (0xFFFF).to_bytes(2, "big")  # depth
-    stsd = bytes(4) + (1).to_bytes(4, "big") + entry
-    stts = bytes(4) + (1).to_bytes(4, "big") + n.to_bytes(4, "big") + (512).to_bytes(4, "big")
-    stsz = bytes(4) + fsize.to_bytes(4, "big") + n.to_bytes(4, "big")
-    stsc = (
-        bytes(4) + (1).to_bytes(4, "big")
-        + (1).to_bytes(4, "big") + n.to_bytes(4, "big") + (1).to_bytes(4, "big")
-    )
-    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
-
-    def moov_with(data_off: int) -> bytes:
-        stco = bytes(4) + (1).to_bytes(4, "big") + data_off.to_bytes(4, "big")
-        stbl = (
-            _box(b"stsd", stsd) + _box(b"stts", stts) + _box(b"stsz", stsz)
-            + _box(b"stsc", stsc) + _box(b"stco", stco)
-        )
-        trak = _box(b"tkhd", _tkhd_bytes(w, h, 512 * n)) + _box(
-            b"mdia", _box(b"minf", _box(b"stbl", stbl))
-        )
-        return _box(b"moov", _box(b"trak", trak))
-
-    data_off = len(ftyp) + len(moov_with(0)) + 8  # mdat payload start
-    return ftyp + moov_with(data_off) + _box(b"mdat", b"".join(frames))
-
-
-def _png_chunk(typ: bytes, data: bytes) -> bytes:
-    return (
-        len(data).to_bytes(4, "big") + typ + data
-        + zlib.crc32(typ + data).to_bytes(4, "big")
-    )
-
-
-def _png_full_bytes(px, filters: list[int] | None = None) -> bytes:
-    """Full valid PNG (rgb8, non-interlaced) from an (h, w, 3) uint8
-    array: per-row spec filtering (the row's filter type cycles
-    through ``filters``, default all five) → zlib → IDAT. Exercises
-    every unfilter branch of ``_png_pixels``."""
-    import numpy as np
-
-    h, w, _ = px.shape
-    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 2, 0, 0, 0])
-    flat = px.reshape(h, w * 3).astype(np.int64)
-    filters = filters or [0, 1, 2, 3, 4]
-    raw = bytearray()
-    zero3 = np.zeros(3, dtype=np.int64)
-    for y in range(h):
-        f = filters[y % len(filters)]
-        cur = flat[y]
-        above = flat[y - 1] if y else np.zeros(w * 3, dtype=np.int64)
-        left = np.concatenate([zero3, cur[:-3]])
-        ul = np.concatenate([zero3, above[:-3]])
-        if f == 0:
-            enc = cur
-        elif f == 1:
-            enc = (cur - left) % 256
-        elif f == 2:
-            enc = (cur - above) % 256
-        elif f == 3:
-            enc = (cur - (left + above) // 2) % 256
-        else:
-            p = left + above - ul
-            pa, pb, pc = np.abs(p - left), np.abs(p - above), np.abs(p - ul)
-            pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, above, ul))
-            enc = (cur - pred) % 256
-        raw.append(f)
-        raw.extend(enc.astype(np.uint8).tobytes())
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def _bmp_full_bytes(px, top_down: bool = False) -> bytes:
-    """Full valid 24bpp BMP from an (h, w, 3) uint8 RGB array:
-    BGR rows padded to 4 bytes — bottom-up (positive header height)
-    by default, or top-down (negative height, legal per the spec)."""
-    h, w, _ = px.shape
-    row_sz = (w * 3 + 3) // 4 * 4
-    data = bytearray()
-    order = range(h) if top_down else range(h - 1, -1, -1)
-    for y in order:
-        data.extend(px[y][:, ::-1].tobytes())
-        data.extend(bytes(row_sz - w * 3))
-    info = (
-        (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little")
-        + (-h if top_down else h).to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + bytes(24)
-    )
-    header = (
-        b"BM" + (54 + len(data)).to_bytes(4, "little") + bytes(4)
-        + (54).to_bytes(4, "little")
-    )
-    return header + info + bytes(data)
-
-
-def _gif_full_bytes(pal, indices, w: int, h: int) -> bytes:
-    """Full valid GIF89a from a (n, 3) uint8 palette and a w*h index
-    list: logical screen descriptor + global color table + image
-    descriptor + real LZW-compressed index stream in ≤255-byte
-    sub-blocks."""
-    k = max(1, (len(pal) - 1).bit_length() - 1)  # GCT size: 2^(k+1)
-    n_slots = 2 << k
-    min_code = max(2, (n_slots - 1).bit_length())
-    gct = bytearray()
-    for r, g, b2 in pal:
-        gct += bytes((int(r), int(g), int(b2)))
-    gct += bytes(3 * (n_slots - len(pal)))  # pad table to 2^(k+1)
-    out = bytearray(b"GIF89a")
-    out += w.to_bytes(2, "little") + h.to_bytes(2, "little")
-    out += bytes([0x80 | k, 0, 0])  # GCT flag+size, bg index, aspect
-    out += gct
-    out += b"\x2c" + bytes(4) + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-    out += bytes([0])  # no LCT, not interlaced
-    out += bytes([min_code])
-    lzw = _gif_lzw_encode(min_code, list(indices))
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def make_pixel_image_assets(spark, n: int = 8):
-    """Deterministic image assets WITH pixel payloads + construction-
-    time ground truth (means computed from the arrays fed into the
-    encoders): PNGs cycling all five filter types, BMPs, real
-    LZW-coded GIFs, and one header-only GIF whose pixel stats must
-    come back NULL (the undecodable-payload contract)."""
-    import numpy as np
-
-    rows, recs = [], []
-    for i in range(n):
-        w, h = 5 + (i * 7) % 28, 4 + (i * 5) % 21
-        if i == n - 1:
-            payload, fmt, means = _gif_bytes(w, h), "gif", (None, None, None)
-        elif i % 3 == 2:
-            pal = ((np.arange(64 * 3, dtype=np.int64) * (i + 7)) % 256).astype(
-                np.uint8
-            ).reshape(64, 3)
-            idx = [(j * (i + 2) + i) % 64 for j in range(w * h)]
-            payload, fmt = _gif_full_bytes(pal, idx, w, h), "gif"
-            px = pal[np.asarray(idx)].reshape(h, w, 3)
-            m = px.reshape(-1, 3).mean(axis=0)
-            means = (float(m[0]), float(m[1]), float(m[2]))
-        else:
-            px = (
-                (np.arange(h * w * 3, dtype=np.int64) * (i + 3) + 11 * i) % 256
-            ).astype(np.uint8).reshape(h, w, 3)
-            m = px.reshape(-1, 3).mean(axis=0)
-            means = (float(m[0]), float(m[1]), float(m[2]))
-            if i % 3 == 0:
-                payload, fmt = _png_full_bytes(px), "png"
-            else:
-                payload, fmt = _bmp_full_bytes(px), "bmp"
-        rows.append((i, "image", payload, f"image/{fmt}", {"fmt": fmt}))
-        recs.append(
-            {
-                "asset_id": i, "fmt": fmt, "width": w, "height": h,
-                "mean_r": means[0], "mean_g": means[1], "mean_b": means[2],
-            }
-        )
-    return spark.createDataFrame(rows, ASSET_SCHEMA), pd.DataFrame(recs)
-
-
-def make_raw_video_assets(spark, n: int = 6, frames_per: int = 9):
-    """Deterministic uncompressed-rgb24 video assets + construction-
-    time ground truth: returns (DataFrame, expected pandas frame of
-    per-frame channel means). The means are computed from the pixel
-    ARRAYS fed into the builder — independent of the decode path
-    they verify. Asset n-1 carries an ``avc1`` sample entry with the
-    same payload: its frames must locate but emit NULL pixel stats
-    (compressed bitstreams stay undecodable here)."""
-    import numpy as np
-
-    rows, recs = [], []
-    for i in range(n):
-        w, h = 8 + (i * 5) % 24, 6 + (i * 3) % 18
-        codec = b"avc1" if i == n - 1 else b"raw "
-        frames = []
-        for k in range(frames_per):
-            px = (np.arange(w * h * 3, dtype=np.int64) * (i + 1) + 37 * k) % 256
-            px = px.astype(np.uint8)
-            frames.append(px.tobytes())
-            m = px.reshape(-1, 3).mean(axis=0)
-            recs.append(
-                {
-                    "asset_id": i,
-                    "frame_idx": k,
-                    "codec": codec.decode("latin-1"),
-                    "width": w,
-                    "height": h,
-                    "mean_r": float(m[0]) if codec == b"raw " else None,
-                    "mean_g": float(m[1]) if codec == b"raw " else None,
-                    "mean_b": float(m[2]) if codec == b"raw " else None,
-                }
-            )
-        rows.append(
-            (i, "video", _mp4_raw_bytes(w, h, frames, codec=codec),
-             "video/mp4", {"codec": codec.decode("latin-1")})
-        )
-    return spark.createDataFrame(rows, ASSET_SCHEMA), pd.DataFrame(recs)
-
-
 def _real_asset_rows(n: int, n_video: int) -> list[tuple]:
     """(asset_id, kind, payload, mime, expected_w, expected_h):
     construction-time ground truth — the dims fed INTO each builder
@@ -1242,22 +327,3 @@ def expected_real_assets(n: int = 60, n_video: int = 0) -> pd.DataFrame:
         out[c] = out[c].astype("Int32")
     out["checksum"] = out["checksum"].astype("Int64")
     return out
-
-
-def make_fake_assets(spark, n: int = 100, seed: int = 7) -> DataFrame:
-    """Deterministic synthetic asset table (binary payloads)."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    kinds = ["image", "audio", "video"]
-    rows = [
-        (
-            i,
-            kinds[i % 3],
-            bytes(rng.integers(0, 256, size=int(rng.integers(100, 5000))).tolist()),
-            f"application/x-fake-{kinds[i % 3]}",
-            {"src": f"gen{i % 5}"},
-        )
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, ASSET_SCHEMA)

@@ -1930,7 +1930,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ensure_expected_assets()
     assets = make_real_assets(spark, n=_N_ASSETS, n_video=_N_VIDEO)
-    return decode_image_batch(assets, real_codec=True)
+    return decode_image_batch(assets)
 
 
 ORACLE_MULTIMODAL = f"""

@@ -1,6 +1,14 @@
 from __future__ import annotations
 
+import os
+
 import pytest
+
+# The engine's 12g pre-touched driver default does not fit twice on a
+# 15 GB box, and the fault-injection tests start a second JVM. Set
+# before the session fixture builds so subprocess JVMs inherit it; an
+# explicit KAHI_SPARK_DRIVER_MEM still wins.
+os.environ.setdefault("KAHI_SPARK_DRIVER_MEM", "3g")
 
 
 @pytest.fixture(scope="session")

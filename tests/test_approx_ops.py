@@ -82,7 +82,7 @@ def test_simhash_wide_finds_planted_neardups(spark):
 
 def test_minhash_signature_similarity_tracks_jaccard(spark):
     """Signature agreement rate ≈ true Jaccard (MinHash property)."""
-    from kahi_spark.operators.dedup import minhash_signatures, shingle_df
+    from kahi_spark.operators.dedup import minhash_bands
 
     docs = spark.createDataFrame(
         [
@@ -92,8 +92,8 @@ def test_minhash_signature_similarity_tracks_jaccard(spark):
         ],
         ["doc_id", "text"],
     )
-    sig = minhash_signatures(shingle_df(docs), n_hashes=128).collect()
-    rows = {r.doc_id: [r[f"mh_{i}"] for i in range(128)] for r in sig}
+    sig = minhash_bands(docs, n_hashes=128).collect()
+    rows = {r.doc_id: r.sig for r in sig}
 
     def agree(a, b):
         return sum(x == y for x, y in zip(rows[a], rows[b])) / 128

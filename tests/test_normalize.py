@@ -1,6 +1,6 @@
 """Normalization functions (SURVEY.md §2.7): role canonicalization,
-text cleaning (expr vs the Python reference), tool extraction, token
-count."""
+text cleaning (expr vs the Python reference), tool extraction,
+fingerprint."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from kahi_spark.functions.text import (
     clean_text_py,
     fingerprint_expr,
     fold_text_pandas,
-    token_count_expr,
 )
 from kahi_spark.functions.tools import extract_tool_expr
 
@@ -67,12 +66,10 @@ def test_tool_extraction(spark):
     assert got == [w for _, _, w in rows]
 
 
-def test_token_count_and_fingerprint(spark):
+def test_fingerprint(spark):
     df = spark.createDataFrame(
         [("a b  c",), ("  ",), (None,), ("single",)], ["text"]
     )
-    got = [r[0] for r in df.select(token_count_expr("text")).collect()]
-    assert got == [3, 0, 0, 1]
     fp = df.select(fingerprint_expr("text").alias("fp")).collect()
     import hashlib
 

@@ -1,5 +1,5 @@
 """Raw-feed normalizers (P4/P5), CSV work-list (S5/S9), scalar
-functions (F-series), multimodal plumbing, applyInPandas custom op."""
+functions (F-series), multimodal header decode, applyInPandas custom op."""
 
 from __future__ import annotations
 
@@ -8,9 +8,7 @@ import json
 from pyspark.sql import functions as F
 
 from kahi_spark.functions.scalars import (
-    capitalize_expr,
     country_alpha2_expr,
-    id_from_composite_expr,
     issn_format_expr,
     name_parts_expr,
     safe_int_expr,
@@ -69,16 +67,14 @@ def test_csv_worklist(spark, tmp_path):
 
 def test_scalar_functions(spark):
     df = spark.createDataFrame(
-        [("2019a", "United States", "14769028", "WOS:000123", "ada lovelace byron")],
-        ["year", "country", "issn", "uid", "name"],
+        [("2019a", "United States", "14769028", "ada lovelace byron")],
+        ["year", "country", "issn", "name"],
     )
     parts = name_parts_expr("name")
     row = df.select(
         safe_int_expr("year").alias("year"),
         country_alpha2_expr("country").alias("cc"),
         issn_format_expr("issn").alias("issn"),
-        id_from_composite_expr("uid").alias("id"),
-        capitalize_expr("name").alias("cap"),
         parts["first_name"].alias("fn"),
         parts["last_name"].alias("ln"),
         parts["initials"].alias("ini"),
@@ -86,39 +82,16 @@ def test_scalar_functions(spark):
     assert row.year == 2019
     assert row.cc == "US"
     assert row.issn == "1476-9028"
-    assert row.id == "000123"
-    assert row.cap == "Ada Lovelace Byron"
     assert (row.fn, row.ln, row.ini) == ("ada", "byron", "ALB")
 
 
-def test_multimodal_decode_plumbing(spark):
-    from kahi_spark.operators.multimodal import (
-        decode_image_batch,
-        frame_sample_plan,
-        make_fake_assets,
-    )
-
-    assets = make_fake_assets(spark, n=30)
-    feats = decode_image_batch(assets, real_codec=False)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(r.n_bytes and r.width and r.height and r.checksum is not None for r in rows)
-    # deterministic across runs
-    again = {r.asset_id: (r.width, r.height, r.checksum) for r in decode_image_batch(assets, real_codec=False).collect()}
-    assert again == {r.asset_id: (r.width, r.height, r.checksum) for r in rows}
-    # frame sampling explodes 1→N only for videos
-    fs = frame_sample_plan(assets, every_n=3, real_codec=False)
-    assert fs.count() > 0
-    assert fs.join(assets.filter("kind != 'video'"), "asset_id", "inner").count() == 0
-
-
 def test_multimodal_real_header_decode(spark):
-    """The real-codec path parses GENUINE container headers
+    """The header decode parses GENUINE container headers
     (PNG IHDR / BMP info header / GIF screen descriptor / WAV fmt)."""
     from kahi_spark.operators.multimodal import decode_image_batch, make_real_assets
 
     assets = make_real_assets(spark, n=40)
-    got = {r.asset_id: r for r in decode_image_batch(assets, real_codec=True).collect()}
+    got = {r.asset_id: r for r in decode_image_batch(assets).collect()}
     assert len(got) == 40
     for i in range(40):
         w, h = 16 + (i * 13) % 640, 16 + (i * 7) % 480
@@ -136,8 +109,7 @@ def test_multimodal_real_header_decode(spark):
 
 def test_multimodal_mp4_box_walk(spark):
     """Real ISO-BMFF parsing: moov→trak→tkhd walk recovers the track
-    dims from hand-built minimal MP4 bytes (closing the last video
-    container stub; pixel decode still honestly needs codec libs)."""
+    dims from hand-built minimal MP4 bytes."""
     from kahi_spark.operators.multimodal import (
         _mp4_bytes,
         _mp4_dims,
@@ -149,7 +121,7 @@ def test_multimodal_mp4_box_walk(spark):
     assert _mp4_dims(_mp4_bytes(640, 360)) == (640, 360)
     assert _mp4_dims(b"\x00\x00\x00\x08ftyp") == (None, None)  # no moov
     assets = make_real_assets(spark, n=8, n_video=4)  # ids 8..11 = mp4
-    got = {r.asset_id: r for r in decode_image_batch(assets, real_codec=True).collect()}
+    got = {r.asset_id: r for r in decode_image_batch(assets).collect()}
     exp = expected_real_assets(8, 4).set_index("asset_id")
     assert len(got) == 12
     for i in range(12):
@@ -158,30 +130,6 @@ def test_multimodal_mp4_box_walk(spark):
             e["kind"], e["n_bytes"], e["width"], e["height"], e["checksum"]
         ), i
     assert all(got[i].kind == "video" for i in range(8, 12))
-
-
-def test_mp4_real_frame_sampling(spark):
-    """Real 1→N video frame enumeration from the stts box: sampled
-    frame indices follow the DECLARED sample count, not payload
-    size."""
-    from kahi_spark.operators.multimodal import (
-        _mp4_bytes,
-        _mp4_frame_count,
-        frame_sample_plan,
-        make_real_assets,
-    )
-
-    assert _mp4_frame_count(_mp4_bytes(64, 64, n_frames=37)) == 37
-    assert _mp4_frame_count(_mp4_bytes(64, 64)) is None  # no stbl chain
-    assets = make_real_assets(spark, n=4, n_video=3)  # ids 4,5,6: 24,29,34 frames
-    got = {}
-    for r in frame_sample_plan(assets, every_n=10, real_codec=True).collect():
-        got.setdefault(r.asset_id, []).append(r.frame_idx)
-    assert got == {
-        4: [0, 10, 20],
-        5: [0, 10, 20],
-        6: [0, 10, 20, 30],
-    }
 
 
 def test_conversation_stats_applyinpandas(spark):
@@ -207,22 +155,6 @@ def test_conversation_stats_applyinpandas(spark):
     assert got["c1"].mean_gap_s == 20.0
     assert got["c1"].max_gap_s == 30.0
     assert got["c2"].mean_gap_s is None
-
-
-def test_audio_frame_sampling_real_pcm(spark):
-    """Every-Nth 16-bit PCM sample extracted from real RIFF data
-    chunks (the de-stubbed frame-sample operator)."""
-    from kahi_spark.operators.multimodal import make_real_assets, sample_audio_frames
-
-    assets = make_real_assets(spark, n=12)  # ids 3, 7, 11 are WAVs
-    got = {}
-    for r in sample_audio_frames(assets, every_n=4).collect():
-        got.setdefault(r.asset_id, []).append((r.frame_idx, r.sample))
-    assert set(got) == {3, 7, 11}
-    for i in sorted(got):
-        expected_pcm = [((i * 31 + j * 17) % 1000) - 500 for j in range(24 + i % 8)]
-        expect = [(j, expected_pcm[j]) for j in range(0, len(expected_pcm), 4)]
-        assert sorted(got[i]) == expect
 
 
 def test_normalize_feeds_skips_malformed_payloads_and_dates(spark):
@@ -264,38 +196,16 @@ def test_normalize_feeds_skips_malformed_payloads_and_dates(spark):
     assert out[3].ts is None and out[3].conv_id == "cs"
 
 
-def test_try_scalar_variants_null_on_malformed(spark):
-    """Round-5 hardening: F9 (ISO timestamp) and F15 (composite id)
-    yield NULL on malformed input under Spark 4 ANSI instead of
-    throwing mid-job."""
-    from kahi_spark.functions.scalars import parse_iso_ts_expr
-
-    df = spark.createDataFrame(
-        [
-            ("2024-01-02T03:04:05+00:00", "WOS:000123"),
-            ("not-a-timestamp", "nosep"),
-            ("2024-13-99T99:99:99+00:00", ""),
-            (None, None),
-        ],
-        "iso string, comp string",
-    )
-    got = df.select(
-        parse_iso_ts_expr("iso").alias("ts"),
-        id_from_composite_expr("comp").alias("id"),
-    ).collect()
-    assert got[0].ts is not None and got[0].id == "000123"
-    assert got[1].ts is None and got[1].id is None  # no separator → NULL
-    assert got[2].ts is None  # well-shaped but invalid calendar date
-    assert got[3].ts is None and got[3].id is None
-
-
 def test_header_parse_robustness():
-    """Round-5 review fixes in the pure-Python container parsers:
-    PNG requires IHDR as the first chunk; WAV walks RIFF chunks to
-    'fmt ' (JUNK/LIST padding is routine); ISO-BMFF honors size==1
-    (64-bit largesize) and size==0 (to-end) boxes, and finds moov
-    when mdat precedes it."""
+    """The pure-Python container-header parser: PNG requires IHDR as
+    the first chunk; a top-down BMP (negative header height) reports
+    its positive height; WAV walks RIFF chunks to 'fmt ' (JUNK/LIST
+    padding is routine); ISO-BMFF honors size==1 (64-bit largesize)
+    and size==0 (to-end) boxes, and finds moov when mdat precedes it.
+    Truncated or hostile containers degrade to (n_bytes, None, None)
+    without raising."""
     from kahi_spark.operators.multimodal import (
+        _bmp_bytes,
         _box,
         _mp4_bytes,
         _mp4_dims,
@@ -328,6 +238,29 @@ def test_header_parse_robustness():
     # size==0 final box: moov runs to end-of-file
     zero_moov = (0).to_bytes(4, "big") + moov[4:]
     assert _mp4_dims(ftyp + mdat + zero_moov) == (64, 48)
+
+    # top-down BMP: the header stores -height; bottom-up rows follow
+    assert _parse_header(_bmp_bytes(11, -7)) == (54, 11, 7)
+    full = _bmp_bytes(11, -7) + bytes(7 * 36)  # 11*3 bytes padded to 36
+    assert _parse_header(full) == (306, 11, 7)
+    assert _parse_header(_bmp_bytes(11, 7)) == (54, 11, 7)
+
+    # hostile / truncated containers: byte count, NULL dims, no raise
+    huge_chunk = (
+        b"RIFF" + (28).to_bytes(4, "little") + b"WAVE"
+        + b"JUNK" + (2**32 - 1).to_bytes(4, "little") + bytes(16)
+    )
+    hostile = [
+        b"BM" + bytes(10),
+        huge_chunk,
+        core[:60],  # moov/trak/tkhd declared past the end of the bytes
+        ftyp + (4).to_bytes(4, "big") + b"moov" + bytes(8),  # size < header
+        ftyp + (1).to_bytes(4, "big") + b"moov" + bytes(4),  # cut largesize
+        _png_bytes(33, 44)[:20],
+        b"",
+    ]
+    for payload in hostile:
+        assert _parse_header(payload) == (len(payload), None, None), payload
 
 
 def test_table_path_fingerprint_invalidates(spark, tmp_path):
@@ -370,221 +303,3 @@ def test_table_path_fingerprint_invalidates(spark, tmp_path):
     assert not os.path.exists(p1) and not os.path.exists(p1 + ".stale")
     assert os.path.exists(p2)  # newly stale: marked, not yet swept
     assert os.path.exists(p2 + ".stale")
-
-
-def test_video_raw_pixel_decode_exact(spark):
-    """Uncompressed rgb24 frames decode to EXACT construction-time
-    channel means via the real stsd/stsz/stsc/stco sample walk;
-    avc1 frames locate (row per sampled frame) but carry NULL pixel
-    stats — the compressed-bitstream stub stays honest and visible."""
-    from kahi_spark.operators.multimodal import (
-        decode_video_frames,
-        make_raw_video_assets,
-    )
-
-    assets, expected = make_raw_video_assets(spark, n=5, frames_per=9)
-    got = decode_video_frames(assets, every_n=2).toPandas()
-    exp = expected[expected["frame_idx"] % 2 == 0].reset_index(drop=True)
-
-    key = ["asset_id", "frame_idx"]
-    got = got.sort_values(key).reset_index(drop=True)
-    exp = exp.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(exp) == 5 * 5  # 9 frames, every 2nd → 5
-    assert got["codec"].tolist() == exp["codec"].tolist()
-    assert got["width"].tolist() == exp["width"].tolist()
-    for ch in ("mean_r", "mean_g", "mean_b"):
-        g, e = got[ch], exp[ch]
-        assert (g.isna() == e.isna()).all()
-        assert (g.dropna() == e.dropna()).all(), ch  # exact, not approx
-    # the avc1 asset is the NULL-stats one
-    avc = got[got["codec"] == "avc1"]
-    assert len(avc) == 5 and avc["mean_r"].isna().all()
-    # legacy metadata-only MP4s (no sample table) emit nothing
-    from kahi_spark.operators.multimodal import make_real_assets
-
-    legacy = make_real_assets(spark, n=4, n_video=2)
-    assert decode_video_frames(legacy, every_n=1).count() == 0
-
-
-def test_image_pixel_decode_exact(spark):
-    """PNG rgb8 (all five filter types), BMP 24bpp and GIF (real
-    LZW + palette) pixels decode to EXACT construction-time channel
-    means with stdlib zlib + numpy only; a metadata-only GIF keeps
-    header dims but NULL pixel stats (the undecodable-payload
-    contract)."""
-    from kahi_spark.operators.multimodal import (
-        decode_image_pixels,
-        make_pixel_image_assets,
-    )
-
-    assets, expected = make_pixel_image_assets(spark, n=10)
-    got = (
-        decode_image_pixels(assets)
-        .toPandas()
-        .sort_values("asset_id")
-        .reset_index(drop=True)
-    )
-    exp = expected.sort_values("asset_id").reset_index(drop=True)
-    assert got["fmt"].tolist() == exp["fmt"].tolist()
-    assert got["width"].tolist() == exp["width"].tolist()
-    assert got["height"].tolist() == exp["height"].tolist()
-    for ch in ("mean_r", "mean_g", "mean_b"):
-        g, e = got[ch], exp[ch]
-        assert (g.isna() == e.isna()).all()
-        assert (g.dropna() == e.dropna()).all(), ch  # exact
-    # all three real-pixel formats present; only the header-only GIF
-    # (last asset) comes back NULL
-    assert set(got["fmt"]) == {"png", "bmp", "gif"}
-    assert got["mean_r"].isna().sum() == 1
-    assert got["mean_r"].isna().iloc[-1]
-
-    # malformed payloads must not crash the batch
-    bad = spark.createDataFrame(
-        [(100, "image", b"\x89PNG\r\n\x1a\ngarbage", "image/png", None),
-         (101, "image", None, None, None),
-         (102, "image", b"BMxx", "image/bmp", None)],
-        assets.schema,
-    )
-    rows = decode_image_pixels(bad).collect()
-    assert all(r.mean_r is None for r in rows)
-
-
-def test_gif_lzw_roundtrip_fuzz():
-    """Pure-Python GIF LZW: encoder→decoder round-trips random index
-    streams at every min-code-size, plus repetitive streams that
-    drive deep dictionary growth, width changes and the KwKwK case.
-    No Spark — this pins the codec itself."""
-    import numpy as np
-
-    from kahi_spark.operators.multimodal import _gif_lzw_decode, _gif_lzw_encode
-
-    rng = np.random.default_rng(3)
-    for _ in range(120):
-        mcs = int(rng.integers(2, 9))
-        n = int(rng.integers(1, 3000))
-        idx = rng.integers(0, 1 << mcs, n).tolist()
-        assert _gif_lzw_decode(mcs, _gif_lzw_encode(mcs, idx)) == idx
-    for mcs in (2, 4, 8):
-        idx = ([1, 1, 1, 1, 2, 2, 2, 1, 1, 1] * 3000)[:25000]
-        assert _gif_lzw_decode(mcs, _gif_lzw_encode(mcs, idx)) == idx
-    assert _gif_lzw_decode(4, b"") == []
-    # garbage must not raise: either a corrupt-stream None or a
-    # best-effort prefix (list of in-range ints) is acceptable
-    garbage = _gif_lzw_decode(4, b"\xff\xff")
-    assert garbage is None or (
-        isinstance(garbage, list) and all(isinstance(i, int) for i in garbage)
-    )
-
-
-def test_hostile_payloads_degrade_to_none():
-    """Crafted-hostile containers must degrade to None like every
-    other undecodable payload — never allocate huge buffers or emit
-    zero-dim arrays (ADVICE r5): a GIF declaring 0×0 dimensions, and
-    an MP4 stsz declaring uniform-size samples whose product exceeds
-    the container length."""
-    import numpy as np
-
-    from kahi_spark.operators.multimodal import (
-        _gif_full_bytes,
-        _gif_pixels,
-        _mp4_raw_bytes,
-        _mp4_sample_table,
-    )
-
-    pal = np.zeros((4, 3), dtype=np.uint8)
-    zero_w = bytearray(_gif_full_bytes(pal, [0, 1, 2, 3], 2, 2))
-    # image descriptor dims live 5..9 bytes after the 0x2C marker
-    marker = zero_w.index(0x2C)
-    zero_w[marker + 5 : marker + 7] = (0).to_bytes(2, "little")
-    assert _gif_pixels(bytes(zero_w)) is None
-    zero_h = bytearray(_gif_full_bytes(pal, [0, 1, 2, 3], 2, 2))
-    marker = zero_h.index(0x2C)
-    zero_h[marker + 7 : marker + 9] = (0).to_bytes(2, "little")
-    assert _gif_pixels(bytes(zero_h)) is None
-
-    vid = bytearray(_mp4_raw_bytes(2, 2, [bytes(12), bytes(12)]))
-    stsz = vid.index(b"stsz")
-    # box payload starts 4 bytes after the fourcc: ver/flags(4) then
-    # uniform(4) + n_samples(4); declare 2^31 uniform-size samples
-    vid[stsz + 8 : stsz + 12] = (16).to_bytes(4, "big")
-    vid[stsz + 12 : stsz + 16] = (1 << 31).to_bytes(4, "big")
-    assert _mp4_sample_table(bytes(vid)) is None
-
-
-def test_resize_images_nearest_exact(spark):
-    """Nearest-neighbor resize over the real decode paths: the
-    output raw rgb24 bytes equal the floor-index resample of the
-    construction pixel arrays for PNG, BMP and GIF alike; the
-    header-only GIF emits NULL pixels with its header dims."""
-    import numpy as np
-
-    from kahi_spark.operators.multimodal import (
-        make_pixel_image_assets,
-        resize_images,
-    )
-
-    assets, _ = make_pixel_image_assets(spark, n=10)
-    OW, OH = 7, 5
-    got = {r.asset_id: r for r in resize_images(assets, OW, OH).collect()}
-    assert len(got) == 10
-
-    # mirror the construction arrays (same formulas as the builder)
-    for i in range(10):
-        r = got[i]
-        assert (r.width, r.height) == (OW, OH)
-        if i == 9:  # header-only GIF
-            assert r.pixels is None and r.fmt == "gif"
-            continue
-        w, h = 5 + (i * 7) % 28, 4 + (i * 5) % 21
-        if i % 3 == 2:  # gif: palette indices
-            pal = ((np.arange(64 * 3, dtype=np.int64) * (i + 7)) % 256).astype(
-                np.uint8
-            ).reshape(64, 3)
-            idx = [(j * (i + 2) + i) % 64 for j in range(w * h)]
-            px = pal[np.asarray(idx)].reshape(h, w, 3)
-        else:
-            px = (
-                (np.arange(h * w * 3, dtype=np.int64) * (i + 3) + 11 * i) % 256
-            ).astype(np.uint8).reshape(h, w, 3)
-        yi = (np.arange(OH, dtype=np.int64) * h) // OH
-        xi = (np.arange(OW, dtype=np.int64) * w) // OW
-        exp = px[yi][:, xi]
-        assert (r.src_width, r.src_height) == (w, h), i
-        assert bytes(r.pixels) == exp.tobytes(), i
-    # identity resize reproduces the source exactly
-    same = resize_images(assets.filter("asset_id = 0"), 5, 4).collect()[0]
-    src = ((np.arange(4 * 5 * 3, dtype=np.int64) * 3) % 256).astype(np.uint8)
-    assert bytes(same.pixels) == src.tobytes()
-
-
-def test_topdown_bmp_dims_from_decoded_array(spark):
-    """A top-down BMP (legal negative header height) must report the
-    POSITIVE decoded height — header dims contradicted the pixel
-    stats (round-5 review) — and its pixels must equal the same
-    image stored bottom-up."""
-    import numpy as np
-
-    from kahi_spark.operators.multimodal import (
-        ASSET_SCHEMA,
-        _bmp_full_bytes,
-        decode_image_pixels,
-        resize_images,
-    )
-
-    px = (np.arange(7 * 11 * 3, dtype=np.int64) % 256).astype(np.uint8).reshape(7, 11, 3)
-    assets = spark.createDataFrame(
-        [
-            (0, "image", _bmp_full_bytes(px), "image/bmp", None),
-            (1, "image", _bmp_full_bytes(px, top_down=True), "image/bmp", None),
-        ],
-        ASSET_SCHEMA,
-    )
-    rows = {r.asset_id: r for r in decode_image_pixels(assets).collect()}
-    for i in (0, 1):
-        assert (rows[i].width, rows[i].height) == (11, 7), i
-    assert (rows[0].mean_r, rows[0].mean_g, rows[0].mean_b) == (
-        rows[1].mean_r, rows[1].mean_g, rows[1].mean_b,
-    )
-    rz = {r.asset_id: r for r in resize_images(assets, 4, 3).collect()}
-    assert bytes(rz[0].pixels) == bytes(rz[1].pixels)
-    assert (rz[1].src_width, rz[1].src_height) == (11, 7)
