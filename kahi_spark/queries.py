@@ -55,8 +55,7 @@ def q_cdc_apply_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
     (normalize-then-reduce SQL) is unchanged and keeps matching by
     the same argument."""
     ev = derive_transcript_events(spark, sf_dir)
-    live = latest_change_per_key(ev).filter(F.col("op") != "delete")
-    return normalize_events(live).select(
+    return reduce_events_to_state(normalize_events(ev)).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
 

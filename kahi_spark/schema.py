@@ -55,14 +55,19 @@ def evolve_schema(
     ad-hoc field addition (e.g. ``conference_name`` only for
     conference papers, reference ``Scopus.py:92-100``) as explicit
     Iceberg-style ADD COLUMN evolution: new columns append, existing
-    columns keep their type, removed columns persist as NULL.
+    columns keep their type (a ``NullType`` one, all-None so far, takes
+    the first concrete type that arrives), removed columns persist as NULL.
     """
     have = {f.name for f in base.fields}
+    typed = {f.name: f.dataType for f in incoming.fields if not isinstance(f.dataType, T.NullType)}
+    kept = [
+        T.StructField(f.name, typed[f.name], True)
+        if isinstance(f.dataType, T.NullType) and f.name in typed else f
+        for f in base.fields
+    ]
     added = [
         T.StructField(f.name, f.dataType, True)
         for f in incoming.fields
         if f.name not in have
     ]
-    if not added:
-        return base, []
-    return T.StructType(list(base.fields) + added), added
+    return T.StructType(kept + added), added

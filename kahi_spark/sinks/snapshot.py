@@ -37,7 +37,10 @@ snapshot-versioned Parquet table:
 * **schema evolution**: new columns arriving in a change batch are
   added to the table schema (old rows read as NULL), mirroring
   Iceberg ADD COLUMN / Kahi's ad-hoc field addition
-  (``Scopus.py:92-100``).
+  (``Scopus.py:92-100``). The manifest records that schema (grown,
+  never shrunk, by ``_publish``), so a read or fold is **at most two
+  scans** with it — the bucketed base and one scan over all deltas —
+  and building one infers no file schema and starts no Spark job.
 
 Layout: each snapshot is written ``repartition(n_buckets, conv_id)``
 — a stable hash layout on the merge key so the MERGE join
@@ -59,6 +62,8 @@ import shutil
 import threading
 import time
 import uuid
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -166,6 +171,19 @@ def _manifest_row_counts(m: dict) -> tuple[int, int]:
     window)."""
     by_dir = m["delta_rows_by_dir"]
     return m["base_rows"], sum(by_dir[d] for d in m["deltas"])
+
+
+def _schema(m: dict) -> T.StructType:
+    """The table schema manifest ``m`` records (see ``_publish``)."""
+    return T.StructType.fromJson(m["schema"]) if m["schema"] else T.StructType()
+
+
+def _typed(df: DataFrame) -> DataFrame:
+    """``df`` less its ``NullType`` columns, for a write: Parquet stores
+    one as BOOLEAN, which the type ``evolve_schema`` later widens it to
+    cannot read back. The recorded schema keeps the column."""
+    void = [f.name for f in df.schema.fields if isinstance(f.dataType, T.NullType)]
+    return df.drop(*void) if void else df
 
 
 def _rows_of(files: list[dict]) -> int:
@@ -307,6 +325,7 @@ class SnapshotTable:
                 "base_n_buckets": None,
                 "base_rows": 0,
                 "delta_rows_by_dir": {},
+                "schema": None,
                 "snapshot_log": [],
             }
         with open(p) as f:
@@ -314,19 +333,18 @@ class SnapshotTable:
         # every field _publish writes; a manifest missing one was not
         # written by this protocol, and reading on would silently
         # mis-prune lookups or mis-trigger folds
-        required = ["snapshot_log"]
+        required = ["snapshot_log", "trash"]
         if m.get("snapshot") is not None:
             required += ["base_n_buckets", "base_rows"]
         if m.get("deltas"):
             required.append("delta_rows_by_dir")
+        if m.get("snapshot") is not None or m.get("deltas"):
+            required.append("schema")
         missing = [k for k in required if m.get(k) is None]
         if missing:
             raise ValueError(
                 f"table at {self.path}: manifest lacks {', '.join(missing)}"
             )
-        m.setdefault("trash", [])
-        m.setdefault("base_rows", 0)
-        m.setdefault("delta_rows_by_dir", {})
         return m
 
     #: hot-manifest commit-history cap: older commit records move to an
@@ -415,44 +433,7 @@ class SnapshotTable:
         if len(key_values) != len(self.key_cols):
             raise ValueError(f"expected values for {self.key_cols}")
         m = self._read_manifest()
-        if m["snapshot"] is None and not m["deltas"]:
-            raise FileNotFoundError(f"table {self.path} has no committed snapshot")
-        parts = []
-        if m["snapshot"] is not None:
-            base = self.spark.read.parquet(os.path.join(self.path, m["snapshot"]))
-            # typed literals (ADVICE r4): hash(int 5) != hash(bigint 5)
-            # in Spark's Murmur3, so an un-cast Python literal against
-            # a LongType key column would prune the WRONG _bucket=
-            # directory and silently return nothing. Cast each literal
-            # to the key column's actual type, and prune with the
-            # modulus the base was WRITTEN with (manifest-recorded) —
-            # this handle's n_buckets may be a pending rebucketing.
-            lits = [
-                F.lit(v).cast(base.schema[k].dataType)
-                for k, v in zip(self.key_cols, key_values)
-            ]
-            key_pred = None
-            for k, lv in zip(self.key_cols, lits):
-                p = F.col(k) == lv
-                key_pred = p if key_pred is None else (key_pred & p)
-            if "_bucket" in base.columns:
-                bucket = F.pmod(F.hash(*lits), F.lit(m["base_n_buckets"]))
-                base = base.filter(F.col("_bucket") == bucket).drop("_bucket")
-            parts.append(base.filter(key_pred))
-        else:
-            key_pred = None
-            for k, v in zip(self.key_cols, key_values):
-                p = F.col(k) == F.lit(v)
-                key_pred = p if key_pred is None else (key_pred & p)
-        for d in m["deltas"]:
-            parts.append(
-                self.spark.read.parquet(os.path.join(self.path, d)).filter(key_pred)
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        if len(parts) > 1:
-            df = self._resolve(df)
+        df = self._read_parts(m, m["snapshot"], m["deltas"], key_values)
         return df.filter(~F.col(SYS_DELETED)).drop(SYS_SEQ, SYS_DELETED)
 
     def read_internal(self) -> DataFrame:
@@ -462,26 +443,47 @@ class SnapshotTable:
         resolve (one window shuffle) — the read-side half of
         merge-on-read; compaction bounds the number of deltas."""
         m = self._read_manifest()
-        if m["snapshot"] is None and not m["deltas"]:
-            raise FileNotFoundError(f"table {self.path} has no committed snapshot")
-        return self._read_parts(m["snapshot"], m["deltas"])
+        return self._read_parts(m, m["snapshot"], m["deltas"])
 
-    def _read_parts(self, snapshot: str | None, deltas: list[str]) -> DataFrame:
-        """State assembled from an EXPLICIT (base, deltas) set — the
-        async fold works over a set frozen at fold start, which may
-        be older than the live manifest by the time the plan runs."""
+    def _read_parts(
+        self, m: dict, snapshot: str | None, deltas: list[str], key_values=None
+    ) -> DataFrame:
+        """State assembled from an EXPLICIT (base, deltas) set of
+        manifest ``m`` (a fold's set is frozen at fold start). Base and
+        deltas are two scans with ``m``'s schema: one read over
+        ``_bucket=``-partitioned and flat roots throws
+        CONFLICTING_DIRECTORY_STRUCTURES. ``key_values`` narrows both
+        to one key, and the base to that key's ``_bucket=k/``."""
+        if snapshot is None and not deltas:
+            raise FileNotFoundError(f"table {self.path} has no committed snapshot")
+        schema = _schema(m)
+        reader = self.spark.read.schema(schema)
         parts = []
         if snapshot is not None:
-            base = self.spark.read.parquet(os.path.join(self.path, snapshot))
-            if "_bucket" in base.columns:  # bucket-dir layout partition col
-                base = base.drop("_bucket")
-            parts.append(base)
-        for d in deltas:
-            parts.append(self.spark.read.parquet(os.path.join(self.path, d)))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        if len(parts) > 1:
+            parts.append(reader.parquet(os.path.join(self.path, snapshot)))
+        if deltas:
+            parts.append(reader.parquet(*[os.path.join(self.path, d) for d in deltas]))
+        if key_values is not None:
+            # typed literals (ADVICE r4): hash(int 5) != hash(bigint 5)
+            # in Spark's Murmur3, so an un-cast Python literal against
+            # a LongType key column would prune the WRONG _bucket=
+            # directory and silently return nothing. Cast each literal
+            # to the key column's recorded type, and prune with the
+            # modulus the base was WRITTEN with (manifest-recorded) —
+            # this handle's n_buckets may be a pending rebucketing.
+            lits = [
+                F.lit(v).cast(schema[k].dataType)
+                for k, v in zip(self.key_cols, key_values)
+            ]
+            key_pred = reduce(and_, [F.col(k) == lv for k, lv in zip(self.key_cols, lits)])
+            if snapshot is not None and "_bucket" in parts[0].columns:
+                bucket = F.pmod(F.hash(*lits), F.lit(m["base_n_buckets"]))
+                parts[0] = parts[0].filter(F.col("_bucket") == bucket)
+            parts = [p.filter(key_pred) for p in parts]
+        if snapshot is not None:
+            parts[0] = parts[0].drop("_bucket")  # the base's partition column
+        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        if (snapshot is not None) + len(deltas) > 1:
             df = self._resolve(df)
         return df
 
@@ -561,7 +563,7 @@ class SnapshotTable:
 
     def _write_snapshot(self, df: DataFrame, dirname: str) -> None:
         (
-            df.withColumn("_bucket", self._bucket_expr())
+            _typed(df).withColumn("_bucket", self._bucket_expr())
             .repartition(self.n_buckets, *[F.col(k) for k in self.key_cols])
             .write
             .partitionBy("_bucket")
@@ -589,7 +591,7 @@ class SnapshotTable:
         resolved = {k: _lazy(v) for k, v in metrics.items()}
         if resolved.get("watermark") is not None:
             resolved["watermark"] = str(resolved["watermark"])
-        self._publish(tmp, "v", op, t0, epoch_id=epoch_id, record=resolved)
+        self._publish(tmp, "v", op, t0, new_state.schema, epoch_id=epoch_id, record=resolved)
 
     # --- the commit protocol ------------------------------------------------
     def _fresh_tag(self, *prefixes: str) -> str:
@@ -613,6 +615,7 @@ class SnapshotTable:
         prefix: str,
         op: str,
         t0: float,
+        schema: T.StructType,
         epoch_id: int | None = None,
         folded: list[str] | None = None,
         record: dict | None = None,
@@ -622,8 +625,11 @@ class SnapshotTable:
         ``tmp`` to ``<prefix><version>`` (``v`` = new base, ``d`` =
         epoch delta, ``dm`` = minor merge, which replaces the deltas
         in ``folded``), update the manifest and its row bookkeeping,
-        ledger ``epoch_id``, append the commit record and swap the
-        manifest. Then delete what the new manifest no longer needs:
+        grow the recorded schema by the written frame's ``schema``
+        (``evolve_schema``; never shrunk, so a fold frozen before an
+        ADD COLUMN keeps the column), ledger ``epoch_id``, append the
+        commit record and swap the manifest. Then delete what the new
+        manifest no longer needs:
         the previous ``trash`` (a fold's inputs stay one fold cycle,
         so a reader plan captured just before the swap keeps its
         files) and every versioned dir it does not reference — an
@@ -642,6 +648,7 @@ class SnapshotTable:
             os.rename(os.path.join(self.path, tmp), final)
             m["version"] = version
             m["key_cols"] = list(self.key_cols)
+            m["schema"] = evolve_schema(_schema(m), schema)[0].jsonValue()
             by_dir = m["delta_rows_by_dir"]
             old_trash = m["trash"] if folded else []
             if folded:
@@ -814,9 +821,8 @@ class SnapshotTable:
         # repartition here would be a redundant second shuffle (file
         # count follows shuffle partitions; compaction re-buckets to
         # n_buckets anyway)
-        state_from_reduced(reduced, key_cols=self.key_cols).write.parquet(
-            os.path.join(self.path, tmp)
-        )
+        delta = state_from_reduced(reduced, key_cols=self.key_cols)
+        _typed(delta).write.parquet(os.path.join(self.path, tmp))
         # metrics resolve after the write (see _lazy)
         wm = _lazy(watermark) if watermark is not None else changes.agg(F.max("ts")).collect()[0][0]
         record = {
@@ -825,7 +831,9 @@ class SnapshotTable:
             "watermark": str(wm) if wm is not None else None,
             **{k: _lazy(v) for k, v in extra.items()},
         }
-        m = self._publish(tmp, "d", "merge-delta", t0, epoch_id=epoch_id, record=record)
+        m = self._publish(
+            tmp, "d", "merge-delta", t0, delta.schema, epoch_id=epoch_id, record=record
+        )
         # one fold rule: the ratio once a base exists (geometric
         # schedule — see __init__), else compact_every; a due minor
         # with no base yet runs as the bootstrap major, since minors
@@ -850,7 +858,7 @@ class SnapshotTable:
             self.compact(self.compact_strategy)
         return True
 
-    def _compact_bucketed(self, base_snap: str | None, folding: list[str], tag: str) -> str:
+    def _compact_bucketed(self, m: dict, tag: str) -> str:
         """Incremental fold (see ``compact``): shuffle only the
         deltas, zip buckets task-locally in ARROW end to end.
 
@@ -872,15 +880,10 @@ class SnapshotTable:
         manifest/rename metadata layer remains local-filesystem (see
         ``_to_uri``). The Iceberg equivalent is a
         bucket-partition-spec rewrite_data_files."""
-        # 1. LWW-reduce across deltas (each delta is already one row
-        #    per key) — the ONLY shuffle in the fold, O(deltas)
-        parts = [
-            self.spark.read.parquet(os.path.join(self.path, d)) for d in folding
-        ]
-        deltas = parts[0]
-        for p in parts[1:]:
-            deltas = deltas.unionByName(p, allowMissingColumns=True)
-        winners = self._resolve(deltas)
+        # 1. LWW-reduce across the frozen deltas (each is already one
+        #    row per key, so one delta needs none) — the ONLY shuffle
+        #    in the fold, O(deltas)
+        winners = _typed(self._read_parts(m, None, m["deltas"]))
         win_dir = os.path.join(self.path, f"_compact_winners_{tag}")
         (
             winners.withColumn("_bucket", self._bucket_expr())
@@ -889,16 +892,13 @@ class SnapshotTable:
             .parquet(win_dir)
         )
         base_dir = (
-            os.path.join(self.path, base_snap) if base_snap is not None else None
+            os.path.join(self.path, m["snapshot"]) if m["snapshot"] is not None else None
         )
-        # target schema: base ∪ winners (winners may ADD COLUMNs)
-        target = winners
-        if base_dir is not None:
-            base = self.spark.read.parquet(base_dir)
-            if "_bucket" in base.columns:
-                base = base.drop("_bucket")
-            target = base.unionByName(winners, allowMissingColumns=True)
-        target_schema = target.schema
+        # target schema: the frozen manifest's (winners may ADD COLUMNs),
+        # less the all-NULL columns no file carries (see _typed)
+        target_schema = T.StructType(
+            [f for f in _schema(m).fields if not isinstance(f.dataType, T.NullType)]
+        )
         key_cols, sys_seq = self.key_cols, SYS_SEQ
 
         # every fold read goes through the URI/fs layer — local paths
@@ -1014,9 +1014,9 @@ class SnapshotTable:
         ``strategy="global"``: the original whole-table window fold.
 
         ``strategy="auto"`` (default): bucketed only when the base
-        dwarfs the deltas (> 4× by on-disk bytes — metadata-only
-        check). When base ≈ deltas (early life of a table, or the
-        very first fold where no base exists) the global window is
+        dwarfs the deltas (> 4× by the row counts the manifest
+        records — no file I/O). When base ≈ deltas (early life of a
+        table, or the very first fold where no base exists) the global window is
         cheaper: the bucketed fold's Arrow/Python per-bucket hop has
         a fixed cost the incremental shuffle saving can't cover
         until the base is large. At 10^10 base rows folding 10^6-row
@@ -1047,7 +1047,8 @@ class SnapshotTable:
 
     def _compact_minor_locked(self) -> None:
         with self._mlock:
-            folding = list(self._read_manifest()["deltas"])
+            m = self._read_manifest()
+        folding = list(m["deltas"])
         if len(folding) < 2:
             return
         t0 = time.time()
@@ -1055,9 +1056,10 @@ class SnapshotTable:
         # deltas only (snapshot=None): the LWW resolve keeps the
         # winning row per key across the frozen set; tombstones ride
         # along untouched
-        self._read_parts(None, folding).write.parquet(os.path.join(self.path, tmp))
+        _typed(self._read_parts(m, None, folding)).write.parquet(os.path.join(self.path, tmp))
         self._publish(
-            tmp, "dm", "compact-minor", t0, folded=folding, record={"folded": len(folding)}
+            tmp, "dm", "compact-minor", t0, _schema(m),
+            folded=folding, record={"folded": len(folding)},
         )
 
     def _compact_locked_body(self, strategy: str) -> None:
@@ -1070,17 +1072,9 @@ class SnapshotTable:
             return
         t0 = time.time()
         tag = self._fresh_tag(*_FOLD_TEMPS)
-        if strategy == "auto":
-            def _dir_bytes(sub: str) -> int:
-                d = os.path.join(self.path, sub)
-                total = 0
-                for root, _dirs, files in os.walk(d):  # bucket dirs nest
-                    total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-                return total
-
-            base_b = _dir_bytes(base) if base is not None else 0
-            delta_b = sum(_dir_bytes(d) for d in folding)
-            strategy = "bucketed" if base_b > 4 * delta_b else "global"
+        if strategy == "auto":  # manifest row counts, no file I/O
+            base_rows, delta_rows = _manifest_row_counts(m)
+            strategy = "bucketed" if base_rows > 4 * delta_rows else "global"
         if strategy == "bucketed" and base is not None and m["base_n_buckets"] != self.n_buckets:
             # rebucketing guard (ADVICE r4): the base was written with
             # a DIFFERENT modulus than this handle's n_buckets — a
@@ -1091,12 +1085,12 @@ class SnapshotTable:
             # it; later folds go incremental again.
             strategy = "global"
         if strategy == "bucketed":
-            tmp = self._compact_bucketed(base, folding, tag)
+            tmp = self._compact_bucketed(m, tag)
         else:
             tmp = f"_compact_out_{tag}"
-            self._write_snapshot(self._read_parts(base, folding), tmp)
+            self._write_snapshot(self._read_parts(m, base, folding), tmp)
         self._publish(
-            tmp, "v", "compact", t0, folded=folding,
+            tmp, "v", "compact", t0, _schema(m), folded=folding,
             record={"strategy": strategy, "folded": len(folding)},
         )
 

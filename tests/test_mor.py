@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from kahi_spark.gen import make_events
@@ -74,9 +75,35 @@ def test_mor_schema_evolution_via_union(spark, tmp_path):
     assert "meta" in out.columns
     got = {r.conv_id: r.meta for r in out.collect()}
     assert got == {"c1": None, "c2": "m"}
+    # a later delta without the column: the table schema keeps it,
+    # through the minor fold too
+    t.merge(spark.createDataFrame([ev(2, "insert", "c3", 0, "c", 3)], EVENT_SCHEMA), epoch_id=2)
+    got = {r.conv_id: r.meta for r in t.read().collect()}
+    assert got == {"c1": None, "c2": "m", "c3": None}
+    t.compact_minor()
+    assert {r.conv_id: r.meta for r in t.read().collect()} == got
     t.compact()
     got2 = {r.conv_id: r.meta for r in t.read().collect()}
     assert got2 == got
+    # a column that first arrives all-NULL (NullType) takes the type of
+    # the first batch that fills it, across bucketed and minor folds
+    def merge_tagged(e, conv, tag):
+        batch = spark.createDataFrame([ev(e, "insert", conv, 0, "d", e + 1)], EVENT_SCHEMA)
+        t.merge(batch.withColumn("tag", tag), epoch_id=e)
+
+    def tags():
+        return {r.conv_id: r.tag for r in t.read().collect()}
+
+    merge_tagged(3, "c4", F.lit(None))
+    t.compact(strategy="bucketed")
+    assert tags() == {"c1": None, "c2": None, "c3": None, "c4": None}
+    merge_tagged(4, "c5", F.lit("t"))
+    merge_tagged(5, "c6", F.lit(None))
+    want = {"c1": None, "c2": None, "c3": None, "c4": None, "c5": "t", "c6": None}
+    for fold in (t.compact_minor, lambda: t.compact(strategy="bucketed")):
+        assert tags() == want
+        fold()
+    assert tags() == want
 
 
 def test_bucketed_compaction_parity_with_global(spark, tmp_path):
@@ -261,8 +288,9 @@ def test_compact_overwrites_crash_leftover_version_dir(spark, tmp_path):
 
 def test_manifest_missing_protocol_field_raises(spark, tmp_path):
     """A manifest missing a field the commit protocol always writes —
-    ``snapshot_log``; ``base_n_buckets``/``base_rows`` with a base;
-    ``delta_rows_by_dir`` with deltas — is refused with a ValueError
+    ``snapshot_log``, ``trash``; ``base_n_buckets``/``base_rows`` with a
+    base; ``delta_rows_by_dir`` with deltas; ``schema`` with either — is
+    refused with a ValueError
     naming the table and the field. Reading on would be silently
     wrong: with no recorded modulus ``lookup`` would prune with a
     ``None`` modulus and return nothing."""
@@ -280,7 +308,9 @@ def test_manifest_missing_protocol_field_raises(spark, tmp_path):
     with open(mp) as f:
         good = json.load(f)
     assert good["snapshot"] and good["deltas"]
-    for field in ("snapshot_log", "base_n_buckets", "base_rows", "delta_rows_by_dir"):
+    for field in (
+        "snapshot_log", "trash", "base_n_buckets", "base_rows", "delta_rows_by_dir", "schema"
+    ):
         with open(mp, "w") as f:
             json.dump({k: v for k, v in good.items() if k != field}, f)
         with pytest.raises(ValueError, match=f"{path}.*{field}"):
@@ -623,3 +653,61 @@ def test_ratio_mode_minor_due_without_base_runs_bootstrap_major(spark, tmp_path)
     assert folds and folds[0] == "compact", folds
     assert tiered._read_manifest()["snapshot"] is not None
     assert sorted_state(plain) == sorted_state(tiered)
+
+
+def test_read_and_lookup_build_two_scans_and_no_job(spark, tmp_path):
+    """Over a base plus 8 live deltas, ``read()`` and ``lookup()`` are
+    built from the schema the manifest records: at most two FileScans
+    (the bucketed base and one scan over every delta), and no Spark job
+    starts while the frame is built (no per-dir schema inference)."""
+    t = SnapshotTable(spark, str(tmp_path / "ps"), n_buckets=4, mode="mor", compact_every=100)
+    t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "a", 0)], EVENT_SCHEMA), epoch_id=0)
+    t.compact(strategy="global")
+    for e in range(1, 9):
+        batch = [ev(e, "update", "c1", 0, f"t{e}", e), ev(100 + e, "insert", f"n{e}", 0, "x", e)]
+        t.merge(spark.createDataFrame(batch, EVENT_SCHEMA), epoch_id=e)
+    assert len(t._read_manifest()["deltas"]) == 8
+    sc = spark.sparkContext
+    for name, build in (("read", t.read), ("lookup", lambda: t.lookup("c1", 0))):
+        group = f"build-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, f"build {name}")
+        try:
+            plan = build()._jdf.queryExecution().executedPlan().toString()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        assert plan.count("FileScan") <= 2, plan
+    assert [r.text for r in t.lookup("c1", 0).collect()] == ["t8"]
+    assert t.read().count() == 9
+
+
+@pytest.mark.parametrize("strategy", ["global", "bucketed"])
+def test_major_fold_keeps_column_added_mid_fold(spark, tmp_path, monkeypatch, strategy):
+    """A delta that ADDs a column, published after a major fold froze
+    its inputs but before the fold publishes: the fold's base lacks the
+    column, and the recorded schema must still keep it — it only
+    grows, never takes the fold's written schema."""
+    t = SnapshotTable(spark, str(tmp_path / "mf"), n_buckets=2, mode="mor", compact_every=100)
+    t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "a", 1)], EVENT_SCHEMA), epoch_id=0)
+    t.compact(strategy="global")
+    t.merge(spark.createDataFrame([ev(1, "insert", "c2", 0, "b", 2)], EVENT_SCHEMA), epoch_id=1)
+    evolved = spark.createDataFrame([ev(2, "insert", "c3", 0, "c", 3)], EVENT_SCHEMA).withColumn(
+        "meta", F.lit("m")
+    )
+    real_publish = SnapshotTable._publish
+
+    def publish(self, tmp, prefix, op, *a, **kw):
+        if op == "compact":  # the fold's inputs are frozen by now
+            monkeypatch.setattr(SnapshotTable, "_publish", real_publish)
+            assert self.merge(evolved, epoch_id=2)
+        return real_publish(self, tmp, prefix, op, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "_publish", publish)
+    t.compact(strategy=strategy)
+    assert t.history()[-1]["op"] == "compact"
+    assert len(t._read_manifest()["deltas"]) == 1  # the mid-fold delta
+    want = {"c1": None, "c2": None, "c3": "m"}
+    assert {r.conv_id: r.meta for r in t.read().collect()} == want
+    assert t.lookup("c3", 0).collect()[0].meta == "m"
+    t.compact(strategy=strategy)
+    assert {r.conv_id: r.meta for r in t.read().collect()} == want
