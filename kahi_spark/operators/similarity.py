@@ -22,6 +22,19 @@ mirror the bucketing literally (no float-summation-order risk).
 Quantization at 1e-3 granularity perturbs the hyperplane directions
 by ~1e-3 radians — immaterial to LSH quality.
 
+LSH buckets and IVF cells each have ONE kernel: an Arrow-batched
+numpy matmul (``_buckets_pandas_udf``, ``_cells_pandas_udf``,
+``_int_cells_pandas_udf``). The integer ones are bit-exact with the
+DuckDB oracles that mirror them (LSH buckets, portable IVF cells).
+The JVM spelling that inlined every plane or centroid as plan
+literals computed the same results (identical checksums) and lost
+the A/B on every query (sf0.1, local[4] on 4 vCPUs, medians of 5
+interleaved rounds): ``knn_lsh`` 15.2 → 1.1 s,
+``embedding_neardup_lsh`` 7.3 → 1.0 s, ``knn_ivf_pruned`` 3.7 →
+1.2 s, ``knn_ivf`` 5.0 → 2.2 s. Most of the literal side's time was
+Catalyst planning the literal trees; the udfs keep the plan O(1) in
+planes and cells.
+
 Scores are computed in double and rounded to 6 places so results are
 engine-portable; ties break by neighbor id (deterministic).
 """
@@ -71,6 +84,26 @@ def _with_norm(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFra
     return df.select(*_norm_cols(id_col, vec_col, prefix))
 
 
+def _cosine(a: str, b: str) -> Column:
+    """Rounded cosine of two ``_with_norm`` projections by prefix."""
+    return F.round(
+        _dot(F.col(f"{a}_v"), F.col(f"{b}_v")) / (F.col(f"{a}_nrm") * F.col(f"{b}_nrm")), 6
+    )
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The one kNN tail: score each (probe, neighbor) candidate pair,
+    rank per probe by (score desc, neighbor_id asc), keep ``k``."""
+    scored = pairs.select("probe_id", "neighbor_id", _cosine("probe", "neighbor").alias("score"))
+    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.filter(F.col("score").isNotNull())  # zero-norm vectors never rank
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("probe_id", "neighbor_id", "rank", "score")
+    )
+
+
 def knn_bruteforce(
     probes: DataFrame,
     corpus: DataFrame,
@@ -83,22 +116,7 @@ def knn_bruteforce(
     shuffles; ranking is a per-probe window."""
     p = _with_norm(probes, id_col, vec_col, "probe")
     c = _with_norm(corpus, id_col, vec_col, "neighbor")
-    scored = c.join(F.broadcast(p), F.col("probe_id") != F.col("neighbor_id")).select(
-        "probe_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("probe_v"), F.col("neighbor_v"))
-            / (F.col("probe_nrm") * F.col("neighbor_nrm")),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.filter(F.col("score").isNotNull())  # zero-norm vectors never rank
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(c.join(F.broadcast(p), F.col("probe_id") != F.col("neighbor_id")), k)
 
 
 #: quantization scale for planes and vectors (see module docstring)
@@ -128,22 +146,25 @@ def quantize_expr(vec_double: Column) -> Column:
     return F.transform(vec_double, lambda x: F.round(x * LSH_SCALE).cast("long"))
 
 
-def _int_dot(q: Column, plane: list[int]) -> Column:
-    lits = F.array(*[F.lit(x).cast("long") for x in plane])
-    return F.aggregate(
-        F.zip_with(q, lits, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, x: s + x
-    )
+def _quantize_np(vecs: pd.Series):
+    """``quantize_expr`` in numpy, for a batch of vectors: an
+    (n, dim) int64 matrix. Rounds half AWAY FROM ZERO like Spark and
+    DuckDB (numpy's np.round is half-to-even, which would flip buckets
+    on exact .5 values like 0.0625·1000), as floor(|v|) + (frac ≥ .5).
+    NOT floor(|v| + 0.5): one ULP below .5 (0.49999999999999994) the
+    addition rounds UP to exactly 1.0 while Spark/DuckDB round to 0."""
+    import numpy as np
+
+    v = np.asarray(vecs.tolist(), dtype=np.float64) * LSH_SCALE
+    absv = np.abs(v)
+    fl = np.floor(absv)
+    return (np.sign(v) * (fl + (absv - fl >= 0.5))).astype(np.int64)
 
 
 def _buckets_pandas_udf(planes: list[list[list[int]]]):
     """Arrow-batched bucket computation: one numpy int64 matmul per
-    batch replaces n_tables×n_planes interpreted HOF dot products per
-    row — the vectorized fast path for 10^9-vector corpora.
-
-    Bit-exact with the JVM expressions AND the DuckDB oracle:
-    quantization uses round-half-AWAY-FROM-ZERO explicitly (numpy's
-    np.round is half-to-even, which would flip buckets on exact .5
-    values like 0.0625·1000)."""
+    batch gives all n_tables×n_planes sign bits of a row, bit-exact
+    with the DuckDB oracle's integer arithmetic."""
     import numpy as np
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -156,16 +177,9 @@ def _buckets_pandas_udf(planes: list[list[list[int]]]):
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def buckets(vecs: pd.Series) -> pd.Series:
-        v = np.asarray(vecs.tolist(), dtype=np.float64) * LSH_SCALE
-        # true round-half-away-from-zero: floor(|v|) + (frac ≥ .5).
-        # NOT floor(|v| + 0.5) — for doubles one ULP below .5
-        # (0.49999999999999994) the addition rounds UP to exactly 1.0
-        # while the JVM/DuckDB paths round to 0, flipping a plane bit.
-        absv = np.abs(v)
-        fl = np.floor(absv)
-        q = (np.sign(v) * (fl + (absv - fl >= 0.5))).astype(np.int64)
+        q = _quantize_np(vecs)
         bits = (q @ mat) > 0  # (n, n_tables*n_planes)
-        b = bits.reshape(len(v), n_tables, n_planes).astype(np.int64) @ weights
+        b = bits.reshape(len(q), n_tables, n_planes).astype(np.int64) @ weights
         return pd.Series(list(b))
 
     # the function IS deterministic; the marker only stops the
@@ -182,14 +196,15 @@ def bucketed_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     prefix: str = "probe",
-    vectorized: bool = True,
     checkpoint: bool = False,
 ) -> DataFrame:
     """(id, v, nrm) + one row per LSH table with the integer bucket
-    (sign bits of the quantized dot products). ``vectorized`` routes
-    bucket computation through the Arrow/numpy matmul (default — the
-    JVM higher-order-function fold is kept as the dependency-free
-    path and the cross-check in tests).
+    (sign bits of the quantized dot products). Buckets come from one
+    Arrow/numpy matmul per batch (``_buckets_pandas_udf``), bit-exact
+    with the DuckDB oracle. It is the only kernel: the JVM fold over
+    n_tables×n_planes inlined plane literals computed the same buckets
+    but lost the A/B (``knn_lsh`` 15.2 → 1.1 s at sf0.1, most of it
+    Catalyst planning the literal tree; see the module docstring).
 
     ``checkpoint`` materializes the PRE-explode frame (one row per
     vector: id, v, nrm, bucket array) — for self-join consumers
@@ -197,44 +212,13 @@ def bucketed_lsh(
     whole norm+Python-bucketing subtree once per join side; the
     checkpoint costs one pass and one corpus-sized (not
     explode-multiplied) buffer, and both sides then re-slice it."""
-    n_tables = len(planes)
-    base = _with_norm(df, id_col, vec_col, prefix)
-    if vectorized:
-        udf = _buckets_pandas_udf(planes)
-        staged = base.withColumn("_bk", udf(F.col(f"{prefix}_v")))
-        if checkpoint:
-            staged = staged.localCheckpoint(eager=True)
-        return (
-            staged.select("*", F.posexplode("_bk").alias("table_idx", "bucket"))
-            .drop("_bk")
-        )
-    base = base.withColumn("_q", quantize_expr(F.col(f"{prefix}_v")))
-
-    def bucket_expr(t: int) -> Column:
-        out = F.lit(0).cast("long")
-        for pl, plane in enumerate(planes[t]):
-            out = out + F.when(_int_dot(F.col("_q"), plane) > 0, F.lit(1 << pl)).otherwise(
-                F.lit(0)
-            )
-        return out
-
-    return (
-        base.select(
-            "*",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table_idx"), bucket_expr(t).alias("bucket")
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("b"),
-        )
-        .select("*", "b.table_idx", "b.bucket")
-        .drop("b", "_q")
+    udf = _buckets_pandas_udf(planes)
+    staged = _with_norm(df, id_col, vec_col, prefix).withColumn(
+        "_bk", udf(F.col(f"{prefix}_v"))
     )
+    if checkpoint:
+        staged = staged.localCheckpoint(eager=True)
+    return staged.select("*", F.posexplode("_bk").alias("table_idx", "bucket")).drop("_bk")
 
 
 def knn_lsh(
@@ -270,22 +254,7 @@ def knn_lsh(
         .select("probe_id", "probe_v", "probe_nrm", "neighbor_id", "neighbor_v", "neighbor_nrm")
         .dropDuplicates(["probe_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "probe_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("probe_v"), F.col("neighbor_v"))
-            / (F.col("probe_nrm") * F.col("neighbor_nrm")),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.filter(F.col("score").isNotNull())  # zero-norm vectors never rank
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "rank", "score")
-    )
+    return _top_k(cand, k)
 
 
 def lsh_cosine_pairs(
@@ -330,10 +299,7 @@ def lsh_cosine_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    score = F.round(
-        _dot(F.col("l_v"), F.col("r_v")) / (F.col("l_nrm") * F.col("r_nrm")), 6
-    )
-    return cand.select("id_a", "id_b", score.alias("score")).filter(
+    return cand.select("id_a", "id_b", _cosine("l", "r").alias("score")).filter(
         F.col("score") >= threshold
     )
 
@@ -344,37 +310,17 @@ def _centroid_norms(centroids: list[list[float]]) -> list[float]:
     return [math.sqrt(sum(x * x for x in c)) or 1.0 for c in centroids]
 
 
-def _argmax_cell(vcol: Column, nrm: Column, centroids: list[list[float]]) -> Column:
-    """1-based index of the max-cosine centroid (ties → first, i.e.
-    lowest cell id — deterministic). Cosine divides by BOTH norms —
-    the centroid norm is a driver-side constant per cell, and without
-    it large-norm centroids attract vectors (argmax of unnormalized
-    dot ≠ spherical assignment)."""
-    norms = _centroid_norms(centroids)
-    dots = F.array(
-        *[
-            _dot(vcol, F.array(*[F.lit(x) for x in c])) / (nrm * F.lit(n))
-            for c, n in zip(centroids, norms)
-        ]
-    )
-    return F.array_position(dots, F.array_max(dots)).cast("int")
-
-
 def _cells_pandas_udf(centroids: list[list[float]], nprobe: int = 1):
-    """Arrow/numpy cell assignment: one float64 matmul per batch.
-
-    The literal-expression path (``_argmax_cell``) inlines
-    n_cells × dim literals into the plan — at n_cells in the
-    thousands the expression tree blows past codegen limits and falls
-    back to interpreted evaluation. This path keeps plan size O(1)
-    regardless of k (same shape as ``_buckets_pandas_udf``).
+    """Arrow/numpy cell ranking: one float64 matmul per batch, plan
+    size O(1) in n_cells × dim (same shape as ``_buckets_pandas_udf``).
 
     Returns the ``nprobe`` best cells (1-based) by cosine, best
-    first. Ties resolve to the LOWEST cell id (stable argsort),
-    matching ``_argmax_cell``'s first-max rule for nprobe=1; exact
-    double-cosine ties deeper in the ranking are vanishingly rare and
-    only perturb which approximate cells are probed, never the gated
-    nprobe=n_cells (exact) results."""
+    first. Cosine divides by the centroid norm — without it
+    large-norm centroids attract vectors (argmax of the unnormalized
+    dot ≠ spherical assignment). Ties resolve to the LOWEST cell id
+    (stable argsort); exact double-cosine ties deeper in the ranking
+    are vanishingly rare and only perturb which approximate cells are
+    probed, never the gated nprobe=n_cells (exact) results."""
     import numpy as np
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -388,9 +334,8 @@ def _cells_pandas_udf(centroids: list[list[float]], nprobe: int = 1):
         # the vector's own norm is constant per row — argsort unaffected
         scores = (v @ mat) / cnorm
         idx = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe] + 1
-        # zero-norm vectors have no cosine cell: emit NONE (the
-        # literal path's nullif-norm yields a NULL cell; without this
-        # the two paths diverge and zero vectors drag centroids)
+        # zero-norm vectors have no cosine cell: emit NONE, so they
+        # neither route as probes nor drag centroids
         zero = ~np.any(v, axis=1)
         out = [[] if z else r.tolist() for z, r in zip(zero, idx.astype("int32"))]
         return pd.Series(out)
@@ -400,31 +345,13 @@ def _cells_pandas_udf(centroids: list[list[float]], nprobe: int = 1):
     return cells.asNondeterministic()
 
 
-#: literal-budget above which cell assignment routes through the
-#: Arrow/numpy matmul instead of inlined plan literals
-_CELL_LITERAL_BUDGET = 4096
-
-
-def _assign_cells(
-    df: DataFrame,
-    vcol: str,
-    nrm: str,
-    centroids: list[list[float]],
-    vectorized: bool | None = None,
-) -> DataFrame:
-    """Add a 1-based ``cell`` column (max-cosine centroid). ``None``
-    auto-picks: JVM literals while the plan stays small, Arrow matmul
-    beyond ``_CELL_LITERAL_BUDGET`` literals."""
-    if vectorized is None:
-        vectorized = len(centroids) * len(centroids[0]) > _CELL_LITERAL_BUDGET
-    if vectorized:
-        udf = _cells_pandas_udf(centroids, nprobe=1)
-        # try_element_at: the udf emits an EMPTY list for zero-norm
-        # vectors (no cosine cell) and plain element_at throws
-        # INVALID_ARRAY_INDEX under ANSI — NULL cell mirrors the
-        # literal path's nullif-norm (round-5 review)
-        return df.withColumn("cell", F.try_element_at(udf(F.col(vcol)), F.lit(1)))
-    return df.withColumn("cell", _argmax_cell(F.col(vcol), F.col(nrm), centroids))
+def _assign_cells(df: DataFrame, vcol: str, centroids: list[list[float]]) -> DataFrame:
+    """Add a 1-based ``cell`` column (max-cosine centroid)."""
+    udf = _cells_pandas_udf(centroids, nprobe=1)
+    # try_element_at: the udf emits an EMPTY list for zero-norm
+    # vectors (no cosine cell) and plain element_at throws
+    # INVALID_ARRAY_INDEX under ANSI — their cell is NULL instead
+    return df.withColumn("cell", F.try_element_at(udf(F.col(vcol)), F.lit(1)))
 
 
 def ivf_centroids(
@@ -438,8 +365,8 @@ def ivf_centroids(
 
     Init = the ``n_cells`` corpus vectors with the smallest
     ``xxhash64(id)`` (deterministic, data-independent sample); each
-    round assigns every vector to its max-cosine centroid (broadcast
-    literals, JVM dot products) and recomputes per-dimension means
+    round assigns every vector to its max-cosine centroid (the Arrow
+    matmul of ``_assign_cells``) and recomputes per-dimension means
     with one explode + groupBy. Only k×dim aggregate values ever
     reach the driver — the corpus itself never moves. Empty cells
     keep their previous centroid."""
@@ -453,11 +380,11 @@ def ivf_centroids(
     )
     centroids = [list(r.v) for r in seed_rows]
     for _ in range(iters):
-        # zero-norm vectors carry a NULL cell (no cosine assignment,
-        # both paths) — without the filter the centroid-update loop
-        # dereferences None (round-5 review, crash verified)
+        # zero-norm vectors carry a NULL cell (no cosine assignment)
+        # — without the filter the centroid-update loop dereferences
+        # None and crashes
         assigned = (
-            _assign_cells(base, "x_v", "x_nrm", centroids)
+            _assign_cells(base, "x_v", centroids)
             .filter(F.col("cell").isNotNull())
             .select("cell", F.posexplode(F.col("x_v")).alias("dim", "val"))
         )
@@ -496,61 +423,12 @@ def ivf_knn(
     machinery; recall at nprobe < n_cells is pytest-verified against
     ``knn_bruteforce``."""
     cents = centroids or ivf_centroids(corpus, n_cells, iters, id_col, vec_col)
-    c = _assign_cells(
-        _with_norm(corpus, id_col, vec_col, "neighbor"), "neighbor_v", "neighbor_nrm", cents
+    c = _assign_cells(_with_norm(corpus, id_col, vec_col, "neighbor"), "neighbor_v", cents)
+    topcells = _cells_pandas_udf(cents, nprobe=nprobe)
+    p = _with_norm(probes, id_col, vec_col, "probe").withColumn(
+        "cell", F.explode(topcells(F.col("probe_v")))
     )
-    p_base = _with_norm(probes, id_col, vec_col, "probe")
-    norms = _centroid_norms(cents)
-    if len(cents) * len(cents[0]) > _CELL_LITERAL_BUDGET:
-        topcells = _cells_pandas_udf(cents, nprobe=nprobe)
-        p = p_base.withColumn("cell", F.explode(topcells(F.col("probe_v"))))
-    else:
-        # the negated-cell field makes the ASCENDING lexicographic
-        # sort break score ties toward the HIGHER negcell — i.e.,
-        # after reverse(), toward the LOWEST cell id, matching the
-        # vectorized path's stable argsort and _argmax_cell's
-        # first-max rule (round-5 review: the two code paths used to
-        # disagree on exact-tie probes)
-        dots = F.array(
-            *[
-                F.struct(
-                    (
-                        _dot(F.col("probe_v"), F.array(*[F.lit(x) for x in cent]))
-                        / (F.col("probe_nrm") * F.lit(n))
-                    ).alias("d"),
-                    F.lit(-(i + 1)).alias("negcell"),
-                    F.lit(i + 1).alias("cell"),
-                )
-                for i, (cent, n) in enumerate(zip(cents, norms))
-            ]
-        )
-        p = p_base.withColumn(
-            "cell",
-            F.explode(
-                F.transform(
-                    F.slice(F.reverse(F.array_sort(dots)), 1, nprobe), lambda s: s["cell"]
-                )
-            ),
-        )
-    scored = c.join(
-        F.broadcast(p),
-        (F.col("probe_id") != F.col("neighbor_id")) & (p.cell == c.cell),
-    ).select(
-        "probe_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("probe_v"), F.col("neighbor_v"))
-            / (F.col("probe_nrm") * F.col("neighbor_nrm")),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.filter(F.col("score").isNotNull())  # zero-norm vectors never rank
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "rank", "score")
-    )
+    return _score_cells(c, p, k)
 
 
 def ivf_portable_centroids(
@@ -582,14 +460,11 @@ def ivf_portable_centroids(
 
 def _int_cells_pandas_udf(cents: list[list[int]], nprobe: int):
     """Integer-EXACT Arrow cell ranking for the portable IVF path:
-    quantize (round-half-away-from-zero, the `_buckets_pandas_udf`
-    trick), int64 matmul (exact — |dot| ≪ 2^53), divide by the
-    centroid norm in float64. Every arithmetic step is the same IEEE
-    op on the same inputs as the JVM literal expressions AND the
-    DuckDB oracle, so all three rank cells identically (ties → lower
-    cell id via stable argsort). Exists because the literal tree
-    (n_cells × dim × 2 sites) costs ~2 s of Catalyst planning PER
-    ACTION at just 8×64 — the udf keeps the plan O(1)."""
+    quantize (``_quantize_np``), int64 matmul (exact — |dot| ≪ 2^53),
+    divide by the centroid norm in float64. Every arithmetic step is
+    the same IEEE op on the same inputs as the DuckDB oracle, so both
+    rank cells identically (ties → lower cell id via stable argsort,
+    the oracle's ORDER BY d DESC, cell ASC)."""
     import math
 
     import numpy as np
@@ -603,13 +478,7 @@ def _int_cells_pandas_udf(cents: list[list[int]], nprobe: int):
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def cells(vecs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        v = np.asarray(vecs.tolist(), dtype=np.float64) * LSH_SCALE
-        absv = np.abs(v)
-        fl = np.floor(absv)
-        q = (np.sign(v) * (fl + (absv - fl >= 0.5))).astype(np.int64)
-        d = (q @ mat).astype(np.float64) / cnorm
+        d = (_quantize_np(vecs) @ mat).astype(np.float64) / cnorm
         idx = np.argsort(-d, axis=1, kind="stable")[:, :nprobe].astype("int32") + 1
         return pd.Series(list(idx))
 
@@ -628,7 +497,6 @@ def ivf_knn_portable(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k at ``nprobe < n_cells`` whose EVERY stage
     is engine-portable (VERDICT r5 #6): unlike ``ivf_knn`` — whose
@@ -646,84 +514,22 @@ def ivf_knn_portable(
     doubles as a storage partition key at 10^9 vectors), probes
     broadcast, each probe scores only ~nprobe/n_cells of the corpus."""
     cents = ivf_portable_centroids(corpus, n_cells, id_col, vec_col)
-    if vectorized:
-        # integer-exact Arrow ranking (default): same values as the
-        # literal path (cross-checked in tests) at O(1) plan size
-        rank_udf = _int_cells_pandas_udf(cents, n_cells)
-        c = (
-            _with_norm(corpus, id_col, vec_col, "neighbor")
-            .withColumn("cell", rank_udf(F.col("neighbor_v"))[0])
-        )
-        p = (
-            _with_norm(probes, id_col, vec_col, "probe")
-            .withColumn(
-                "cell", F.explode(F.slice(rank_udf(F.col("probe_v")), 1, nprobe))
-            )
-        )
-        return _score_cells(c, p, k)
-    import math
-
-    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
-
-    def affinities(qcol: Column) -> Column:
-        # ascending lexicographic sort on (d, negcell) + reverse ==
-        # (d DESC, cell ASC) — the same tie rule as the oracle's
-        # row_number() ORDER BY d DESC, cell ASC
-        return F.array(
-            *[
-                F.struct(
-                    (_int_dot(qcol, cent).cast("double") / F.lit(n)).alias("d"),
-                    F.lit(-(i + 1)).alias("negcell"),
-                    F.lit(i + 1).alias("cell"),
-                )
-                for i, (cent, n) in enumerate(zip(cents, cnorms))
-            ]
-        )
-
-    c = (
-        _with_norm(corpus, id_col, vec_col, "neighbor")
-        .withColumn("_q", quantize_expr(F.col("neighbor_v")))
-        .withColumn("cell", F.reverse(F.array_sort(affinities(F.col("_q"))))[0]["cell"])
-        .drop("_q")
+    rank_udf = _int_cells_pandas_udf(cents, n_cells)
+    c = _with_norm(corpus, id_col, vec_col, "neighbor").withColumn(
+        "cell", rank_udf(F.col("neighbor_v"))[0]
     )
-    p = (
-        _with_norm(probes, id_col, vec_col, "probe")
-        .withColumn("_q", quantize_expr(F.col("probe_v")))
-        .withColumn(
-            "cell",
-            F.explode(
-                F.transform(
-                    F.slice(F.reverse(F.array_sort(affinities(F.col("_q")))), 1, nprobe),
-                    lambda s: s["cell"],
-                )
-            ),
-        )
-        .drop("_q")
+    p = _with_norm(probes, id_col, vec_col, "probe").withColumn(
+        "cell", F.explode(F.slice(rank_udf(F.col("probe_v")), 1, nprobe))
     )
     return _score_cells(c, p, k)
 
 
 def _score_cells(c: DataFrame, p: DataFrame, k: int) -> DataFrame:
-    """Shared IVF tail: broadcast the routed probes into the assigned
-    corpus, exact rounded cosine on cell-mates, per-probe top-k."""
-    scored = c.join(
-        F.broadcast(p),
-        (F.col("probe_id") != F.col("neighbor_id")) & (p.cell == c.cell),
-    ).select(
-        "probe_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("probe_v"), F.col("neighbor_v"))
-            / (F.col("probe_nrm") * F.col("neighbor_nrm")),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.filter(F.col("score").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "rank", "score")
+    """Shared IVF join: broadcast the routed probes into the assigned
+    corpus, then the kNN tail over cell-mates."""
+    return _top_k(
+        c.join(F.broadcast(p), (F.col("probe_id") != F.col("neighbor_id")) & (p.cell == c.cell)),
+        k,
     )
 
 
@@ -738,11 +544,8 @@ def cosine_pairs(
     ``lsh_cosine_pairs`` (bucket-blocked candidates)."""
     a = _with_norm(df, id_col, vec_col, "l").withColumnRenamed("l_id", "id_a")
     b = _with_norm(df, id_col, vec_col, "r").withColumnRenamed("r_id", "id_b")
-    score = F.round(
-        _dot(F.col("l_v"), F.col("r_v")) / (F.col("l_nrm") * F.col("r_nrm")), 6
-    )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", score.alias("score"))
+        .select("id_a", "id_b", _cosine("l", "r").alias("score"))
         .filter(F.col("score") >= threshold)
     )

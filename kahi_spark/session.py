@@ -53,6 +53,17 @@ def _default_local_dir() -> str | None:
 #: long-lived driver compiles each class once.
 CODEGEN_CACHE_ENTRIES = 4000
 
+#: ``spark.sql.sources.parallelPartitionDiscovery.threshold``: a read
+#: over more paths than this lists their files with a Spark job
+#: instead of on the driver. A MOR table's read passes every live delta
+#: dir to one ``parquet(*deltas)`` call, so at the default of 32 a
+#: table with 40 deltas started a job while ``read()`` was only being
+#: built, and a base with more than 32 ``_bucket=`` dirs does the same.
+#: Live deltas are bounded by compaction and buckets by the table's
+#: layout, far below 1024, and listing that many local or HDFS dirs on
+#: the driver takes milliseconds where a job costs a scheduling round.
+LISTING_JOB_THRESHOLD = 1024
+
 
 def get_spark(
     app_name: str = "kahi_spark",
@@ -91,6 +102,10 @@ def get_spark(
         .config("spark.driver.memory", mem)
         # static conf: must be set before the JVM's first session
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LISTING_JOB_THRESHOLD),
+        )
         # long replays accumulate RDD/broadcast/checkpoint refs whose
         # cleanup rides ContextCleaner WEAK references — the default
         # periodic System.gc() every 30 min is longer than an entire

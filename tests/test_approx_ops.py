@@ -3,6 +3,8 @@ near-dup detection, MinHash signature properties."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -137,40 +139,66 @@ def test_ivf_knn_recall_at_small_nprobe(spark):
     # float-nondeterministic centroid boundaries
 
 
-def test_lsh_bucketing_vectorized_matches_jvm(spark):
-    """The Arrow/numpy bucket matmul must produce bit-identical
-    buckets to the JVM higher-order-function fold (both must match
-    the DuckDB oracle's integer arithmetic) — including the
-    round-half-away-from-zero edge (numpy's default is half-to-even;
-    0.0625·1000 = 62.5 exactly)."""
+def _quantize_ref(x: float) -> int:
+    """round(x·1000) half AWAY FROM ZERO on the exact double, as Spark
+    and DuckDB round (Python's round() is half-to-even)."""
+    a = abs(x * 1000)
+    return int(math.copysign(math.floor(a) + (a - math.floor(a) >= 0.5), x))
+
+
+def _lsh_buckets_ref(q: list[int], planes) -> list[int]:
+    """Per-table bucket of a quantized vector: bit ``pl`` is set when
+    the integer dot with plane ``pl`` is positive."""
+    return [
+        sum(1 << pl for pl, plane in enumerate(tbl) if sum(a * b for a, b in zip(q, plane)) > 0)
+        for tbl in planes
+    ]
+
+
+def test_lsh_bucketing_matches_reference(spark):
+    """``bucketed_lsh``'s Arrow/numpy matmul must produce the buckets a
+    pure-Python integer reference computes (the DuckDB oracle's integer
+    arithmetic) — including the round-half-away-from-zero edge (numpy's
+    default is half-to-even; 0.0625·1000 = 62.5 exactly)."""
+    import random
+
     from kahi_spark.operators.similarity import bucketed_lsh, lsh_planes
 
+    planes = lsh_planes(dim=64, n_planes=8, n_tables=4, seed=42)
     rows = [(i, [((i * 7 + j) % 13 - 6) / 16.0 for j in range(64)]) for i in range(50)]
     rows.append((100, [0.0625] * 64))   # exact .5 after ×1000
     rows.append((101, [-0.0625] * 64))
-    # one ULP below .5 after ×1000: 0.49999999999999994 + 0.5 == 1.0
-    # in float64, so a naive floor(|v|+0.5) rounds UP while the
-    # JVM/DuckDB paths round DOWN (the classic half-away pitfall)
+    # the largest doubles below ±.0005: ×1000 they are ±0.4999999999999999,
+    # which Spark and DuckDB round to 0
     rows.append((102, [0.49999999999999994 / 1000.0] * 64))
     rows.append((103, [-0.49999999999999994 / 1000.0] * 64))
+    # rows whose buckets hang on the tie rule: a constant vector's
+    # signs cannot tell 63 from 62, so mix ±62.5 with other values and
+    # keep the rows where half-to-even (Python's round) flips a bucket
+    rnd = random.Random(7)
+    while len(rows) < 58:
+        vec = [rnd.choice((0.0625, -0.0625, 0.001, -0.003)) for _ in range(64)]
+        even = [round(x * 1000) for x in vec]
+        if _lsh_buckets_ref(even, planes) != _lsh_buckets_ref([_quantize_ref(x) for x in vec], planes):
+            rows.append((200 + len(rows), vec))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    planes = lsh_planes(dim=64, n_planes=8, n_tables=4, seed=42)
-    fast = {
-        (r.x_id, r.table_idx): r.bucket
-        for r in bucketed_lsh(emb, planes, prefix="x", vectorized=True).collect()
+    want = {
+        (vid, t): b
+        for vid, vec in rows
+        for t, b in enumerate(_lsh_buckets_ref([_quantize_ref(x) for x in vec], planes))
     }
-    slow = {
+    got = {
         (r.x_id, r.table_idx): r.bucket
-        for r in bucketed_lsh(emb, planes, prefix="x", vectorized=False).collect()
+        for r in bucketed_lsh(emb, planes, prefix="x").collect()
     }
-    assert fast == slow and len(fast) == 54 * 4
+    assert got == want and len(got) == 58 * 4
 
 
 def test_ivf_vectorized_cell_assignment_bounds_plan(spark):
-    """At n_cells×dim past the literal budget, cell assignment must
-    route through the Arrow matmul: the plan stays O(1) in k instead
-    of inlining n_cells×dim literals (16k doubles at 256×64 blows
-    codegen), and nprobe=n_cells stays exactly brute force."""
+    """Cell assignment runs as the Arrow matmul: the plan stays O(1)
+    in k instead of inlining n_cells×dim literals (16k doubles at
+    256×64 blows codegen), and nprobe=n_cells stays exactly brute
+    force."""
     from kahi_spark.operators.similarity import (
         _assign_cells,
         _with_norm,
@@ -181,13 +209,13 @@ def test_ivf_vectorized_cell_assignment_bounds_plan(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = [[((i * 13 + j) % 29 - 14) / 10.0 for j in range(64)] for i in range(256)]
     base = _with_norm(emb.limit(50), "vec_id", "embedding", "x")
-    assigned = _assign_cells(base, "x_v", "x_nrm", cents)  # auto → vectorized
+    assigned = _assign_cells(base, "x_v", cents)
     plan = assigned._jdf.queryExecution().analyzed().toString()
     assert len(plan) < 20_000, f"plan inlines centroid literals ({len(plan)} chars)"
     cells = [r.cell for r in assigned.collect()]
     assert all(1 <= c <= 256 for c in cells) and len(set(cells)) > 1
-    # large-k end-to-end: full-probe IVF (vectorized assignment on
-    # both sides) still equals brute force
+    # large-k end-to-end: full-probe IVF (matmul assignment and
+    # routing) still equals brute force
     probes = emb.filter("vec_id < 3")
     exact = sorted(map(tuple, knn_bruteforce(probes, emb, k=3).collect()))
     ivf = sorted(
@@ -211,9 +239,8 @@ def test_argmax_cell_uses_centroid_norm(spark):
     # is 45° off but 100× the magnitude (bigger raw dot)
     cents = [[0.01, 0.0], [70.0, 70.0]]
     base = _with_norm(emb, "vec_id", "embedding", "x")
-    for vec in (False, True):
-        got = _assign_cells(base, "x_v", "x_nrm", cents, vectorized=vec).collect()[0].cell
-        assert got == 1, f"vectorized={vec}: unnormalized dot won ({got})"
+    got = _assign_cells(base, "x_v", cents).collect()[0].cell
+    assert got == 1, f"unnormalized dot won ({got})"
 
 
 def test_zero_norm_vectors_never_rank(spark):
@@ -243,9 +270,9 @@ def test_zero_norm_vectors_never_rank(spark):
 
 def test_ivf_handles_zero_norm_vectors(spark):
     """A zero embedding must not crash the Lloyd update (its cell is
-    NULL on both assignment paths — round-5 review: the centroid
-    loop dereferenced None) nor drag centroids, and full-probe IVF
-    must still equal brute force on the remaining vectors."""
+    NULL — the centroid loop once dereferenced None) nor drag
+    centroids, and full-probe IVF must still equal brute force on the
+    remaining vectors."""
     import numpy as np
 
     from kahi_spark.operators.similarity import (
@@ -275,7 +302,7 @@ def test_ivf_handles_zero_norm_vectors(spark):
     assert ivf == exact
     assert not any(r[1] == 60 for r in ivf)  # zero vector never ranks
 
-    # the vectorized assignment path agrees: zero vector → no cell
+    # the cell ranking gives the zero vector no cell
     udf = _cells_pandas_udf(cents, nprobe=1)
     got = {
         r.vec_id: r.c
@@ -284,23 +311,14 @@ def test_ivf_handles_zero_norm_vectors(spark):
     assert got[60] == []
     assert all(len(got[i]) == 1 for i in range(60))
 
-    # ...and through _assign_cells with the vectorized path FORCED:
-    # plain element_at on the empty sentinel throws under ANSI
-    # (round-5 review); the cell must come back NULL instead
+    # ...and through _assign_cells: plain element_at on the empty
+    # sentinel throws under ANSI; the cell must come back NULL instead
     from kahi_spark.operators.similarity import _assign_cells, _with_norm
 
     base = _with_norm(emb, "vec_id", "embedding", "x")
-    cells = {
-        r.x_id: r.cell
-        for r in _assign_cells(base, "x_v", "x_nrm", cents, vectorized=True).collect()
-    }
+    cells = {r.x_id: r.cell for r in _assign_cells(base, "x_v", cents).collect()}
     assert cells[60] is None
     assert all(cells[i] is not None for i in range(60))
-    lit = {
-        r.x_id: r.cell
-        for r in _assign_cells(base, "x_v", "x_nrm", cents, vectorized=False).collect()
-    }
-    assert lit == cells  # both paths agree, zero vector included
 
 
 def test_ivf_portable_full_probe_equals_bruteforce(spark):
@@ -318,34 +336,46 @@ def test_ivf_portable_full_probe_equals_bruteforce(spark):
     assert ivf == exact
 
 
-def test_ivf_portable_vectorized_matches_literal(spark):
-    """The integer-exact Arrow ranking (default) must equal the JVM
-    literal-expression path row for row — same quantization, same
-    int64 dots, same IEEE division and tie rule; the udf exists only
-    to kill the ~2 s/action Catalyst planning cost of the 512-literal
-    tree (measured 3.7 s → 1.1 s at sf0.1)."""
-    from kahi_spark.operators.similarity import ivf_knn_portable
+def _portable_cell_ranking(emb, n_cells: int) -> dict:
+    """Local re-computation of ``ivf_knn_portable``'s cell ranking:
+    quantize each vector, integer dots with the portable centroids,
+    divide by the centroid norm, order by (d desc, cell asc). Returns
+    {vec_id: [1-based cells, best first]}."""
+    from kahi_spark.operators.similarity import ivf_portable_centroids
+
+    cents = ivf_portable_centroids(emb, n_cells)
+    cnorm = [math.sqrt(sum(x * x for x in c)) for c in cents]
+    ranking = {}
+    for r in emb.select("vec_id", "embedding").collect():
+        q = [_quantize_ref(x) for x in r.embedding]
+        d = [sum(a * b for a, b in zip(q, c)) / n for c, n in zip(cents, cnorm)]
+        ranking[r.vec_id] = [i + 1 for i in sorted(range(n_cells), key=lambda i: (-d[i], i))]
+    return ranking
+
+
+def test_ivf_portable_matches_reference(spark):
+    """``ivf_knn_portable`` row for row against the local cell ranking:
+    each probe's top-k over exactly the corpus rows whose assigned cell
+    is among its ``nprobe`` best cells (brute-force scores, restricted
+    to those candidates), at a pruned and at the full nprobe."""
+    from kahi_spark.operators.similarity import ivf_knn_portable, knn_bruteforce
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     probes = emb.filter("vec_id < 10")
+    ranking = _portable_cell_ranking(emb, 8)
+    every = knn_bruteforce(probes, emb, k=emb.count()).collect()
+    every.sort(key=lambda r: (r.probe_id, r.rank))
     for nprobe in (2, 8):
-        a = sorted(
-            map(
-                tuple,
-                ivf_knn_portable(
-                    probes, emb, k=5, n_cells=8, nprobe=nprobe, vectorized=True
-                ).collect(),
-            )
+        want = []
+        for pid in range(10):
+            probed = set(ranking[pid][:nprobe])
+            kept = [r for r in every if r.probe_id == pid and ranking[r.neighbor_id][0] in probed]
+            want += [(pid, r.neighbor_id, i + 1, r.score) for i, r in enumerate(kept[:5])]
+        got = sorted(
+            map(tuple, ivf_knn_portable(probes, emb, k=5, n_cells=8, nprobe=nprobe).collect())
         )
-        b = sorted(
-            map(
-                tuple,
-                ivf_knn_portable(
-                    probes, emb, k=5, n_cells=8, nprobe=nprobe, vectorized=False
-                ).collect(),
-            )
-        )
-        assert a == b, nprobe
+        assert got == sorted(want), nprobe
+        assert len(got) == 50, nprobe
 
 
 def test_ivf_portable_pruning_is_real(spark):
@@ -353,48 +383,17 @@ def test_ivf_portable_pruning_is_real(spark):
     bite: every returned neighbor's assigned cell lies in its probe's
     probed-cell set, and recall vs brute force stays useful on the
     cluster-structured embeddings."""
-    from kahi_spark.operators.similarity import (
-        _int_dot,
-        _with_norm,
-        ivf_knn_portable,
-        ivf_portable_centroids,
-        knn_bruteforce,
-        quantize_expr,
-    )
+    from kahi_spark.operators.similarity import ivf_knn_portable, knn_bruteforce
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     probes = emb.filter("vec_id < 10")
     got = ivf_knn_portable(probes, emb, k=5, n_cells=8, nprobe=2).collect()
     assert got, "portable IVF returned nothing"
 
-    # independent re-computation of assignments/routing in local numpy
-    import math
-
-    import numpy as np
-
-    cents = ivf_portable_centroids(emb, 8)
-    cn = np.array(cents, dtype=np.float64)
-    cnorm = np.sqrt((cn * cn).sum(axis=1))
-    rows = emb.select("vec_id", "embedding").collect()
-    q = {
-        r.vec_id: np.array(
-            [math.floor(abs(x * 1000)) * (1 if x >= 0 else -1)
-             + (1 if (abs(x * 1000) - math.floor(abs(x * 1000))) >= 0.5 else 0)
-             * (1 if x >= 0 else -1)
-             for x in r.embedding],
-            dtype=np.float64,
-        )
-        for r in rows
-    }
-    def top_cells(v, n):
-        d = (cn @ v) / cnorm
-        order = sorted(range(8), key=lambda i: (-d[i], i))
-        return [i + 1 for i in order[:n]]
-
-    assigned = {vid: top_cells(v, 1)[0] for vid, v in q.items()}
-    probe_cells = {vid: set(top_cells(q[vid], 2)) for vid in range(10)}
+    # independent re-computation of assignments/routing
+    ranking = _portable_cell_ranking(emb, 8)
     for r in got:
-        assert assigned[r.neighbor_id] in probe_cells[r.probe_id], r
+        assert ranking[r.neighbor_id][0] in ranking[r.probe_id][:2], r
 
     exact = {
         (r.probe_id, r.neighbor_id)

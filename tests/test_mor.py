@@ -656,29 +656,34 @@ def test_ratio_mode_minor_due_without_base_runs_bootstrap_major(spark, tmp_path)
 
 
 def test_read_and_lookup_build_two_scans_and_no_job(spark, tmp_path):
-    """Over a base plus 8 live deltas, ``read()`` and ``lookup()`` are
-    built from the schema the manifest records: at most two FileScans
-    (the bucketed base and one scan over every delta), and no Spark job
-    starts while the frame is built (no per-dir schema inference)."""
+    """Over a base plus 8 live deltas, and again plus 40 (past Spark's
+    default of 32 paths, above which listing runs as a job),
+    ``read()`` and ``lookup()`` are built from the schema the manifest
+    records: at most two FileScans (the bucketed base and one scan over
+    every delta), and no Spark job starts while the frame is built (no
+    per-dir schema inference, no listing job)."""
     t = SnapshotTable(spark, str(tmp_path / "ps"), n_buckets=4, mode="mor", compact_every=100)
     t.merge(spark.createDataFrame([ev(0, "insert", "c1", 0, "a", 0)], EVENT_SCHEMA), epoch_id=0)
     t.compact(strategy="global")
-    for e in range(1, 9):
-        batch = [ev(e, "update", "c1", 0, f"t{e}", e), ev(100 + e, "insert", f"n{e}", 0, "x", e)]
-        t.merge(spark.createDataFrame(batch, EVENT_SCHEMA), epoch_id=e)
-    assert len(t._read_manifest()["deltas"]) == 8
     sc = spark.sparkContext
-    for name, build in (("read", t.read), ("lookup", lambda: t.lookup("c1", 0))):
-        group = f"build-{name}-{tmp_path.name}"
-        sc.setJobGroup(group, f"build {name}")
-        try:
-            plan = build()._jdf.queryExecution().executedPlan().toString()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
-        assert plan.count("FileScan") <= 2, plan
-    assert [r.text for r in t.lookup("c1", 0).collect()] == ["t8"]
-    assert t.read().count() == 9
+    e = 0
+    for n_deltas in (8, 40):
+        while e < n_deltas:
+            e += 1
+            batch = [ev(e, "update", "c1", 0, f"t{e}", e), ev(100 + e, "insert", f"n{e}", 0, "x", e)]
+            t.merge(spark.createDataFrame(batch, EVENT_SCHEMA), epoch_id=e)
+        assert len(t._read_manifest()["deltas"]) == n_deltas
+        for name, build in (("read", t.read), ("lookup", lambda: t.lookup("c1", 0))):
+            group = f"build-{name}-{n_deltas}-{tmp_path.name}"
+            sc.setJobGroup(group, f"build {name}")
+            try:
+                plan = build()._jdf.queryExecution().executedPlan().toString()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], (name, n_deltas)
+            assert plan.count("FileScan") <= 2, plan
+        assert [r.text for r in t.lookup("c1", 0).collect()] == [f"t{n_deltas}"]
+        assert t.read().count() == 1 + n_deltas
 
 
 @pytest.mark.parametrize("strategy", ["global", "bucketed"])
