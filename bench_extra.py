@@ -7,7 +7,10 @@ Modes:
 * ``python bench_extra.py time q1 q2 ... [--rounds N]`` — per-query
   wall seconds, same protocol as bench.py's headline phase (fresh
   session, sf0.01 codegen warmup, min-of-N interleaved, full-column
-  xxhash64-checksum materialization).
+  xxhash64-checksum materialization). ``results`` maps each query to
+  its distinct ``[rows, checksum]`` pairs over the rounds (one pair
+  for a deterministic query), so two trees' runs show whether they
+  computed the same answer.
 * ``python bench_extra.py plan q1 q2 ... [--out DIR]`` — dump
   ``.explain("formatted")`` per query (the judge-checkable plan
   evidence in plans/r07/).
@@ -38,13 +41,20 @@ def _session():
     return fresh_session(f"local[{CPUS}]", CPUS)
 
 
-def _materialize(df, noop: bool = False) -> None:
+def _materialize(df, noop: bool = False) -> list[int] | None:
+    """Evaluate every output column. Returns ``[rows, checksum]`` —
+    ``bench.py::materialize``'s aggregate, whose checksum that frozen
+    function discards — or None for the noop sink."""
     if noop:
         df.write.format("noop").mode("overwrite").save()
-        return
-    from bench import materialize
+        return None
+    from pyspark.sql import functions as F
 
-    materialize(df)
+    row = df.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("chk"),
+    ).collect()[0]
+    return [row.rows, row.chk]
 
 
 def _prepare(spark, names: list[str]) -> None:
@@ -71,11 +81,14 @@ def cmd_time(names: list[str], rounds: int, noop: bool) -> None:
     spark = _session()
     _prepare(spark, names)
     timings: dict[str, list[float]] = {n: [] for n in names}
+    results: dict[str, list[list[int]]] = {n: [] for n in names}
     for _ in range(rounds):
         for n in names:
             t0 = time.time()
-            _materialize(QUERIES[n](spark, SF_DIR), noop=noop)
+            res = _materialize(QUERIES[n](spark, SF_DIR), noop=noop)
             timings[n].append(round(time.time() - t0, 3))
+            if res is not None and res not in results[n]:
+                results[n].append(res)
     out = {
         "sf_dir": SF_DIR,
         "rounds": rounds,
@@ -84,6 +97,8 @@ def cmd_time(names: list[str], rounds: int, noop: bool) -> None:
         "samples": timings,
         "total_min": round(sum(min(v) for v in timings.values()), 3),
     }
+    if not noop:
+        out["results"] = results
     print(json.dumps(out))
     spark.stop()
 

@@ -7,9 +7,7 @@ from kahi_spark.operators.dedup import (
     minhash_lsh_pairs,
     shingle_df,
     simhash32_neardup_pairs,
-    simhash_neardup_pairs,
     verify_jaccard,
-    with_simhash,
     with_simhash32_md5,
 )
 from kahi_spark.operators.fuzzy import (
@@ -51,9 +49,7 @@ __all__ = [
     "minhash_lsh_pairs",
     "shingle_df",
     "simhash32_neardup_pairs",
-    "simhash_neardup_pairs",
     "verify_jaccard",
-    "with_simhash",
     "with_simhash32_md5",
     "bigram_jaccard_expr",
     "char_bigrams_expr",

@@ -4,8 +4,11 @@ the scale path for the reference's fuzzy similarity dedup, J3 —
 O(N·M) candidate loop never happens).
 
 All operators are pure DataFrame: shingling with higher-order array
-functions, hashing with ``xxhash64`` (JVM), candidate generation via
-equi-joins on block keys. No Python in the hot path.
+functions, hashing every shingle with the one 60-bit md5 hash
+(``H60_SPARK_SQL``; DuckDB computes the same value from
+``H60_DUCKDB_SQL``, so the oracles mirror the signatures the engine
+computes), candidate generation via equi-joins on block keys. No
+Python in the hot path.
 
 At 100 TB: the shingle/band join is the only shuffle; its key space
 (band_idx, band_signature) is high-cardinality and uniform by
@@ -14,12 +17,23 @@ construction, so no skew; candidates are a tiny fraction of pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Mersenne prime modulus of the MinHash universal-hash permutation
 #: family (public: the DuckDB oracles mirror the signatures with it)
 MINHASH_P = (1 << 31) - 1
+
+#: The engine's one shingle/feature hash, as a Spark SQL template
+#: (``{x}`` = a string expression): the first 15 hex digits of md5 as
+#: a signed long. 60 bits keep the value inside the signed-64 range,
+#: so the ANSI cast never throws. Every Spark site formats this copy.
+H60_SPARK_SQL = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+#: The DuckDB spelling of ``H60_SPARK_SQL`` — bit-identical values, so
+#: an oracle mirrors every hash the engine computes. Every oracle
+#: formats this copy.
+H60_DUCKDB_SQL = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 #: DuckDB mirror of ``shingle_df``'s word-3gram distinct shingles —
 #: the ONE template every oracle formats (``{x}`` = text expression;
@@ -197,27 +211,23 @@ def minhash_coeffs(n_hashes: int = 64, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def _minhash_sql(
-    shingles: str, n_hashes: int = 64, seed: int = 42, portable: bool = False
-) -> str:
+def _minhash_sql(shingles: str, n_hashes: int = 64, seed: int = 42) -> str:
     """The MinHash signature (``array<bigint>``, ``n_hashes`` slots) of
     the shingle-array column ``shingles`` as ONE Spark SQL expression:
-    slot i = min over shingles x of h_i(x) = (a_i·h(x) + b_i) mod p.
-    Each shingle is hashed once, then folded into the running minima
-    — no explode, no shuffle (one SQL string: Column-operator chains
-    cost ~0.3 s of py4j round-trips per query construction).
+    slot i = min over shingles x of h_i(x) = (a_i·h(x) + b_i) mod p,
+    with h the 60-bit md5 hash (``H60_SPARK_SQL``). Each shingle is
+    hashed once, then folded into the running minima — no explode, no
+    shuffle (one SQL string: Column-operator chains cost ~0.3 s of
+    py4j round-trips per query construction).
 
-    ``portable=False`` (production) hashes shingles with xxhash64 —
-    the fast JVM path. ``portable=True`` uses the 60-bit md5 hash
-    (``h60_md5_expr``) that DuckDB reproduces bit-for-bit, so an
-    oracle can mirror the SIGNATURES themselves (needed when the
-    verdict is signature-estimated Jaccard, not exact-Jaccard — see
-    sinks/dedup_index.py). An empty array gives p in every slot."""
-    h = (
-        "CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"
-        if portable
-        else "xxhash64(s)"
-    )
+    DuckDB reproduces h bit-for-bit, so an oracle can mirror the
+    SIGNATURES themselves (needed when the verdict is
+    signature-estimated Jaccard, not exact Jaccard — see
+    sinks/dedup_index.py). Measured against xxhash64 over the same
+    shingles, md5 signs within noise: the 64-slot fold dominates
+    signing, not the shingle hash. An empty array gives p in every
+    slot."""
+    h = H60_SPARK_SQL.format(x="s")
     coeffs = ", ".join(
         f"named_struct('a', {a}, 'b', {b})" for a, b in minhash_coeffs(n_hashes, seed)
     )
@@ -245,7 +255,6 @@ def minhash_bands(
     n_hashes: int = 64,
     n_bands: int = 16,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """(id, sig array<bigint>, bands array<bigint>): one row per doc
     with at least one shingle — two projections, no explode, no
@@ -257,9 +266,7 @@ def minhash_bands(
         .filter(F.size("_tk") >= n)
         .select(
             F.col(id_col),
-            F.expr(_minhash_sql(_shingles_sql("_tk", n), n_hashes, seed, portable)).alias(
-                "sig"
-            ),
+            F.expr(_minhash_sql(_shingles_sql("_tk", n), n_hashes, seed)).alias("sig"),
         )
         .withColumn("bands", F.expr(_lsh_bands_sql("sig", n_bands, n_hashes // n_bands)))
     )
@@ -280,9 +287,24 @@ def minhash_lsh_pairs(
     rows; docs sharing any band signature become a candidate pair.
     Returns distinct (doc_a < doc_b) candidates — callers verify
     with exact Jaccard (see queries.q_minhash_lsh_neardup).
+
+    ``posexplode_outer``, not ``posexplode``: for an inner generator
+    over an attribute, Spark's ``InferFiltersFromGenerate`` adds
+    ``size(bands) > 0 AND isnotnull(bands)``, and predicate pushdown
+    then inlines the whole MinHash fold into the scan's Filter — four
+    extra folds per doc, with ``split(text)`` re-evaluated per element
+    (the query ran ~75× slower at sf0.1). Every ``minhash_bands`` row
+    has ``n_bands`` non-NULL bands, so outer adds no rows.
+
+    The bands are repartitioned on the join key before the self-join:
+    both sides then read one reused exchange, so each doc is signed
+    once (without it the broadcast and the streamed side each ran the
+    whole signature fold).
     """
-    bands = minhash_bands(docs, id_col, text_col, n, n_hashes, n_bands, seed).select(
-        F.col(id_col), F.posexplode("bands").alias("band_idx", "band_sig")
+    bands = (
+        minhash_bands(docs, id_col, text_col, n, n_hashes, n_bands, seed)
+        .select(F.col(id_col), F.posexplode_outer("bands").alias("band_idx", "band_sig"))
+        .repartition("band_idx", "band_sig")
     )
     a = bands.alias("a")
     b = bands.alias("b")
@@ -300,53 +322,6 @@ def minhash_lsh_pairs(
     )
 
 
-def with_simhash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-    out_col: str = "simhash",
-) -> DataFrame:
-    """64-bit SimHash: per token t, xxhash64(t) votes ±1 on each bit;
-    the sign of each bit-sum is the fingerprint bit. Near-dups differ
-    in few bits (Hamming distance).
-
-    Pure higher-order functions — no explode, no shuffle, no UDF.
-    Two selects on purpose: the vote vector is materialized as its
-    own column before the 64-reference bit-fold; inlining it would
-    re-evaluate the whole token aggregate per referenced bit
-    (CollapseProject keeps multi-referenced non-cheap aliases).
-
-    Round 7: both big expressions are built as SQL strings (one parser
-    call each — the Column-operator loops cost ~1 s of py4j round-trips
-    per construction; same fix as the md5 variants). xxhash64(t)
-    appears in all 64 vote branches, but this is NOT the per-element
-    re-evaluation trap: interpreted expressions get runtime
-    subexpression elimination, so the hash runs once per token.
-    MEASURED (sf0.1, round-5 review follow-up): pre-hashing via
-    F.transform into an intermediate array is 4× SLOWER (0.5 s →
-    2.1 s warm) than this direct form — don't "fix" it."""
-    vote_terms = ", ".join(
-        f"CASE WHEN (shiftright(xxhash64(t), {b}) & 1) = 1 THEN 1 ELSE -1 END"
-        for b in range(bits)
-    )
-    votes_sql = (
-        f"aggregate(array_distinct(split({text_col}, ' ')), "
-        f"array_repeat(CAST(0 AS INT), {bits}), "
-        f"(acc, t) -> zip_with(acc, array({vote_terms}), (a, v) -> a + v))"
-    )
-    staged = docs.select(F.col(id_col), F.expr(votes_sql).alias("_votes"))
-    # top bit uses the sign position of the signed long; its weight is
-    # spelled shiftleft(1, 63) — the literal -2^63 does not parse as a
-    # BIGINT (the positive half overflows before the unary minus)
-    fp_sql = " | ".join(
-        "(CASE WHEN element_at(_votes, %d) > 0 THEN %s ELSE CAST(0 AS BIGINT) END)"
-        % (b + 1, f"CAST({1 << b} AS BIGINT)" if b < 63 else "shiftleft(CAST(1 AS BIGINT), 63)")
-        for b in range(bits)
-    )
-    return staged.select(F.col(id_col), F.expr(fp_sql).alias(out_col))
-
-
 def with_simhash32_md5(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -357,10 +332,9 @@ def with_simhash32_md5(
     fingerprint bit-for-bit. Shingle features (not bare tokens): on a
     small-vocabulary corpus every document contains nearly the same
     token SET, so token-level SimHash cannot discriminate; 3-gram
-    shingles restore the feature diversity SimHash needs. The 64-bit
-    ``with_simhash`` (xxhash64, no explode) remains the scale path;
-    this variant exists so SimHash semantics are oracle-gated end to
-    end.
+    shingles restore the feature diversity SimHash needs. The 60-bit
+    ``with_simhash60_md5`` is the wide-band variant; this one is the
+    small-radius query.
 
     Shape: explode distinct shingles → 32 ±1 vote sums per doc (one
     map-side-combinable aggregation) → sign fold into a 32-bit long.
@@ -403,17 +377,6 @@ def with_simhash32_md5(
     return sums.select(F.col(id_col), F.expr(fp_sql).alias("simhash32"))
 
 
-def h60_md5_expr(col: Column) -> Column:
-    """Portable 60-bit hash: the first 15 hex digits of md5 as a
-    signed long. Renders identically in Spark
-    (``conv(substr(md5(x),1,15),16,10)``) and DuckDB
-    (``('0x'||substr(md5(x),1,15))::BIGINT``) — 60 bits keeps the
-    value inside the signed-64 range so the ANSI cast never throws.
-    The engine-portable stand-in for ``xxhash64`` wherever an oracle
-    must mirror hashing bit-for-bit."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def with_simhash60_md5(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -438,7 +401,7 @@ def with_simhash60_md5(
     toks = shingle_df(docs, id_col=id_col, text_col=text_col, n=3).withColumnRenamed(
         "shingle", "tok"
     )
-    hashed = toks.select(id_col, h60_md5_expr(F.col("tok")).alias("h"))
+    hashed = toks.select(id_col, F.expr(H60_SPARK_SQL.format(x="tok")).alias("h"))
 
     # round 7: packed/fold as SQL strings — the Column-operator loops
     # cost ~2 s of py4j round-trips per query construction (measured:
@@ -472,7 +435,7 @@ def _banded_hamming_pairs(
     max_hamming: int,
     id_col: str,
 ) -> DataFrame:
-    """Shared core of the three SimHash pair queries: band the
+    """Shared core of the two SimHash pair queries: band the
     fingerprint, bucket-join on (band_idx, band_val), exact-Hamming
     filter. ONE copy (round-5 review) so a banding fix cannot
     silently miss a variant.
@@ -563,9 +526,8 @@ def simhash32_neardup_pairs(
     Output: (doc_a, doc_b, hamming).
 
     SCALE LIMIT (honest): band-key cardinality bounds how far banding
-    alone can go — 8-bit bands have 256 values, 16-bit (the 64-bit
-    ``simhash_neardup_pairs``) 65k, so at ~10^8+ docs the per-bucket
-    population makes the bucket join quadratic again. At web scale
+    alone can go — 8-bit bands have 256 values, so at ~10^8+ docs the
+    per-bucket population makes the bucket join quadratic again. At web scale
     either widen bands (radius guarantee shrinks), add a conjunctive
     cheap block key (length bucket, as ``keyless.py`` does), or
     prefer MinHash-LSH (``minhash_lsh_pairs``: band signatures are
@@ -575,17 +537,3 @@ def simhash32_neardup_pairs(
     sh = with_simhash32_md5(docs, id_col=id_col, text_col=text_col)
     return _banded_hamming_pairs(sh, "simhash32", 32, n_bands, max_hamming, id_col)
 
-
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 8,
-    n_bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dup candidates: band the 64-bit fingerprint into
-    ``n_bands`` 16-bit chunks (pigeonhole: hamming ≤ n_bands-1 ⇒ some
-    band equal; wider radii trade recall), bucket-join, then filter
-    by exact Hamming distance ≤ ``max_hamming``."""
-    sh = with_simhash(docs, id_col=id_col, text_col=text_col)
-    return _banded_hamming_pairs(sh, "simhash", 64, n_bands, max_hamming, id_col)

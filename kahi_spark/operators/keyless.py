@@ -86,6 +86,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kahi_spark.operators.dedup import H60_SPARK_SQL, MINHASH_P, _shingles_sql
+
 #: cascade thresholds (defaults; see resolve_keyless_events)
 HIGH, MID = 0.85, 0.65
 
@@ -94,9 +96,6 @@ MIN_SHINGLES = 8
 
 #: independent MinHash slots for the third conjunctive block key
 N_SLOTS = 4
-
-#: Mersenne prime for the universal-hash slot permutations
-_P = (1 << 31) - 1
 
 #: fixed permutation constants (a_i, b_i) — spelled identically in
 #: the DuckDB oracle (see queries_ext._slot_sql)
@@ -142,12 +141,6 @@ def _with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     # parser call each) — Column-builder spellings cost ~0.6 s of py4j
     # round-trips per query construction (measured). The DuckDB oracle
     # (queries_ext) is the independent formulation.
-    shingles_sql = (
-        "CASE WHEN size(_tk) >= 3 THEN array_distinct(transform("
-        "sequence(0, size(_tk) - 3), "
-        "i -> concat_ws(' ', element_at(_tk, i + 1), element_at(_tk, i + 2), "
-        "element_at(_tk, i + 3)))) ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
     bigrams_sql = (
         "CASE WHEN length(_lc) >= 2 THEN array_distinct(transform("
         "sequence(1, greatest(length(_lc) - 1, 1)), "
@@ -156,21 +149,19 @@ def _with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     staged = df.withColumns(
         {"_lc": F.lower(F.col(text_col)), "_tk": F.split(F.col(text_col), " ")}
     )
-    staged = staged.withColumn("_sh", F.expr(shingles_sql))
+    staged = staged.withColumn("_sh", F.expr(_shingles_sql("_tk", 3)))
     staged = staged.withColumn(
         "_fs",
         F.expr(f"CASE WHEN size(_sh) >= {MIN_SHINGLES} THEN _sh ELSE {bigrams_sql} END"),
     ).drop("_lc", "_tk", "_sh")
     staged = staged.withColumn(
-        "_ft",
-        F.expr(
-            "transform(_fs, t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT))"
-        ),
+        "_ft", F.expr(f"transform(_fs, t -> {H60_SPARK_SQL.format(x='t')})")
     ).drop("_fs")
     staged = staged.withColumns(
         {
             f"_m{i}": F.expr(
-                f"array_min(transform(_ft, h -> pmod({a} * pmod(h, {_P}) + {b}, {_P})))"
+                f"array_min(transform(_ft, h -> "
+                f"pmod({a} * pmod(h, {MINHASH_P}) + {b}, {MINHASH_P})))"
             )
             for i, (a, b) in enumerate(SLOT_PERMS[:N_SLOTS])
         }

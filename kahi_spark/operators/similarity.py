@@ -93,13 +93,18 @@ def _cosine(a: str, b: str) -> Column:
 
 def _top_k(pairs: DataFrame, k: int) -> DataFrame:
     """The one kNN tail: score each (probe, neighbor) candidate pair,
-    rank per probe by (score desc, neighbor_id asc), keep ``k``."""
+    rank per probe by (score desc, neighbor_id asc), keep ``k``.
+
+    Zero-norm vectors (NULL score) never rank. They are dropped AFTER
+    the window: NULLs sort last, so the non-NULL ranks are the same,
+    and a filter on ``score`` below the window would be pushed through
+    the projection with the cosine inlined — evaluated twice per
+    candidate pair."""
     scored = pairs.select("probe_id", "neighbor_id", _cosine("probe", "neighbor").alias("score"))
     w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
-        scored.filter(F.col("score").isNotNull())  # zero-norm vectors never rank
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter((F.col("rank") <= k) & F.col("score").isNotNull())
         .select("probe_id", "neighbor_id", "rank", "score")
     )
 
@@ -282,7 +287,12 @@ def lsh_cosine_pairs(
     b = bucketed_lsh(df, planes, id_col, vec_col, "x", checkpoint=True)
     a = b.alias("a")
     c = b.alias("c")
-    cand = (
+    # score each candidate row BEFORE the pair dedup: the dedup then
+    # shuffles (id_a, id_b, score) instead of both vectors, and the
+    # threshold filter sits on an aggregate output, which predicate
+    # pushdown cannot inline the cosine into (a filter on a projected
+    # score would evaluate the cosine twice per pair)
+    return (
         a.join(
             c,
             (F.col("a.table_idx") == F.col("c.table_idx"))
@@ -297,10 +307,9 @@ def lsh_cosine_pairs(
             F.col("c.x_v").alias("r_v"),
             F.col("c.x_nrm").alias("r_nrm"),
         )
+        .select("id_a", "id_b", _cosine("l", "r").alias("score"))
         .dropDuplicates(["id_a", "id_b"])
-    )
-    return cand.select("id_a", "id_b", _cosine("l", "r").alias("score")).filter(
-        F.col("score") >= threshold
+        .filter(F.col("score") >= threshold)
     )
 
 
@@ -439,19 +448,19 @@ def ivf_portable_centroids(
 ) -> list[list[int]]:
     """Engine-portable coarse quantizer for the gate path: seed
     centroids are the ``n_cells`` non-zero-norm corpus vectors with
-    the smallest ``(h60_md5(id), id)`` — a deterministic,
-    aggregation-free selection a SQL oracle reproduces exactly (no
+    the smallest ``(h60(id), id)`` (``dedup.H60_SPARK_SQL``) — a
+    deterministic, aggregation-free selection a SQL oracle reproduces exactly (no
     Lloyd float averaging, whose summation order differs across
     engines). Centroids are integer-quantized (``quantize_expr``,
     round-half-away-from-zero at 1e-3) IN the engine before
     collection, so both engines hold identical integer vectors."""
-    from kahi_spark.operators.dedup import h60_md5_expr
+    from kahi_spark.operators.dedup import H60_SPARK_SQL
 
     base = _with_norm(corpus, id_col, vec_col, "x")
     rows = (
         base.filter(F.col("x_nrm").isNotNull())
         .select(quantize_expr(F.col("x_v")).alias("q"), "x_id")
-        .orderBy(h60_md5_expr(F.col("x_id").cast("string")), F.col("x_id"))
+        .orderBy(F.expr(H60_SPARK_SQL.format(x="CAST(x_id AS STRING)")), F.col("x_id"))
         .limit(n_cells)
         .collect()
     )

@@ -794,10 +794,11 @@ def q_keyless_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: word-3gram shingles (DuckDB) — the shared template beside
 #: ``shingle_df`` (one copy repo-wide; round-5 review)
+from kahi_spark.operators.dedup import H60_DUCKDB_SQL  # noqa: E402
 from kahi_spark.operators.dedup import SHINGLES_SQL as _SHINGLES_SQL  # noqa: E402
 
-#: portable 60-bit md5 hash of every feature (mirrors h60_md5_expr)
-_H60_LIST_SQL = "list_transform({ft}, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT)"
+#: the 60-bit md5 hash of every feature (mirrors keyless ``_ft``)
+_H60_LIST_SQL = f"list_transform({{ft}}, t -> {H60_DUCKDB_SQL.format(x='t')})"
 
 
 def _slot_sql(hs: str, i: int) -> str:
@@ -805,10 +806,12 @@ def _slot_sql(hs: str, i: int) -> str:
     ``keyless._with_features``: min over the universal permutation
     (a·(h mod p) + b) mod p of the shared feature-hash list (one md5
     per feature, cheap per-slot ints)."""
-    from kahi_spark.operators.keyless import _P, SLOT_PERMS
+    from kahi_spark.operators.dedup import MINHASH_P
+    from kahi_spark.operators.keyless import SLOT_PERMS
 
     a, b = SLOT_PERMS[i]
-    return f"list_min(list_transform({hs}, h -> ({a} * (h % {_P}) + {b}) % {_P}))"
+    p = MINHASH_P
+    return f"list_min(list_transform({hs}, h -> ({a} * (h % {p}) + {b}) % {p}))"
 
 
 def _size_bucket_sql(size: str) -> str:
@@ -1218,8 +1221,8 @@ def q_corresponding_author(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All document pairs at SimHash Hamming ≤ 3 over the portable
     32-bit md5 fingerprint (4 bands × 8 bits; pigeonhole ⇒ recall
-    exactly 1 at radius 3). The 64-bit xxhash64 variant is the scale
-    path; this one is engine-portable so the gate is exact."""
+    exactly 1 at radius 3). ``simhash_neardup_wide`` is the wide-band
+    variant."""
     from kahi_spark.operators.dedup import simhash32_neardup_pairs
 
     docs = _read(spark, sf_dir, "documents")
@@ -1296,7 +1299,7 @@ WITH sh AS (
     FROM documents
 ),
 tok AS (SELECT doc_id, unnest(grams) AS tok FROM sh),
-hs AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM tok),
+hs AS (SELECT doc_id, {H60_DUCKDB_SQL.format(x='tok')} AS h FROM tok),
 sums AS (
     SELECT doc_id,
            {votes}
@@ -1442,7 +1445,7 @@ def q_knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # selection, same integer-quantized affinity (exact in both engines:
 # |int dot| < 2^53 so the DOUBLE division inputs are identical), same
 # (d DESC, cell ASC) tie rule, same rounded-float final scoring
-ORACLE_KNN_IVF_PRUNED = """
+ORACLE_KNN_IVF_PRUNED = f"""
 WITH e AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
            sqrt(list_inner_product(CAST(embedding AS DOUBLE[]),
@@ -1454,7 +1457,7 @@ WITH e AS (
 seeds AS (
     SELECT c, row_number() OVER (ORDER BY h, vid) AS cell FROM (
         SELECT qv AS c,
-               ('0x' || substr(md5(CAST(vec_id AS STRING)), 1, 15))::BIGINT AS h,
+               {H60_DUCKDB_SQL.format(x='CAST(vec_id AS STRING)')} AS h,
                vec_id AS vid
         FROM e WHERE nrm IS NOT NULL AND nrm <> 0
         ORDER BY h, vid LIMIT 8) t

@@ -9,8 +9,9 @@ now):
   cross-epoch near-dup detection without re-shingling the corpus.
   Epoch 1 is re-added under its committed epoch id first (idempotent
   replay, same discipline as the snapshot ledger).  Oracle =
-  closed-form SQL over the whole documents table: portable md5-based
-  MinHash signatures mirrored bit-for-bit in DuckDB, and the band
+  closed-form SQL over the whole documents table: the production
+  MinHash signature (md5-60 shingle hashes, ``LshDedupIndex``
+  defaults) mirrored bit-for-bit in DuckDB, and the band
   join omitted BY PIGEONHOLE — with threshold 0.8 > 1 - 16/64, any
   pair with ≥ ⌈0.8·64⌉ = 52 equal slots has ≤ 12 unequal slots,
   which can break at most 12 of the 16 bands, so ≥ 1 band is fully
@@ -43,6 +44,7 @@ from pyspark.sql import functions as F
 from kahi_spark.operators.merge import normalize_events
 from kahi_spark.sources.events import derive_transcript_events
 
+#: the ``LshDedupIndex`` defaults the incremental_dedup oracle mirrors
 N_HASHES, N_BANDS, THRESHOLD, SEED = 64, 16, 0.8, 42
 
 
@@ -77,10 +79,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e0, e1, e2 = _doc_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="kahi_dedup_idx_")
-    idx = LshDedupIndex(
-        spark, tmp, n_hashes=N_HASHES, n_bands=N_BANDS,
-        threshold=THRESHOLD, seed=SEED, portable=True,
-    )
+    idx = LshDedupIndex(spark, tmp)
     for eid, batch in ((0, e0), (1, e1), (1, e1)):  # epoch 1 replayed
         idx.add(idx._signatures(batch, "key", "text"), epoch_id=eid)
     dups = idx.find_neardups(idx._signatures(e2, "key", "text"))
@@ -91,13 +90,18 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_incremental_dedup() -> str:
-    from kahi_spark.operators.dedup import MINHASH_P, SHINGLES_SQL, minhash_coeffs
+    from kahi_spark.operators.dedup import (
+        H60_DUCKDB_SQL,
+        MINHASH_P,
+        SHINGLES_SQL,
+        minhash_coeffs,
+    )
 
     coeffs = minhash_coeffs(N_HASHES, SEED)
     # word-3gram distinct shingles (shared template beside shingle_df)
     shingles = SHINGLES_SQL.format(x="text")
-    # portable 60-bit md5 shingle hashes, mod p
-    hs = f"list_transform({shingles}, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % {MINHASH_P})"
+    # the 60-bit md5 shingle hashes, mod p
+    hs = f"list_transform({shingles}, t -> {H60_DUCKDB_SQL.format(x='t')} % {MINHASH_P})"
     slots = ",\n           ".join(
         f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MINHASH_P})) AS m{i}"
         for i, (a, b) in enumerate(coeffs)

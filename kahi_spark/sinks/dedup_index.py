@@ -67,14 +67,14 @@ class LshDedupIndex:
         threshold: float = 0.8,
         shingle_n: int = 3,
         seed: int = 42,
-        portable: bool = False,
         n_buckets: int = 32,
     ) -> None:
-        """``portable=True`` computes signatures with the md5-based
-        60-bit shingle hash so a DuckDB oracle can mirror them
-        bit-for-bit (gate path); default stays xxhash64 (scale
-        path). Note: with ``threshold > 1 - n_bands/n_hashes`` the
-        band join is RECALL-EXACT by pigeonhole — a pair with
+        """Signatures hash shingles with the engine's one 60-bit md5
+        hash (``operators.dedup.H60_SPARK_SQL``), which a DuckDB
+        oracle mirrors bit-for-bit — the gate checks the signatures
+        ingest computes. Note: with
+        ``threshold > 1 - n_bands/n_hashes`` the band join is
+        RECALL-EXACT by pigeonhole — a pair with
         ≥ threshold·n_hashes equal slots has fewer than n_bands
         unequal slots, so at least one band is fully equal — which
         is what lets the oracle skip mirroring band hashing
@@ -87,7 +87,6 @@ class LshDedupIndex:
         self.threshold = threshold
         self.shingle_n = shingle_n
         self.seed = seed
-        self.portable = portable
         self.n_buckets = n_buckets
 
     # -- signature construction -------------------------------------------
@@ -104,14 +103,15 @@ class LshDedupIndex:
             n_hashes=self.n_hashes,
             n_bands=self.n_bands,
             seed=self.seed,
-            portable=self.portable,
         ).withColumnRenamed(key_col, "key")
 
     def _bands(self, sigs: DataFrame) -> DataFrame:
         """One row per (key, band_idx, band_sig) from the ``bands``
-        column, with the storage bucket."""
+        column, with the storage bucket. ``posexplode_outer`` keeps
+        an uncheckpointed signature fold out of the inferred
+        generate filter (see ``operators.dedup.minhash_lsh_pairs``)."""
         return (
-            sigs.select("key", F.posexplode("bands").alias("band_idx", "band_sig"))
+            sigs.select("key", F.posexplode_outer("bands").alias("band_idx", "band_sig"))
             # the storage bucket is a FUNCTION of the join key, so a
             # band_sig equi-match implies a bucket match: pruning the
             # index read to the batch's bucket set loses no candidates

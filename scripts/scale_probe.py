@@ -88,7 +88,6 @@ def main():
     from kahi_spark.operators.dedup import (
         minhash_lsh_pairs,
         shingle_df,
-        simhash_neardup_pairs,
         verify_jaccard,
     )
     from kahi_spark.operators.similarity import knn_lsh, lsh_cosine_pairs
@@ -125,10 +124,6 @@ def main():
                 threshold=0.8,
             ).count()
         },
-    )
-    phase(
-        "simhash64_banded",
-        lambda: {"pairs": simhash_neardup_pairs(docs, id_col="doc_id", max_hamming=3).count()},
     )
     # clustered corpora need MORE planes: at 8 planes whole clusters
     # share buckets and the candidate join goes quadratic inside them

@@ -38,24 +38,6 @@ def test_knn_lsh_recall_vs_bruteforce(spark):
     assert approx == again
 
 
-def test_simhash_finds_planted_neardups(spark):
-    from kahi_spark.operators.dedup import simhash_neardup_pairs
-    from kahi_spark.operators.dedup import jaccard_pairs, shingle_df
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    # ground truth: word-3gram jaccard ≥ 0.8 (the planted near-dups)
-    truth = {
-        (r.doc_a, r.doc_b) for r in jaccard_pairs(shingle_df(docs), threshold=0.8).collect()
-    }
-    assert truth, "fixture should contain planted near-dups"
-    found = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_neardup_pairs(docs, max_hamming=12, n_bands=8).collect()
-    }
-    recall = len(truth & found) / len(truth)
-    assert recall >= 0.8, f"simhash recall {recall:.2f}"
-
-
 def test_simhash_wide_finds_planted_neardups(spark):
     """The 60-bit/15-bit-band portable SimHash (the scale-shaped
     gated representative) keeps recall on the planted near-dups at a

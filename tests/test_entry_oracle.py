@@ -1,10 +1,12 @@
 """Mirror of the driver's correctness gate: run every queries() entry
 on Spark AND its oracle_sql() on DuckDB at sf0.001, compare row
-count, sorted column names, and order-insensitive values."""
+count, sorted column names, and order-insensitive values. Each
+entry's optimized plan is also linted for lambda-bearing Filters."""
 
 from __future__ import annotations
 
 import math
+import re
 
 import duckdb
 import pytest
@@ -39,6 +41,22 @@ def rowset(cols, rows):
     return sorted(tuple(normalize_cell(r[i]) for i in order) for r in rows)
 
 
+def lambda_filters(sdf) -> list[str]:
+    """The optimized plan's ``Filter`` nodes whose condition holds a
+    higher-order-function lambda. For an inner generator over an
+    attribute, Spark's ``InferFiltersFromGenerate`` adds
+    ``size(col) > 0 AND isnotnull(col)``, and predicate pushdown then
+    inlines the column's defining expression into a scan-side Filter:
+    a MinHash fold (or any ``transform``/``aggregate`` tree) runs again
+    there, before the real projection."""
+    tree = sdf._jdf.queryExecution().optimizedPlan().toString()
+    return [
+        line.strip()[:200]
+        for line in tree.splitlines()
+        if re.match(r"^[\s:+\-|!]*Filter ", line) and "lambdafunction(" in line
+    ]
+
+
 QUERY_NAMES = sorted(entry_mod.queries().keys())
 
 
@@ -47,6 +65,8 @@ def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
     oracles = entry_mod.oracle_sql()
     sdf = q(spark, SF_DIR)
+    bad_filters = lambda_filters(sdf)
+    assert not bad_filters, f"{name}: lambda in a Filter: {bad_filters}"
     srows = sdf.collect()
     scols = sdf.columns
     if name not in oracles:

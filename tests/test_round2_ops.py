@@ -301,12 +301,11 @@ def test_colav_similarity_cascade_branches(spark):
 def test_simhash_banding_requires_divisor(spark):
     """A non-divisor n_bands would leave fingerprint bits outside
     every band and silently void the pigeonhole recall guarantee —
-    all three variants must refuse it loudly (round-5 review)."""
+    both variants must refuse it loudly (round-5 review)."""
     import pytest
 
     from kahi_spark.operators.dedup import (
         simhash32_neardup_pairs,
-        simhash_neardup_pairs,
         simhash_wide_neardup_pairs,
     )
 
@@ -314,7 +313,6 @@ def test_simhash_banding_requires_divisor(spark):
     for fn, bad in (
         (simhash_wide_neardup_pairs, 8),   # 60 % 8 != 0
         (simhash32_neardup_pairs, 5),      # 32 % 5 != 0
-        (simhash_neardup_pairs, 3),        # 64 % 3 != 0
     ):
         with pytest.raises(ValueError, match="divide"):
             fn(docs, n_bands=bad)
