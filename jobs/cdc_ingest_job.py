@@ -35,10 +35,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--mode", choices=["cow", "mor"], default="mor")
     p.add_argument("--n-buckets", type=int, default=256)
     p.add_argument(
-        "--reduce-strategy", choices=["window", "agg", "auto"], default="window",
+        "--reduce-strategy", choices=["window", "agg"], default="window",
         help="LWW reduction: 'agg' = map-side-combining max_by — "
-        "bounded per-task work under hot-key skew (skew_probe.py); "
-        "'auto' = per-batch sampled-histogram pick between the two",
+        "bounded per-task work under hot-key skew (skew_probe.py)",
     )
     p.add_argument("--compact-every", type=int, default=8)
     p.add_argument(

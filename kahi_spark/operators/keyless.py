@@ -209,13 +209,6 @@ def _state_slot_explode() -> Column:
     )
 
 
-#: below this many state rows the conjunctive blocking's fixed cost
-#: (probe-side ±1-bucket × N_SLOTS explosion, 4-column hash keys)
-#: exceeds what it saves — a single block key recovers the small-
-#: scale constant with recall exactly 1 (superset candidates)
-SMALL_STATE_ROWS = 10_000
-
-
 def resolve_keyless_events(
     events: DataFrame,
     state: DataFrame,
@@ -244,9 +237,6 @@ def resolve_keyless_events(
       conjunctive path (more pairs scored, never fewer), so small
       states trade a bounded scoring increase for the removed fixed
       cost.
-    * ``"auto"``: pick ``"single"`` below ``SMALL_STATE_ROWS``
-      candidate rows (one count job — trivial next to the resolve);
-      what the pipeline uses, where the oracle never sees the path.
     """
     if mid < MID and blocking != "single":
         # SIZE_BUCKETS geometry (ratio MID between consecutive
@@ -322,8 +312,6 @@ def resolve_keyless_events(
         c = feats.filter(F.col("_side") == "c").select(
             "_c_conv", "turn_idx", F.col("_role").alias("_c_role"), *_feat_cols
         )
-    if blocking == "auto":
-        blocking = "single" if c.count() < SMALL_STATE_ROWS else "conjunctive"
     if blocking == "single":
         cands = c.select(
             "_c_conv", "turn_idx", "_c_role", F.col("_ft").alias("_c_ft")

@@ -107,51 +107,6 @@ def lww_order(ts: Column | str = "ts", seq: Column | str = "seq") -> list[Column
     return [F.coalesce(t, F.to_timestamp(F.lit(_TS_FLOOR))), s]
 
 
-#: hot-key share above which the bounded-at-any-skew ``agg`` shape
-#: beats the plain window (measured band: window wins at ≤10% hot,
-#: agg wins at 50% hot — scripts/skew_probe.py / BASELINE.md skew
-#: table; 0.25 splits the measured regimes)
-AUTO_HOT_SHARE = 0.25
-#: sample fraction for the auto decision's key-histogram pre-pass —
-#: the scan is column-pruned to the key columns and the shuffle is
-#: 100× smaller than a full groupBy; a hot key owning ≥25% of a
-#: batch is unmissable in a 1% sample of any realistically-sized one
-AUTO_SAMPLE_FRACTION = 0.01
-
-
-def pick_reduce_strategy(
-    events: DataFrame,
-    key_cols: list[str] | None = None,
-    sample_fraction: float = AUTO_SAMPLE_FRACTION,
-    hot_share_threshold: float = AUTO_HOT_SHARE,
-) -> str:
-    """Cheap per-batch window-vs-agg decision (VERDICT r5 #4): sample
-    the key histogram and pick ``agg`` when one key holds more than
-    ``hot_share_threshold`` of the sampled rows, else ``window``.
-
-    The caller no longer needs to know its skew: at 10^10 events a
-    conversation holding 25%+ of a batch makes the window path's hot
-    task sort billions of rows, while the agg path bounds per-task
-    work by construction; on uniform batches the window path is
-    ~1.4× faster (skew_probe measurements). One tiny extra job per
-    batch: key-column-pruned scan of a ``sample_fraction`` sample,
-    map-side-combined groupBy, two-scalar collect."""
-    keys = key_cols or KEY_COLS
-    row = (
-        events.sample(fraction=sample_fraction, seed=7)
-        .select(*keys)
-        .groupBy(*keys)
-        .count()
-        .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
-        .collect()[0]
-    )
-    if not row.tot:
-        # sample came back empty — a batch this small can't have a
-        # wall-dominating hot task; window is the measured default
-        return "window"
-    return "agg" if row.mx / row.tot >= hot_share_threshold else "window"
-
-
 def latest_change_per_key(
     events: DataFrame,
     key_cols: list[str] | None = None,
@@ -185,10 +140,6 @@ def latest_change_per_key(
       distinct-key cardinality pays the aggregation-merge overhead).
       The production default for genuinely skewed logs; ties on
       (ts, seq) pick an arbitrary winner exactly like row_number.
-    * ``"auto"`` — decide per batch via ``pick_reduce_strategy``
-      (sampled key histogram: hot share ≥ 0.25 → agg, else window);
-      matches the best manual choice at uniform / 10% / 50% hot in
-      scripts/skew_probe.py.
     """
     keys = key_cols or KEY_COLS
     # reduce↔normalize fusion (round 7, guide §2.2 "shuffle fewer
@@ -216,8 +167,6 @@ def latest_change_per_key(
 
 def _reduce(events: DataFrame, keys: list[str], strategy: str) -> DataFrame:
     """The LWW reduction of ``latest_change_per_key``, as written."""
-    if strategy == "auto":
-        strategy = pick_reduce_strategy(events, keys)
     if strategy == "agg":
         vals = [c for c in events.columns if c not in keys]
         won = events.groupBy(*keys).agg(

@@ -79,14 +79,23 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e0, e1, e2 = _doc_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="kahi_dedup_idx_")
-    idx = LshDedupIndex(spark, tmp)
-    for eid, batch in ((0, e0), (1, e1), (1, e1)):  # epoch 1 replayed
-        idx.add(idx._signatures(batch, "key", "text"), epoch_id=eid)
-    dups = idx.find_neardups(idx._signatures(e2, "key", "text"))
-    # materialize before the tmp dir can be reclaimed; gate-scale rows
-    out = dups.select("key", "match_key", "est_jaccard").localCheckpoint(eager=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    try:
+        idx = LshDedupIndex(spark, tmp)
+        # sign each epoch once: add() writes sigs and bands from its
+        # frame, and find_neardups reads its probe frame several times
+        s0, s1, s2 = (
+            idx._signatures(b, "key", "text").localCheckpoint(eager=True) for b in (e0, e1, e2)
+        )
+        for eid, sigs in ((0, s0), (1, s1), (1, s1)):  # epoch 1 replayed
+            idx.add(sigs, epoch_id=eid)
+        # materialize before the tmp dir is removed; gate-scale rows
+        return (
+            idx.find_neardups(s2)
+            .select("key", "match_key", "est_jaccard")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _oracle_incremental_dedup() -> str:

@@ -18,13 +18,23 @@ Epoch-keyed subdirectories make writes idempotent: a re-delivered
 epoch overwrites its own files byte-identically (the same
 exactly-once story as the snapshot sink's ledger).
 
-Each batch is signed ONCE: ``_signatures`` yields (key, sig, bands),
-each column one SQL expression (``operators.dedup.minhash_bands``: no
-shingle explode, no shuffle), and that one checkpointed frame feeds
-the bucket set, a single candidate join over (index bands ∪ batch
-bands), the verification and ``add``'s sig and band writes. Measured
-per 4k-event epoch on 4 vCPUs, traced, with the codegen cache sized
-(``session.py``): ``dedup_batch`` 3.95 s → 2.85 s.
+Each epoch is one decision and one commit. ``decide`` signs the batch
+ONCE: ``_signatures`` yields (key, sig, bands), each column one SQL
+expression (``operators.dedup.minhash_bands``: no shingle explode, no
+shuffle), and that one checkpointed frame feeds the bucket set, a
+single candidate join over (index bands ∪ batch bands) and the
+verification, which keeps only the dropped KEYS (``find_neardups``
+adds its best-match window on top, for its other callers). The
+decision returns the kept events, materialized, plus a ``commit``
+closure: the surviving signatures, materialized once, then ``add``'s
+sig, band and dropped-ledger writes. ``dedup_batch`` runs both in
+turn; the pipeline runs the commit on its side worker beside the
+table MERGE and joins it before the epoch returns (the next epoch's
+probe needs these signatures). Per 4k-event indexed epoch on 4 vCPUs
+(``scripts/epoch_jobs.py``, one warm run each): the serial
+``dedup_batch`` ran 25 Spark jobs in 2.9 s, 8-10 of them in ``add``;
+the decision now runs 15 jobs in 2.0 s, and the commit's 7 (1.3 s)
+run beside the MERGE.
 
 Scale notes (10^10 keys): the ``bands/`` table is directory-bucketed
 by an explicit ``pmod(band_sig, n_buckets)`` column written with
@@ -37,8 +47,9 @@ actually touches (``PartitionFilters: bucket IN (...)`` — asserted in
 reshuffled and, for batches smaller than the bucket count, most of
 it is never even read. On a real cluster the same layout maps to an
 Iceberg table bucketed by ``band_sig`` (storage-partitioned join);
-the verification joins broadcast the candidate set so the signature
-tables are probed in place either way.
+the verification join broadcasts (batch sigs ⋈ candidates) so the
+signature tables stream through it in place either way (asserted on
+the final adaptive plan in ``tests/test_linking_and_plans.py``).
 
 Reference analogue: the in-memory similarity candidate lists that
 Kahi preloads and shrinks as records are consumed
@@ -49,6 +60,7 @@ distributed, persistent, incrementally-grown LSH index.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -270,11 +282,10 @@ class LshDedupIndex:
             self.n_hashes
         )
 
-    def find_neardups(self, new_sigs: DataFrame) -> DataFrame:
-        """Keys in ``new_sigs`` (a ``_signatures`` frame) judged
-        near-duplicates: of an already indexed key, or of a LOWER
-        in-batch key (the lower key is the canonical survivor —
-        deterministic). Returns (key, match_key, est_jaccard)."""
+    def _verified(self, new_sigs: DataFrame) -> DataFrame:
+        """Every (key, match_key, est_jaccard) pair of ``new_sigs`` (a
+        ``_signatures`` frame) at or above the threshold: against an
+        already indexed key, or a LOWER in-batch key."""
         new_bands = self._bands(new_sigs)
         # static bucket pruning: the batch touches at most n_buckets
         # storage buckets (usually far fewer for small batches); the
@@ -314,29 +325,36 @@ class LshDedupIndex:
             .select(F.col("n.key").alias("key"), F.col("o.key").alias("match_key"))
             .distinct()
         )
-        # candidates are a small fraction of the batch — broadcast them
-        # so the (large) signature tables are probed in place instead
-        # of reshuffled per epoch
+        # the (batch sigs ⋈ candidates) side broadcasts, so the
+        # signature tables stream through the join in place: left to
+        # AQE, the growing (index sigs ∪ batch sigs) union was the
+        # broadcast side — rebuilt every epoch, and reshuffled by a
+        # sort-merge join once it outgrows the broadcast threshold
         batch_sigs = new_sigs.select("key", "sig")
+        probes = batch_sigs.withColumnRenamed("sig", "_s1").join(F.broadcast(cand), on="key")
         all_sigs = self.existing_sigs().unionByName(batch_sigs)
-        verified = (
-            batch_sigs.withColumnRenamed("sig", "_s1")
-            .join(F.broadcast(cand), on="key")
+        return (
+            F.broadcast(probes)
             .join(
-                all_sigs.select(
-                    F.col("key").alias("match_key"), F.col("sig").alias("_s2")
-                ),
+                all_sigs.select(F.col("key").alias("match_key"), F.col("sig").alias("_s2")),
                 on="match_key",
             )
             .withColumn("est_jaccard", F.round(self._estimate("_s1", "_s2"), 6))
             .filter(F.col("est_jaccard") >= self.threshold)
         )
-        # one row per deduped key (best match, deterministic)
+
+    def find_neardups(self, new_sigs: DataFrame) -> DataFrame:
+        """Keys in ``new_sigs`` (a ``_signatures`` frame) judged
+        near-duplicates: of an already indexed key, or of a LOWER
+        in-batch key (the lower key is the canonical survivor —
+        deterministic). Returns (key, match_key, est_jaccard), one row
+        per key: its best match."""
         from pyspark.sql import Window
 
         w = Window.partitionBy("key").orderBy(F.desc("est_jaccard"), F.asc("match_key"))
         return (
-            verified.withColumn("_rn", F.row_number().over(w))
+            self._verified(new_sigs)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("key", "match_key", "est_jaccard")
         )
@@ -349,13 +367,30 @@ class LshDedupIndex:
         text_col: str = "text",
         n_events: int | None = None,
     ) -> tuple[DataFrame, int]:
-        """The per-epoch ingest hook: drop INSERT events whose text
-        near-dups an already-ingested (or lower in-batch) key, and
-        silence later events for keys that were deduped in past
-        epochs (the 'dropped' ledger — without it a later update
-        would resurrect the duplicate). Returns (kept_events,
-        n_deduped). Signatures of surviving inserts are appended
-        under this epoch (idempotent).
+        """The per-epoch ingest hook: ``decide``, then its commit.
+        Returns (kept_events, n_deduped); the index holds this epoch's
+        signatures and dropped keys when it returns."""
+        kept, n_deduped, commit = self.decide(batch, epoch_id, key_cols, text_col, n_events)
+        commit()
+        return kept, n_deduped
+
+    def decide(
+        self,
+        batch: DataFrame,
+        epoch_id: int,
+        key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
+        text_col: str = "text",
+        n_events: int | None = None,
+    ) -> tuple[DataFrame, int, Callable[[], None]]:
+        """The dedup decision: drop INSERT events whose text near-dups
+        an already-ingested (or lower in-batch) key, and silence later
+        events for keys that were deduped in past epochs (the
+        'dropped' ledger — without it a later update would resurrect
+        the duplicate). Returns (kept_events, n_deduped, commit);
+        ``commit()`` appends the surviving inserts' signatures and
+        this epoch's dropped keys under ``epoch_id`` (idempotent).
+        ``kept`` is materialized, so it stays valid while the commit
+        runs; the NEXT epoch's decision must not start before it ends.
 
         ``n_events``: the batch's row count if the caller already
         knows it (the pipeline's metrics pre-pass does) — saves one
@@ -373,39 +408,46 @@ class LshDedupIndex:
             .agg(F.max_by(F.col(text_col), F.struct(*lww_order())).alias(text_col))
         )
         # checkpoint (key, sig, bands) once: consumed by the bucket
-        # set, the candidate join (both sides), the verification join,
-        # the surviving anti-join and add()'s sig and band writes —
-        # without it the batch re-signs ~6× per epoch
+        # set, the candidate join (both sides), the verification join
+        # and the surviving anti-join — without it the batch re-signs
+        # ~6× per epoch
         new_sigs = self._signatures(picked, "k", text_col).localCheckpoint(eager=True)
+        # key-only: find_neardups' best-match window would add a
+        # shuffle that no decision reads
         dups = (
-            self.find_neardups(new_sigs)
+            self._verified(new_sigs)
             .select(F.col("key").alias("_k"))
             .distinct()
             .localCheckpoint(eager=True)  # consumed by 3 downstream jobs
         )
-        prior_dropped = self.dropped_keys().select(F.col("key").alias("_k"))
-        all_dropped = dups.unionByName(prior_dropped).distinct()
+        # no distinct(): a left-anti join ignores duplicate right rows
+        all_dropped = dups.unionByName(self.dropped_keys().select(F.col("key").alias("_k")))
         kept = (
             batch.withColumn("_k", key)
             .join(all_dropped, on="_k", how="left_anti")
             .drop("_k")
         )
         # materialize NOW: kept's plan reads the index files that
-        # add() is about to swap out (epoch re-delivery overwrites its
-        # own subdir); localCheckpoint cuts the lineage so callers can
-        # keep using `kept` after the swap. One batch — bounded.
+        # commit() is about to swap out (epoch re-delivery overwrites
+        # its own subdir); localCheckpoint cuts the lineage so callers
+        # can keep using `kept` during and after the swap. One batch —
+        # bounded.
         kept = kept.localCheckpoint(eager=True)
         # ONE action here: kept.count() over the just-checkpointed
         # partitions; the batch size comes from the caller when known
         n_deduped = (n_events if n_events is not None else batch.count()) - kept.count()
-        # anti-join against ALL dropped keys, not just this batch's:
-        # a previously-dropped key re-inserted with NOVEL text has all
-        # its events suppressed by the ledger above — indexing its new
-        # signature would advertise text that never entered the
-        # corpus, and future near-dups of it would be dropped against
-        # a ghost (round-5 review finding).
-        surviving = new_sigs.join(
-            all_dropped.withColumnRenamed("_k", "key"), on="key", how="left_anti"
-        )
-        self.add(surviving, epoch_id, dropped=dups.withColumnRenamed("_k", "key"))
-        return kept, n_deduped
+
+        def commit() -> None:
+            # anti-join against ALL dropped keys, not just this
+            # batch's: a previously-dropped key re-inserted with NOVEL
+            # text has all its events suppressed by the ledger above —
+            # indexing its new signature would advertise text that
+            # never entered the corpus, and future near-dups of it
+            # would be dropped against a ghost. Materialized once for
+            # add()'s sig AND band writes.
+            surviving = new_sigs.join(
+                all_dropped.withColumnRenamed("_k", "key"), on="key", how="left_anti"
+            ).localCheckpoint(eager=True)
+            self.add(surviving, epoch_id, dropped=dups.withColumnRenamed("_k", "key"))
+
+        return kept, n_deduped, commit

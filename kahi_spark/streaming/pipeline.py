@@ -25,17 +25,35 @@ Failure model (north_rule: resumable from checkpoint, exactly-once):
 * If the same *data* (not epoch) arrives twice in different files,
   the keyed LWW MERGE is idempotent (same ``(ts, seq)`` wins), so
   state converges anyway.
+* Work that no later step of the epoch reads runs on ONE side worker
+  (a single pipeline-owned thread, created per ``run_until_idle`` /
+  ``run_continuous`` and shut down where they quiesce the folds): the
+  stats pre-pass beside the keyless resolve, and the dedup index's
+  commit beside the table MERGE and the keyless index update. Every
+  side task is joined in a ``finally`` before ``_apply_batch``
+  returns, also on failure, so the streaming checkpoint never records
+  an epoch whose index append is unfinished, a retry never races a
+  half-done ``add()`` swap, and the next epoch's dedup probe sees this
+  epoch's signatures. The keyless index update stays serial AFTER the
+  table MERGE: its replay heal (below) relies on that order — were the
+  index committed first, a crash before the MERGE would let the
+  replayed resolve match the epoch's events against its own rows.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kahi_spark.operators.merge import normalize_events
 from kahi_spark.sinks.snapshot import SnapshotTable
 from kahi_spark.sources.events import stream_event_log
+
+#: name prefix of the pipeline's side-worker thread
+SIDE_THREAD_PREFIX = "kahi-epoch-side"
 
 
 def codegen_compiles(spark: SparkSession) -> int:
@@ -66,10 +84,7 @@ class CdcPipeline:
         the map-side-combining ``max_by`` reduction — bounds per-task
         work at any skew (north_rule skew handling: a conversation
         holding ~10% of 10^10 events would otherwise pin one reducer
-        task; scripts/skew_probe.py). ``"auto"`` samples each batch's
-        key histogram and picks window vs agg per batch
-        (pick_reduce_strategy) — for unattended pipelines that can't
-        know their skew upfront.
+        task; scripts/skew_probe.py).
 
         ``resolve_keyless``: events arriving with NULL conv_id are
         fuzzy-matched against the current table state (blocked
@@ -77,16 +92,9 @@ class CdcPipeline:
         similarity-driven ingest) and adopt the matched key, or mint
         a surrogate when nothing matches.
 
-        ``keyless_blocking``: the resolver's blocking mode.
-        ``"conjunctive"`` (default) is deterministic regardless of
-        batching. ``"auto"`` picks the cheaper single-key blocking
-        below ``SMALL_STATE_ROWS`` — a real win for small
-        deployments, but candidate recall is a SUPERSET there, so
-        the exact resolution of a borderline probe can depend on
-        WHICH epoch it arrived in relative to the flip point; opt in
-        only where any-batching state convergence is not required.
-        The auto decision is sticky once it lands on conjunctive
-        (state only grows), so the count probe stops re-running.
+        ``keyless_blocking``: the resolver's blocking mode,
+        ``"conjunctive"`` (default) or ``"single"``
+        (``resolve_keyless_events``).
 
         ``keyless_index``: a ``KeylessFeatureIndex`` makes the
         keyless resolver's state side INCREMENTAL — candidate block
@@ -124,8 +132,8 @@ class CdcPipeline:
         self.keyless_index = keyless_index
         self.keyless_blocking = keyless_blocking
         self.last_quiesce_wait_s: float = 0.0
-        self._keyless_blocking_resolved: str | None = None
-        if keyless_blocking not in ("conjunctive", "single", "auto"):
+        self._side: ThreadPoolExecutor | None = None
+        if keyless_blocking not in ("conjunctive", "single"):
             raise ValueError(f"keyless_blocking: {keyless_blocking!r}")
         # keyless_index + per-column policies (round-4 VERDICT #6; was
         # a blanket rejection): the index featurizes role+text, so a
@@ -147,8 +155,6 @@ class CdcPipeline:
         """Per-batch multi-source field composition → synthesized
         change events (one per key, op/ts/seq of the latest raw
         event so deletes and LWW ordering still work)."""
-        from pyspark.sql import functions as F
-
         from kahi_spark.operators.merge import latest_change_per_key, priority_merge
 
         fields = priority_merge(
@@ -175,8 +181,6 @@ class CdcPipeline:
         hence the explicit hint); the two follow-up joins touch only
         batch-sized frames. Keys absent from post-merge state were
         tombstoned — they feed the index as deletes."""
-        from pyspark.sql import functions as F
-
         from kahi_spark.operators.merge import latest_change_per_key
 
         keys = ["conv_id", "turn_idx"]
@@ -202,83 +206,99 @@ class CdcPipeline:
             "ts",
         )
 
+    def _resolve_keyless(self, normalized: DataFrame) -> DataFrame:
+        from kahi_spark.operators.keyless import resolve_keyless_events
+
+        state_features = (
+            self.keyless_index.features() if self.keyless_index is not None else None
+        )
+        state = (
+            self.table.read()
+            if state_features is None and self.table.exists()
+            else self.spark.createDataFrame([], "conv_id string, turn_idx int, role string, text string")
+        )
+        normalized = resolve_keyless_events(
+            normalized, state, state_features=state_features, blocking=self.keyless_blocking
+        )
+        if self.keyless_index is not None:
+            # the resolved batch must land in the index BEFORE its
+            # own merge action consumes the features() plan — the
+            # backing table's compaction GC would otherwise delete
+            # files out from under the still-lazy plan.
+            # localCheckpoint bounds it to one batch (same
+            # discipline as LshDedupIndex.decide).
+            normalized = normalized.localCheckpoint(eager=True)
+        return normalized
+
     def _apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
         compiles0 = codegen_compiles(self.spark)
-        # one pass for both batch metrics (count + watermark); column
-        # pruning makes this a ts-only scan, not a full read. (An
-        # observe()-based zero-extra-scan variant was tried: the
-        # Observation listener never fires for the 2nd+ micro-batch's
-        # foreachBatch write under COW, leaving obs.get blocked — a
-        # streaming/CollectMetrics interaction, so the explicit agg
-        # stays.)
-        from pyspark.sql import functions as F
-
-        stats = batch.agg(F.count(F.lit(1)).alias("n"), F.max("ts").alias("wm")).collect()[0]
-        n, wm = stats.n, stats.wm
-        if n == 0:
-            # still commit the epoch id: an unrecorded empty epoch
-            # would stall the ledger's epoch_floor compaction forever
-            # (the floor only folds a contiguous committed prefix).
-            # The keyless index keeps its OWN ledger (SnapshotTable-
-            # backed) — record there too or ITS floor stalls instead
-            self.table.record_empty_epoch(epoch_id)
-            if self.keyless_index is not None:
-                self.keyless_index.table.record_empty_epoch(epoch_id)
-            return
-        # one path for every epoch. With no resolve/dedup/converge
-        # step the tagged normalize output reaches the MERGE directly,
-        # whose reduce then fuses to normalize(reduce(raw)): the regex
-        # work runs after the key shuffle (full parallelism even for a
-        # one-task binlog scan) and only on the winners; those steps
-        # transform the frame, which drops the tag, so they keep
-        # normalize-first semantics.
-        normalized = normalize_events(batch)
-        if self.resolve_keyless:
-            from kahi_spark.operators.keyless import resolve_keyless_events
-
-            state_features = (
-                self.keyless_index.features() if self.keyless_index is not None else None
+        side: list[Future] = []
+        try:
+            # one pass for both batch metrics (count + watermark);
+            # column pruning makes this a ts-only scan, not a full
+            # read. (An observe()-based zero-extra-scan variant was
+            # tried: the Observation listener never fires for the 2nd+
+            # micro-batch's foreachBatch write under COW, leaving
+            # obs.get blocked — a streaming/CollectMetrics
+            # interaction, so the explicit agg stays.) It runs on the
+            # side worker, beside the keyless resolve.
+            side.append(
+                self._side.submit(
+                    lambda: batch.agg(
+                        F.count(F.lit(1)).alias("n"), F.max("ts").alias("wm")
+                    ).collect()[0]
+                )
             )
-            state = (
-                self.table.read()
-                if state_features is None and self.table.exists()
-                else self.spark.createDataFrame([], "conv_id string, turn_idx int, role string, text string")
-            )
-            blocking = self.keyless_blocking
-            if blocking == "auto":
-                if self._keyless_blocking_resolved:
-                    # sticky: state only grows, so once conjunctive
-                    # won it stays won — no more per-batch count jobs
-                    blocking = self._keyless_blocking_resolved
-                else:
-                    from kahi_spark.operators.keyless import SMALL_STATE_ROWS
+            # one path for every epoch. With no resolve/dedup/converge
+            # step the tagged normalize output reaches the MERGE
+            # directly, whose reduce then fuses to
+            # normalize(reduce(raw)): the regex work runs after the key
+            # shuffle (full parallelism even for a one-task binlog
+            # scan) and only on the winners; those steps transform the
+            # frame, which drops the tag, so they keep normalize-first
+            # semantics.
+            normalized = normalize_events(batch)
+            if self.resolve_keyless:
+                normalized = self._resolve_keyless(normalized)
+            n, wm = side[0].result()
+            if n == 0:
+                # still commit the epoch id: an unrecorded empty epoch
+                # would stall the ledger's epoch_floor compaction
+                # forever (the floor only folds a contiguous committed
+                # prefix). The keyless index keeps its OWN ledger
+                # (SnapshotTable-backed) — record there too or ITS
+                # floor stalls instead
+                self.table.record_empty_epoch(epoch_id)
+                if self.keyless_index is not None:
+                    self.keyless_index.table.record_empty_epoch(epoch_id)
+                applied, n_deduped = False, 0
+            else:
+                applied, n_deduped = self._merge_epoch(normalized, epoch_id, n, wm, side)
+        finally:
+            # join the side worker before returning, also on failure
+            # (module docstring); the epoch's own failure wins
+            failed = [e for e in (f.exception() for f in side) if e is not None]
+        if failed:
+            raise failed[0]
+        if n:
+            self._record(epoch_id, n, applied, n_deduped, t0, compiles0)
 
-                    src = state_features if state_features is not None else state
-                    blocking = (
-                        "single" if src.count() < SMALL_STATE_ROWS else "conjunctive"
-                    )
-                    if blocking == "conjunctive":
-                        self._keyless_blocking_resolved = "conjunctive"
-            normalized = resolve_keyless_events(
-                normalized, state, state_features=state_features, blocking=blocking
-            )
-            if self.keyless_index is not None:
-                # the resolved batch must land in the index BEFORE its
-                # own merge action consumes the features() plan — the
-                # backing table's compaction GC would otherwise delete
-                # files out from under the still-lazy plan.
-                # localCheckpoint bounds it to one batch (same
-                # discipline as LshDedupIndex.dedup_batch).
-                normalized = normalized.localCheckpoint(eager=True)
+    def _merge_epoch(
+        self, normalized: DataFrame, epoch_id: int, n: int, wm, side: list[Future]
+    ) -> tuple[bool, int]:
+        """Dedup, converge and MERGE one non-empty epoch, then feed
+        the keyless index; the dedup commit goes to the side worker.
+        Returns (applied, n_deduped)."""
         n_deduped = 0
         if self.dedup_index is not None:
             # pass the already-measured batch size: normalize/resolve
             # are row-preserving, so `n` is exact and the index skips
             # its own count job (one driver action per epoch saved)
-            normalized, n_deduped = self.dedup_index.dedup_batch(
+            normalized, n_deduped, commit = self.dedup_index.decide(
                 normalized, epoch_id, n_events=n
             )
+            side.append(self._side.submit(commit))
         if self.converge_sources:
             normalized = self._converge(normalized)
         applied = self.table.merge(
@@ -305,7 +325,7 @@ class CdcPipeline:
             self.keyless_index.update(
                 src, epoch_id, watermark=wm if wm is not None else (lambda: None)
             )
-        self._record(epoch_id, n, applied, n_deduped, t0, compiles0)
+        return applied, n_deduped
 
     def _record(
         self, epoch_id: int, n: int, applied: bool, n_deduped: int, t0: float, compiles0: int
@@ -339,21 +359,42 @@ class CdcPipeline:
         production deployment would use ``trigger(processingTime=…)``
         on the same query.
         """
+        return self._run(timeout_s, availableNow=True)
+
+    def run_continuous(
+        self, interval: str = "10 seconds", timeout_s: float | None = None
+    ) -> list[dict]:
+        """The production tail: same query, processing-time trigger —
+        stays up and applies new binlog files as they land. With
+        ``timeout_s`` the call returns (and stops the query) after
+        that long — otherwise it blocks until externally stopped.
+        Exactly-once and resume semantics are identical to
+        ``run_until_idle`` (same checkpoint, same epoch ledger)."""
+        return self._run(timeout_s, processingTime=interval)
+
+    def _run(self, timeout_s: float | None, **trigger) -> list[dict]:
         stream = stream_event_log(
             self.spark,
             self.event_dir,
             schema=self.schema,
             max_files_per_trigger=self.max_files_per_trigger,
         )
-        q = (
-            stream.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
+        self._side = ThreadPoolExecutor(max_workers=1, thread_name_prefix=SIDE_THREAD_PREFIX)
+        try:
+            q = (
+                stream.writeStream.foreachBatch(self._apply_batch)
+                .option("checkpointLocation", self.checkpoint_dir)
+                .trigger(**trigger)
+                .start()
+            )
+            if timeout_s is None:
+                q.awaitTermination()
+            else:
+                q.awaitTermination(timeout_s)
+                if q.isActive:
+                    q.stop()
+        finally:
+            self._side.shutdown(wait=True)
         # quiesce: join background compaction folds (and surface their
         # failures) before handing the tables back — the MAIN table's
         # and the keyless index's backing table's (its compact_async
@@ -365,36 +406,4 @@ class CdcPipeline:
         if self.keyless_index is not None:
             self.keyless_index.table.wait_for_compaction()
         self.last_quiesce_wait_s = round(time.time() - t_w, 3)
-        return self.metrics
-
-    def run_continuous(
-        self, interval: str = "10 seconds", timeout_s: float | None = None
-    ) -> list[dict]:
-        """The production tail: same query, processing-time trigger —
-        stays up and applies new binlog files as they land. With
-        ``timeout_s`` the call returns (and stops the query) after
-        that long — otherwise it blocks until externally stopped.
-        Exactly-once and resume semantics are identical to
-        ``run_until_idle`` (same checkpoint, same epoch ledger)."""
-        stream = stream_event_log(
-            self.spark,
-            self.event_dir,
-            schema=self.schema,
-            max_files_per_trigger=self.max_files_per_trigger,
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=interval)
-            .start()
-        )
-        if timeout_s is None:
-            q.awaitTermination()
-        else:
-            q.awaitTermination(timeout_s)
-            if q.isActive:
-                q.stop()
-        self.table.wait_for_compaction()
-        if self.keyless_index is not None:
-            self.keyless_index.table.wait_for_compaction()
         return self.metrics

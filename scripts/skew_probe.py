@@ -6,7 +6,7 @@ the window key ``(conv_id, turn_idx)`` is barely skewed. This probe
 generates a GENUINELY skewed 24M-event log (``hot_turns=1``: ~10% of
 all events on the single key ``(c0, 0)``) and measures the LWW
 reduction (``operators/merge.py::latest_change_per_key``) with
-``strategy`` window vs agg vs auto at local[32] — fresh-JVM
+``strategy`` window vs agg at local[32] — fresh-JVM
 subprocesses, interleaved min-of-N, the bench's noise protocol.
 Checksum parity between the strategies is asserted (the value-level
 parity also lives in tests/test_merge.py). A two-phase salted window
@@ -35,7 +35,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HOT_TURNS = 1
-KINDS = ("window", "agg", "auto")
+KINDS = ("window", "agg")
 
 
 def _measure_reduce(kind: str, event_path: str, cpus: int) -> dict:
@@ -123,7 +123,7 @@ def main() -> None:
     if os.environ.get("KAHI_SKEW_ONLY_MOR") != "1":
         walls: dict[str, list[float]] = {k: [] for k in KINDS}
         meta: dict[str, dict] = {}
-        # interleaved rounds (window, agg, auto, window, …): VM
+        # interleaved rounds (window, agg, window, …): VM
         # CPU-steal comes in windows — all configs must see the same
         for _rep in range(int(os.environ.get("KAHI_SKEW_REPS", "2"))):
             for kind in KINDS:
@@ -137,45 +137,14 @@ def main() -> None:
                 meta[kind] = rec
         # every strategy must be value-identical (same column order →
         # same checksum)
-        assert meta["window"]["rows"] == meta["agg"]["rows"] == meta["auto"]["rows"]
+        assert meta["window"]["rows"] == meta["agg"]["rows"]
         assert meta["window"]["chk"] == meta["agg"]["chk"], "agg strategy changed values"
-        assert meta["window"]["chk"] == meta["auto"]["chk"], "auto strategy changed values"
         for kind in KINDS:
             out[f"reduce_{kind}"] = {
                 "wall_s": min(walls[kind]), "all_wall_s": walls[kind]
             }
         out["agg_speedup"] = round(min(walls["window"]) / min(walls["agg"]), 3)
         out["parity"] = True
-    if os.environ.get("KAHI_SKEW_SKIP_DECISIONS") != "1":
-        # the auto decision itself, across the three measured skew
-        # regimes (VERDICT r5 #4): it must match the best manual
-        # choice from the timing table — window at uniform and at a
-        # 10%-hot key, agg at a 50%-hot key
-        import bench as _b
-
-        skew50_path = _b.cached_events(
-            n_events, 128, "skew", hot_turns=HOT_TURNS, hot_fraction=0.5
-        )
-        spark = _b.fresh_session(f"local[{cpus}]", cpus)
-        from kahi_spark.operators.merge import pick_reduce_strategy
-
-        decisions = {}
-        for label, path in (
-            ("uniform", uniform_path),
-            ("hot10", skew_path),
-            ("hot50", skew50_path),
-        ):
-            t0 = time.time()
-            decisions[label] = {
-                "picked": pick_reduce_strategy(spark.read.parquet(path)),
-                "decision_s": round(time.time() - t0, 3),
-            }
-        spark.stop()
-        out["auto_decisions"] = decisions
-        expected = {"uniform": "window", "hot10": "window", "hot50": "agg"}
-        out["auto_matches_best_manual"] = all(
-            decisions[k]["picked"] == v for k, v in expected.items()
-        )
     if os.environ.get("KAHI_SKEW_SKIP_MOR") != "1":
         read_n = min(n_events, 8_000_000)
         out["mor_read_skewed"] = _measure_mor_read(skew_path, cpus, read_n, "skew")

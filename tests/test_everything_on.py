@@ -125,7 +125,7 @@ def _build(spark, root: str, binlog: str, mode: str) -> CdcPipeline:
         table,
         os.path.join(root, "ck"),
         max_files_per_trigger=1,
-        reduce_strategy="auto",  # per-batch sampled window-vs-agg pick
+        reduce_strategy="agg",  # map-side-combining max_by reduce
         resolve_keyless=True,
         keyless_index=kidx,
         dedup_index=didx,

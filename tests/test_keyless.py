@@ -60,15 +60,13 @@ def test_resolver_matches_blocks_and_mints(spark):
     assert out[11] == "u11"  # blocked out despite identical text
     assert out[12] == "u12"
     assert out[13] == "c9"
-    # the small-state single-key blocking (pipeline "auto" path below
-    # SMALL_STATE_ROWS) scores a candidate SUPERSET — identical
+    # the single-key blocking scores a candidate SUPERSET — identical
     # resolutions on this fixture, no slot/bucket fan-out
-    for mode in ("single", "auto"):
-        out2 = {
-            r.seq: r.conv_id
-            for r in resolve_keyless_events(events, state, blocking=mode).collect()
-        }
-        assert out2 == out, mode
+    out2 = {
+        r.seq: r.conv_id
+        for r in resolve_keyless_events(events, state, blocking="single").collect()
+    }
+    assert out2 == out
 
 
 def test_pipeline_resolves_keyless_end_to_end(spark, tmp_path):
@@ -124,65 +122,6 @@ def test_pipeline_resolves_keyless_end_to_end(spark, tmp_path):
     # the unmatched keyless insert minted u3
     assert rows[("u3", 7)] == "totally new content words"
     assert len(rows) == 3
-
-
-def test_pipeline_auto_blocking_flips_once_and_sticks(spark, tmp_path, monkeypatch):
-    """keyless_blocking='auto' (explicit opt-in): below the state
-    threshold the resolver runs single-key blocking; once the state
-    crosses it the pipeline flips to conjunctive and the decision
-    STICKS (no further count jobs, no flip-flop)."""
-    import kahi_spark.operators.keyless as K
-    from kahi_spark.sinks.snapshot import SnapshotTable
-    from kahi_spark.streaming.pipeline import CdcPipeline
-
-    monkeypatch.setattr(K, "SMALL_STATE_ROWS", 2)
-    event_dir = str(tmp_path / "ev")
-    os.makedirs(event_dir)
-
-    def batch(name, seqs, convs, texts):
-        pd.DataFrame(
-            {
-                "seq": seqs,
-                "op": ["insert"] * len(seqs),
-                "conv_id": pd.array(convs, dtype="string"),
-                "turn_idx": pd.array([0] * len(seqs), dtype="int32"),
-                "role": ["user"] * len(seqs),
-                "text": texts,
-                "tool": pd.array([None] * len(seqs), dtype="string"),
-                "ts": pd.to_datetime(
-                    [1_704_067_200 + s for s in seqs], unit="s"
-                ).astype("datetime64[us]"),
-                "source": ["lens"] * len(seqs),
-            }
-        ).to_parquet(f"{event_dir}/{name}.parquet", index=False)
-
-    batch("b0", [0], ["c1"], ["alpha beta gamma delta words here"])
-    table = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=2)
-    pipe = CdcPipeline(
-        spark, event_dir, table, str(tmp_path / "ck"),
-        schema=NULLABLE_EVENTS, resolve_keyless=True, keyless_blocking="auto",
-    )
-    pipe.run_until_idle()
-    assert pipe._keyless_blocking_resolved is None  # 1 state row < 2
-
-    batch("b1", [1, 2], ["c2", "c3"], ["other words entirely", "third conversation text"])
-    CdcPipeline(
-        spark, event_dir, table, str(tmp_path / "ck"),
-        schema=NULLABLE_EVENTS, resolve_keyless=True, keyless_blocking="auto",
-    ).run_until_idle()
-    # fresh pipeline object: flip state is per-run; drive one more
-    # batch through a pipeline that sees the >=2-row state
-    batch("b2", [3], [None], ["alpha beta gamma delta words heres"])
-    p3 = CdcPipeline(
-        spark, event_dir, table, str(tmp_path / "ck"),
-        schema=NULLABLE_EVENTS, resolve_keyless=True, keyless_blocking="auto",
-    )
-    p3.run_until_idle()
-    assert p3._keyless_blocking_resolved == "conjunctive"
-    # the keyless event still resolved to its near-dup conversation:
-    # c1/0's text is now the updated variant (LWW, newer ts)
-    got = {(r.conv_id, r.turn_idx): r.text for r in table.read().collect()}
-    assert got[("c1", 0)] == "alpha beta gamma delta words heres"
 
 
 def test_degenerate_text_mints_surrogates(spark):

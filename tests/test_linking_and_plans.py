@@ -167,3 +167,53 @@ def test_dedup_index_probe_broadcasts_the_batch_side(spark, tmp_path):
     plan = _plan(idx.find_neardups(idx._signatures(batch, "k", "text")))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def _ancestors(plan: str, marker: str) -> list[list[str]]:
+    """Node names above every line of ``plan`` (a physical plan's tree
+    string) that contains ``marker``, nearest first."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :|+-")) for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if marker not in ln:
+            continue
+        names, d = [], depth[i]
+        for j in range(i - 1, -1, -1):
+            if depth[j] < d:
+                names.append(lines[j].lstrip(" :|+-*()0123456789").split(" ")[0])
+                d = depth[j]
+        out.append(names)
+    return out
+
+
+def test_dedup_verification_probes_the_signature_index_in_place(spark, tmp_path):
+    """The verification join broadcasts (batch sigs ⋈ candidates) and
+    streams the signature index through it: in the FINAL adaptive plan
+    no exchange of any kind sits between the ``sigs`` scan and that
+    join. (Left to
+    AQE, the small test index became the broadcast side — the whole
+    index rebuilt as a hash table every epoch, and a sort-merge
+    shuffle of it once it outgrows the broadcast threshold.)"""
+    from kahi_spark.sinks.dedup_index import LshDedupIndex
+
+    idx = LshDedupIndex(spark, str(tmp_path / "idx"))
+    docs = spark.createDataFrame(
+        [(str(i), f"alpha beta gamma delta epsilon word{i} zeta eta") for i in range(30)],
+        "k string, text string",
+    )
+    idx.add(idx._signatures(docs, "k", "text"), epoch_id=0)
+    batch = spark.createDataFrame(
+        [("b1", "alpha beta gamma delta epsilon word1 zeta eta")], "k string, text string"
+    )
+    dups = idx.find_neardups(idx._signatures(batch, "k", "text"))
+    assert [r.match_key for r in dups.collect()] == ["1"]
+    plan = dups._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # the sigs scan (its location is elided in the tree string)
+    above = _ancestors(final, "ReadSchema: struct<key:string,sig:array<bigint>>")
+    assert above, final
+    for names in above:
+        # up to the verification join: no exchange, no query stage
+        probe = names[: names.index("BroadcastHashJoin")]
+        assert not [n for n in probe if "Exchange" in n or "Stage" in n], (names, final)

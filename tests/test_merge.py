@@ -63,7 +63,7 @@ def test_lww_tie_broken_by_seq(spark):
 def test_null_ts_orders_the_same_at_every_lww_site(spark, tmp_path):
     """One LWW order everywhere (``lww_order``): a NULL ts reads as
     the 1970 floor, so it beats a pre-1970 event at every site — the
-    window, agg and auto reduces, the COW MERGE, and the MOR read
+    window and agg reduces, the COW MERGE, and the MOR read
     resolve and bucketed fold across deltas. (The window reduce used
     to sort a bare ``ts desc``, NULLs last, and picked the pre-1970
     row while agg and the MOR read picked the NULL one.)"""
@@ -72,7 +72,7 @@ def test_null_ts_orders_the_same_at_every_lww_site(spark, tmp_path):
     pre = (1, "insert", "c1", 0, "user", "pre1970", None, dt.datetime(1969, 12, 31, 12), "lens")
     nul = (2, "update", "c1", 0, "user", "nullts", None, None, "lens")
     both = spark.createDataFrame([pre, nul], EVENT_COLS)
-    for strategy in ("window", "agg", "auto"):
+    for strategy in ("window", "agg"):
         got = [r.text for r in latest_change_per_key(both, strategy=strategy).collect()]
         assert got == ["nullts"], strategy
     for mode in ("cow", "mor"):
@@ -225,35 +225,6 @@ def test_agg_strategy_equals_window_across_random_logs(spark):
         assert w == a, (seed, n, hot, ht)
 
 
-def test_auto_strategy_picks_and_matches(spark):
-    """strategy='auto' (VERDICT r5 #4): the sampled key-histogram
-    decision picks agg for a 50%-hot log and window for uniform, and
-    the auto path's output is value-identical to both manual paths."""
-    from kahi_spark.gen import make_events
-    from kahi_spark.operators.merge import (
-        pick_reduce_strategy,
-        reduce_events_to_state,
-    )
-
-    hot = spark.createDataFrame(
-        make_events(4000, n_convs=25, seed=5, hot_fraction=0.5, hot_turns=1)
-    )
-    uni = spark.createDataFrame(
-        make_events(4000, n_convs=25, seed=6, hot_fraction=0.0)
-    )
-    # sample_fraction=1.0: the decision must be exact on these tiny
-    # fixtures (the 1% default is for multi-million-row batches)
-    assert pick_reduce_strategy(hot, sample_fraction=1.0) == "agg"
-    assert pick_reduce_strategy(uni, sample_fraction=1.0) == "window"
-    # empty batch → the measured default
-    assert pick_reduce_strategy(hot.limit(0), sample_fraction=1.0) == "window"
-
-    for df in (hot, uni):
-        w = sorted(map(tuple, reduce_events_to_state(df, strategy="window").collect()))
-        au = sorted(map(tuple, reduce_events_to_state(df, strategy="auto").collect()))
-        assert w == au
-
-
 # ---------------------------------------------------------------------------
 # round 7: reduce↔normalize fusion
 # ---------------------------------------------------------------------------
@@ -286,7 +257,6 @@ def test_reduce_normalize_fusion_parity(spark):
     for kwargs in (
         {},
         {"strategy": "agg"},
-        {"strategy": "auto"},
         {"key_cols": ["conv_id", "turn_idx", "source"]},
     ):
         fused = latest_change_per_key(normalize_events(raw), **kwargs)
@@ -319,7 +289,7 @@ def test_reduce_normalize_fusion_plan_and_guard(spark):
     # the composition SnapshotTable.merge builds for a keyed pipeline
     # epoch: explicit table key, every reduce strategy — the pipeline
     # still normalizes only the winners
-    for strategy in ("window", "agg", "auto"):
+    for strategy in ("window", "agg"):
         _regex_above_key_exchange(
             latest_change_per_key(
                 normalize_events(raw),
